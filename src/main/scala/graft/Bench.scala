@@ -1,24 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(Some(s"local[$cpus]"), Some(cpus.toInt))
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Whole-stage-codegen class cache (static conf, default 100 entries):
-      // a 245-query session — and even ONE store-fold drive, whose chain
-      // compiles 100+ generated classes — evicts the default cache before
-      // any reuse, so every fold re-runs Janino on identical source
-      // (measured r16: q_scd2_stream 13.0 -> 8.2 s, q_ann_stream 18.8 ->
-      // 11.0 s steady once sources survive). Scale-independent JVM tuning:
-      // entries are keyed by generated source, not data or core count.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session so the first measured query doesn't absorb one-time

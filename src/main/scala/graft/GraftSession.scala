@@ -27,6 +27,10 @@ object GraftSession {
       // Scale-independent JVM tuning (keyed by source, not data width);
       // measured r16: q_scd2_stream 13.0 -> 8.2 s steady.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // file:// through graft.util.LocalFs: the same checksummed local
+      // FileSystem, but permissions are set in-process instead of by a
+      // forked `chmod` per created file and directory when libhadoop is absent
+      .config("spark.hadoop.fs.file.impl", classOf[graft.util.LocalFs].getName)
     val withMaster = master.fold(b)(b.master)
     shufflePartitions.fold(withMaster)(p =>
       withMaster.config("spark.sql.shuffle.partitions", p.toString))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import java.util.concurrent.atomic.AtomicLong
 
@@ -47,13 +48,14 @@ class DimCache(path: String, dimKeys: Seq[String],
   /** accessOrder=true: iteration order is least-recently-used first. */
   private val cached = new java.util.LinkedHashMap[Int, (Long, DataFrame)](16, 0.75f, true)
 
-  /** Dim schema, inferred ONCE per cache instance: every bucket file of a
+  /** Dim schema for stores whose meta carries none: every bucket file of a
     * store carries the same schema (merge canonicalizes types before the
     * write), so per-bucket `spark.read.parquet` inference would pay one
     * footer-reading Spark job PER BUCKET PER GENERATION — measured ~40 ms
-    * each, the bulk of a cold lookup's driver overhead. Inferred from the
-    * first bucket touched; later reads pass it explicitly. */
-  @volatile private var dimSchema: org.apache.spark.sql.types.StructType = _
+    * each, the bulk of a cold lookup's driver overhead. Inferred ONCE from
+    * the first bucket touched; later reads pass it explicitly. Stores with a
+    * persisted `StoreMeta.schemaDdl` never infer. */
+  @volatile private var inferredSchema: StructType = _
 
   // observability for specs and ops: how often the cache actually worked
   val hits = new AtomicLong
@@ -105,7 +107,8 @@ class DimCache(path: String, dimKeys: Seq[String],
       .select(KeyedStore.bucketOfExprs(bucketExprs, n).as("__b")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
       .filter(manifest.contains) // a bucket with no dim state joins empty
-    val dims = needed.map(b => bucketFrame(spark, root, manifest, gen, b))
+    val persisted = meta.schemaDdl.map(StructType.fromDDL)
+    val dims = needed.map(b => bucketFrame(spark, root, manifest, gen, b, persisted))
     if (dims.isEmpty) {
       // no overlap: inner join yields nothing; left join keeps facts with
       // nulls — express both through an empty dim of the right schema
@@ -126,7 +129,8 @@ class DimCache(path: String, dimKeys: Seq[String],
   /** Serve one bucket: cached frame if its generation is current, else
     * (re-)pin the bucket's scan. LRU-evict beyond the cap. */
   private def bucketFrame(spark: SparkSession, root: Path,
-      manifest: Map[Int, String], gen: Long, b: Int): DataFrame = {
+      manifest: Map[Int, String], gen: Long, b: Int,
+      persisted: Option[StructType]): DataFrame = {
     Option(cached.get(b)) match {
       case Some((cachedGen, df)) if cachedGen == gen =>
         hits.incrementAndGet(); df
@@ -134,8 +138,11 @@ class DimCache(path: String, dimKeys: Seq[String],
         if (stale.isDefined) { refreshes.incrementAndGet(); stale.get._2.unpersist() }
         else misses.incrementAndGet()
         val dir = new Path(root, manifest(b)).toString
-        if (dimSchema == null) dimSchema = spark.read.parquet(dir).schema
-        val df = spark.read.schema(dimSchema).parquet(dir)
+        val schema = persisted.getOrElse {
+          if (inferredSchema == null) inferredSchema = spark.read.parquet(dir).schema
+          inferredSchema
+        }
+        val df = spark.read.schema(schema).parquet(dir)
           .persist(StorageLevel.MEMORY_AND_DISK)
         cached.put(b, (gen, df))
         evictOverCap()

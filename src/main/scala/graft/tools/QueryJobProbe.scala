@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -33,16 +32,11 @@ object QueryJobProbe {
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    // the production recipe (see GraftSession) so probe walls are the walls
+    // the bench pays; SPARK_GRAFT_AQE=0 overrides its AQE setting
+    val b0 = graft.GraftSession.builder(Some(s"local[$cpus]"), Some(cpus.toInt))
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", aqe.toString)
-      // match the production sessions (see Bench) so probe walls are the
-      // walls the bench pays
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
     val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -8,6 +8,30 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sfDir(sf: String = "sf0.001"): String = s"/root/testdata/$sf"
 
+  /** Call sites of the Spark jobs started while running `body`, one entry
+    * per job (its stage names joined by "+"). Job-start events are posted at
+    * submission, inside the blocking actions `body` runs; the async listener
+    * bus is then drained DETERMINISTICALLY — a fixed sleep is flaky on a
+    * loaded box (late-posted events undercount or leak into the next
+    * measurement). waitUntilEmpty is private[spark] in Scala but public
+    * bytecode, so reflect. */
+  def jobSitesDuring(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(j.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString("+"))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(30000L))
+    } finally spark.sparkContext.removeSparkListener(l)
+    sites.toArray(Array.empty[String]).toSeq
+  }
+
   /** Poll a memory-sink streaming query until `table` holds at least
     * `atLeast` rows or the deadline passes: watermark-driven emission lands
     * in the batch AFTER the watermark advances, so a single
@@ -27,17 +51,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  /** Built through the engine's own recipe, so the plans and the local
+    * FileSystem the suite exercises are the ones the engine ships with. */
+  lazy val session: SparkSession = GraftSession.builder(Some("local[4]"), Some(4))
     .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // match the production sessions (Bench/Verify/GraftSession): plans the
-    // suite asserts on must be the plans the engine ships with
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.codegen.cache.maxEntries", "10000")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     .getOrCreate()
 }

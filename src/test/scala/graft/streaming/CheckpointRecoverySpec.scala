@@ -7,7 +7,8 @@ import graft.SparkSpec
 import graft.model.Envelopes
 
 /** T6 — checkpointed restart (`base/BaseAPP.start:40-57` exactly-once
-  * posture): a stopped query restarted on the same checkpoint must process
+  * posture): a stopped query restarted on the same checkpoint, attached
+  * through `Streams.withCheckpoint`, must process
   * each input exactly once — the union of both runs' outputs equals the batch
   * result with no duplicates. */
 class CheckpointRecoverySpec extends SparkSpec {
@@ -25,11 +26,10 @@ class CheckpointRecoverySpec extends SparkSpec {
       ev.filter(col("event_id") % 2 === 1))
 
     def runOnce(): Unit = {
-      val q = s.readStream.schema(schema).parquet(in)
+      val w = s.readStream.schema(schema).parquet(in)
         .filter(col("event_type") =!= "error")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
+        .writeStream.format("parquet").option("path", out)
+      val q = Streams.withCheckpoint(w, ck).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
 

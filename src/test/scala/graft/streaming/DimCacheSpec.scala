@@ -156,4 +156,18 @@ class DimCacheSpec extends SparkSpec {
         plan.take(1200))
     cache.invalidateAll()
   }
+
+  test("the first lookup reads the store's persisted schema, no footer inference") {
+    val root = freshRoot("schema")
+    KeyedStore.merge(dimBatch((1L to 50L).map(i => (i, s"n$i")), 1L),
+      root, keys = Seq("k"), seqCols = Seq("__v"), numBuckets = 4)
+    val cache = new DimCache(root, Seq("k"))
+    val facts = (1L to 50L).map(i => (i, i)).toDF("fact_id", "fk")
+    val inferred = jobSitesDuring { cache.lookupJoin(facts, Seq(col("fk"))); () }
+      .filter(_.contains("parquet at DimCache.scala"))
+    assert(inferred.isEmpty, s"footer-inference jobs: ${inferred.mkString(", ")}")
+    assert(cache.lookupJoin(facts, Seq(col("fk"))).select("fact_id", "name")
+      .collect().length == 50)
+    cache.invalidateAll()
+  }
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -21,32 +19,11 @@ import graft.SparkSpec
   * reintroduces per-fold meta collects or eager store-scan pins trips it. */
 class FoldJobsSpec extends SparkSpec {
 
-  /** Jobs started while running `body` (listener bus drained by sleep —
-    * job-start events are posted at submission, which happens inside the
-    * blocking actions `body` runs). */
+  /** Jobs started while running `body`, their sites logged. */
   private def jobsDuring(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        n.incrementAndGet()
-        sites.add(j.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString("+"))
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // drain the async listener bus DETERMINISTICALLY — a fixed sleep is
-      // flaky on a loaded box (late-posted job-start events undercount or
-      // leak into the next measurement). waitUntilEmpty is private[spark]
-      // in Scala but public bytecode, so reflect.
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(30000L))
-    } finally spark.sparkContext.removeSparkListener(l)
-    info("job sites: " + sites.toArray.mkString(" | "))
-    n.get()
+    val sites = jobSitesDuring(body)
+    info("job sites: " + sites.mkString(" | "))
+    sites.size
   }
 
   test("note round-trip: merge commits it, readNote is job-free, compact preserves it") {

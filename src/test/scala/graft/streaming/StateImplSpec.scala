@@ -1,6 +1,8 @@
 package graft.streaming
 
+import scala.concurrent.duration._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import graft.SparkSpec
 import graft.streaming.IsNewFix.LogEvent
 
@@ -65,6 +67,44 @@ class StateImplSpec extends SparkSpec {
         val got = s.table("isnew_auto_out").collect()
           .map(r => r.getAs[Long]("event_id") -> r.getAs[String]("is_new_fixed")).toMap
         assert(got == Map(1L -> "1", 2L -> "0", 3L -> "0", 4L -> "1"))
+      } finally q.stop()
+    }
+  }
+
+  test("auto-dispatched TTL join picks the twin by provider and joins end to end") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    def nodes(ds: org.apache.spark.sql.Dataset[_]): Seq[String] =
+      ds.queryExecution.logical.collect { case p => p.nodeName }
+    def autoJoin() = {
+      val (l, r) = (MemoryStream[(Long, String)], MemoryStream[(Long, String)])
+      (l, r, TtlState.ttlJoinAuto(l.toDS(), r.toDS(), ttl = 1.hour))
+    }
+    withConf(provider -> None, impl -> None) {
+      val ops = nodes(autoJoin()._3)
+      assert(ops.contains("FlatMapGroupsWithState") && !ops.contains("TransformWithState"), ops)
+    }
+    withConf(provider -> Some(StateImpl.RocksDbProvider), impl -> None) {
+      val (left, right, joined) = autoJoin()
+      assert(nodes(joined).contains("TransformWithState"), nodes(joined))
+      // timer-driven queries re-trigger continuously (processAllAvailable
+      // never settles), so poll the sink with a deadline as TtlStateTwsSpec does
+      val q = joined.toDF("k", "l", "r").writeStream
+        .format("memory").queryName("ttl_auto_out").outputMode("append")
+        .trigger(Trigger.ProcessingTime("200 milliseconds"))
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("ttl_auto_ckpt").toString)
+        .start()
+      def rows = s.table("ttl_auto_out").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+      val want = Set((1L, "a", "x"), (2L, "b", "y"))
+      try {
+        left.addData((1L, "a"), (2L, "b"))
+        right.addData((1L, "x"), (2L, "y"), (3L, "z"))
+        val deadline = System.currentTimeMillis + 30000
+        while (System.currentTimeMillis < deadline && rows != want) Thread.sleep(200)
+        assert(rows == want)
       } finally q.stop()
     }
   }
