@@ -94,14 +94,10 @@ class DimCache(path: String, dimKeys: Seq[String],
     // store has bucketCols ⊂ keys or the fact column's type drifted from the
     // dim's (hash() is type-sensitive) — missing matches with no error.
     // Bounded by n — metadata, not data.
-    val bcols = meta.cols.getOrElse(dimKeys)
-    val bucketExprs = bcols.zipWithIndex.map { case (c, i) =>
+    val bucketExprs = meta.cols.zip(meta.types).map { case (c, t) =>
       val di = dimKeys.indexOf(c)
       require(di >= 0, s"store bucket column $c is not one of dimKeys $dimKeys")
-      meta.types match {
-        case Some(ts) => factKeys(di).cast(ts(i))
-        case None => factKeys(di)
-      }
+      factKeys(di).cast(t)
     }
     val needed = facts
       .select(KeyedStore.bucketOfExprs(bucketExprs, n).as("__b")).distinct()
@@ -120,7 +116,7 @@ class DimCache(path: String, dimKeys: Seq[String],
 
   private def joined(facts: DataFrame, factKeys: Seq[Column],
       dim: DataFrame, joinType: String): DataFrame = {
-    val live = dim.filter(col(opCol) =!= deleteOp).drop(opCol)
+    val live = dim.filter(KeyedStore.isLive(col(opCol), deleteOp)).drop(opCol)
     val cond = factKeys.zip(dimKeys).map { case (fk, dk) => fk === live(dk) }
       .reduce(_ && _)
     facts.join(live.hint("SHUFFLE_MERGE"), cond, joinType)

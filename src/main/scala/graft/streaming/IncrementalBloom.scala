@@ -39,18 +39,11 @@ object IncrementalBloom {
           .toDF("kind", "pos", "m", "k", "ver")
       }
 
-  /** (m, k) from the manifest note (zero Spark jobs) when present, else
-    * the legacy meta-row collect. */
-  private def checkParams(spark: SparkSession, live: DataFrame,
-      storePath: String, m: Int, k: Int): Unit =
-    KeyedStore.readNote(spark, storePath)
-      .map { n =>
-        val d = KeyedStore.Note.decode(n)
-        (d("m").toLong, d("k").toLong)
-      }
-      .orElse(live.filter(col("kind") === "m")
-        .select(col("m"), col("k")).collect().headOption
-        .map(r => (r.getLong(0), r.getLong(1))))
+  /** (m, k) from the manifest note (zero Spark jobs). */
+  private def checkParams(spark: SparkSession, storePath: String,
+      m: Int, k: Int): Unit =
+    KeyedStore.readFoldNote(spark, storePath)
+      .map(d => (d("m").toLong, d("k").toLong))
       .foreach { case (sm, sk) =>
         require(sm == m && sk == k,
           s"store $storePath is an (m=$sm, k=$sk) " +
@@ -67,10 +60,9 @@ object IncrementalBloom {
     require(m >= 2, s"filter needs at least 2 positions, got $m")
     require(k >= 1 && k <= 4, s"md5 yields 4 32-bit slices, got k=$k")
     val spark = evalSh.sparkSession
-    // LAZY pin: the merge's stage write (or the legacy params collect)
-    // is the one materialization
+    checkParams(spark, storePath, m, k)
+    // LAZY pin: the merge's stage write is the one materialization
     val live = liveRows(spark, storePath).localCheckpoint(false)
-    checkParams(spark, live, storePath, m, k)
     val batchBits = evalSh
       .select(explode(array(posCols(m, k): _*)).as("pos")).distinct()
     val fresh = batchBits.join(
@@ -100,8 +92,8 @@ object IncrementalBloom {
       k: Int = 3, minHits: Int = 3): DataFrame = {
     require(minHits >= 1, s"minHits must be >= 1, got $minHits")
     val spark = trainSh.sparkSession
+    checkParams(spark, storePath, m, k)
     val live = liveRows(spark, storePath)
-    checkParams(spark, live, storePath, m, k)
     // ≤ m rows; checkpoint so the store scan feeds the k probes once
     val bits = live.filter(col("kind") === "v").select(col("pos"))
       .localCheckpoint(true)

@@ -90,19 +90,12 @@ object IncrementalCc {
   }
 
   /** The member index's pinned label-store generation: the manifest note
-    * (zero Spark jobs) when present, else the legacy meta-row collect
-    * over a pruned read. */
-  private def memberGen(spark: SparkSession, mp: String,
-      pruned: => Option[DataFrame]): Option[Long] =
-    KeyedStore.readNote(spark, mp)
-      .map(n => KeyedStore.Note.decode(n)("ngen").toLong)
-      .orElse(pruned.flatMap(_.filter(col("kind") === "m")
-        .select(col("ngen")).collect().headOption.map(_.getLong(0))))
+    * (zero Spark jobs). */
+  private def memberGen(spark: SparkSession, mp: String): Option[Long] =
+    KeyedStore.readFoldNote(spark, mp).map(_("ngen").toLong)
 
   /** Live label rows — erased nodes (op_type = delete, written by
-    * [[deleteNodes]]) are hidden; rows from stores written before the
-    * erasure surface carry a NULL op_type through the persisted-schema
-    * read and are live. */
+    * [[deleteNodes]]) are hidden. */
   private def liveLabels(df: DataFrame): DataFrame =
     KeyedStore.liveView(df)
 
@@ -141,20 +134,12 @@ object IncrementalCc {
     val mp = memberPath(storePath)
     val members: Option[DataFrame] = if (affKeepers.isEmpty) None else {
       val probe = (MetaKeeper +: affKeepers.toSeq).toDF("keeper_id")
-      // one pruned read serves both the legacy meta fallback and the
-      // matched branch (lazy: a note-carrying store never forces it for
-      // the generation check at all)
-      lazy val raw0 = KeyedStore.readPruned(spark, mp, probe)
-      // generation handshake via the member store's note — zero jobs on
-      // the steady path (legacy: one pruned meta collect)
-      val metaGen = memberGen(spark, mp, raw0)
-      val raw =
-        if (metaGen.contains(labelGen)) raw0
-        else { // first fold on a pre-index store, or a crash window
-          rebuildMembers(spark, storePath, labelGen, numBuckets)
-          KeyedStore.readPruned(spark, mp, probe) // fresh post-rebuild view
-        }
-      raw.map(_.filter(col("kind") === "v" && col("op_type") =!= "delete")
+      // generation handshake via the member store's note — zero jobs
+      if (!memberGen(spark, mp).contains(labelGen))
+        // first fold with an index, or a crash window
+        rebuildMembers(spark, storePath, labelGen, numBuckets)
+      KeyedStore.readPruned(spark, mp, probe).map(_
+        .filter(col("kind") === "v" && col("op_type") =!= "delete")
         .join(probe.filter(col("keeper_id") =!= MetaKeeper),
           Seq("keeper_id"), "left_semi")
         .select(col("doc_id"), col("keeper_id"))
@@ -202,18 +187,13 @@ object IncrementalCc {
       // hide the gap FOREVER — a later fold touching the stale cluster
       // would then read incomplete member lists and silently split
       // components. So when the member read (and with it the generation
-      // check) did not happen, audit the pin here with a one-bucket meta
-      // read and rebuild on mismatch — BEFORE the label merge, so the
-      // rebuild mirrors exactly the state the crashed fold left. Steady-
-      // state cost: one single-bucket file read per changed fold.
-      if (members.isEmpty && labelGen > 0L) {
-        val metaGen = memberGen(spark, mp, {
-          val metaProbe = Seq(MetaKeeper).toDF("keeper_id")
-          KeyedStore.readPruned(spark, mp, metaProbe)
-        })
-        if (!metaGen.contains(labelGen))
-          rebuildMembers(spark, storePath, labelGen, numBuckets)
-      }
+      // check) did not happen, audit the pin here with the member
+      // index's note and rebuild on mismatch — BEFORE the label merge, so
+      // the rebuild mirrors exactly the state the crashed fold left.
+      // Steady-state cost: one driver metadata read per changed fold.
+      if (members.isEmpty && labelGen > 0L &&
+          !memberGen(spark, mp).contains(labelGen))
+        rebuildMembers(spark, storePath, labelGen, numBuckets)
       KeyedStore.merge(changed.select(col("doc_id"), col("keeper_id"))
           .withColumn("ver", lit(nextVer))
           .withColumn("op_type", lit("put")), storePath,
@@ -286,9 +266,8 @@ object IncrementalCc {
     * on the member read exactly as folds do.
     *
     * Returns the FULL post-erasure label table (lazy store read). Label
-    * stores written before round 14 lack the op_type column and need a
-    * one-time rewrite before erasing (the merge fails loudly on the
-    * schema union). */
+    * stores written before round 14 lack the op_type column and fail by
+    * name ([[KeyedStore.liveView]]). */
   def deleteNodes(nodes: DataFrame, survivingPairs: DataFrame,
       storePath: String, numBuckets: Int = 4,
       autoMaintain: Boolean = true): DataFrame = {
@@ -312,15 +291,9 @@ object IncrementalCc {
     // (the mergePairs read-2 discipline; rebuild heals a crash window)
     val mp = memberPath(storePath)
     val probe = (MetaKeeper +: affKeepers.toSeq).toDF("keeper_id")
-    lazy val raw0 = KeyedStore.readPruned(spark, mp, probe)
-    val metaGen = memberGen(spark, mp, raw0)
-    val raw =
-      if (metaGen.contains(labelGen)) raw0
-      else {
-        rebuildMembers(spark, storePath, labelGen, numBuckets)
-        KeyedStore.readPruned(spark, mp, probe)
-      }
-    val members = raw.get
+    if (!memberGen(spark, mp).contains(labelGen))
+      rebuildMembers(spark, storePath, labelGen, numBuckets)
+    val members = KeyedStore.readPruned(spark, mp, probe).get
       .filter(col("kind") === "v" && col("op_type") =!= "delete")
       .join(probe.filter(col("keeper_id") =!= MetaKeeper),
         Seq("keeper_id"), "left_semi")

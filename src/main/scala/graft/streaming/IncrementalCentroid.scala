@@ -42,13 +42,10 @@ object IncrementalCentroid {
   def mergeBatch(batch: DataFrame, storePath: String, labelCol: Column,
       embCol: Column, batchId: Long, numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
-    // LAZY pin + zero-job HWM via the manifest note (meta-row collect is
-    // the pre-note legacy fallback) — the FoldJobsSpec protocol
+    // LAZY pin + zero-job HWM via the manifest note — the FoldJobsSpec
+    // protocol
     val live = liveRows(spark, storePath).localCheckpoint(false)
-    val meta: Option[Long] = KeyedStore.readNote(spark, storePath)
-      .map(n => KeyedStore.Note.decode(n)("ver").toLong)
-      .orElse(live.filter(col("kind") === "m").select(col("ver")).collect()
-        .headOption.map(_.getLong(0)))
+    val meta = KeyedStore.readFoldNote(spark, storePath).map(_("ver").toLong)
     val cur = live.filter(col("kind") === "v")
     if (meta.exists(batchId <= _)) {
       val out = cur.select(col("g"), col("pos"), col("s_sum"), col("n"))

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * half-advanced; a replayed batch (batchId <= mark) returns no matches
   * and touches nothing — re-emission dedup is the caller's sink
   * contract, as with every counting-sketch fold here. The replay check
-  * reads the note ([[KeyedStore.readNote]]) — a driver metadata read,
+  * reads the note ([[KeyedStore.readFoldNote]]) — a driver metadata read,
   * zero Spark jobs — and the batch/fold frames pin LAZILY (materialized
   * by the pruned read's bucket probe and the merge's own stage write),
   * so a fold costs a fixed small number of cluster round-trips
@@ -63,16 +63,11 @@ object IncrementalCep {
   private val MetaKey = Long.MinValue
 
   /** Replay high-water mark under the FoldJobsSpec driver-action budget:
-    * rides the manifest note ([[KeyedStore.readNote]] — ZERO Spark jobs;
-    * committed atomically with the state rows by the fold's one merge),
-    * falling back to the legacy meta-row collect over the pruned read
-    * for stores written before the note existed. */
-  private def hwmOf(spark: SparkSession, storePath: String,
-      stored: => Option[DataFrame]): Option[Long] =
-    KeyedStore.readNote(spark, storePath)
-      .map(n => KeyedStore.Note.decode(n)("ver").toLong)
-      .orElse(stored.flatMap(_.filter(col("kind") === "m")
-        .select(col("ver")).collect().headOption.map(_.getLong(0))))
+    * rides the manifest note ([[KeyedStore.readFoldNote]] — ZERO Spark
+    * jobs; committed atomically with the state rows by the fold's one
+    * merge). */
+  private def hwmOf(spark: SparkSession, storePath: String): Option[Long] =
+    KeyedStore.readFoldNote(spark, storePath).map(_("ver").toLong)
 
   /** The fold merges' shared note: the replay HWM. */
   private def hwmNote(batchId: Long): Option[String] =
@@ -167,7 +162,7 @@ object IncrementalCep {
     // LAZY pruned read: a note-rejected replay never probes the store
     lazy val stored = KeyedStore.readPruned(spark, storePath,
       keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath, stored)
+    val hwm = hwmOf(spark, storePath)
     if (hwm.exists(batchId <= _)) {
       graft.util.Blocks.freeCheckpoint(batch)
       return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
@@ -326,7 +321,7 @@ object IncrementalCep {
     // LAZY pruned read: a note-rejected replay never probes the store
     lazy val stored = KeyedStore.readPruned(spark, storePath,
       keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath, stored)
+    val hwm = hwmOf(spark, storePath)
     if (hwm.exists(batchId <= _)) {
       graft.util.Blocks.freeCheckpoint(batch)
       return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
@@ -414,7 +409,7 @@ object IncrementalCep {
     // LAZY pruned read: a note-rejected replay never probes the store
     lazy val stored = KeyedStore.readPruned(spark, storePath,
       keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath, stored)
+    val hwm = hwmOf(spark, storePath)
     if (hwm.exists(batchId <= _)) {
       graft.util.Blocks.freeCheckpoint(batch)
       return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
@@ -492,7 +487,7 @@ object IncrementalCep {
         return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
       case Some(s) => s
     }
-    val hwm = hwmOf(spark, storePath, Some(live))
+    val hwm = hwmOf(spark, storePath)
     require(hwm.forall(batchId > _),
       s"flushBatchNeg batchId $batchId must exceed the stored high-water " +
         s"mark ${hwm.getOrElse(-1L)} — an equal-or-lower id would tie " +
@@ -558,7 +553,7 @@ object IncrementalCep {
     // LAZY pruned read: a note-rejected replay never probes the store
     lazy val stored = KeyedStore.readPruned(spark, storePath,
       keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath, stored)
+    val hwm = hwmOf(spark, storePath)
     if (hwm.exists(batchId <= _)) {
       graft.util.Blocks.freeCheckpoint(batch)
       return Seq.empty[(Long, Long, Long, Int, Long, Long, Long)]
@@ -733,7 +728,7 @@ object IncrementalCep {
     // LAZY pruned read: a note-rejected replay never probes the store
     lazy val stored = KeyedStore.readPruned(spark, storePath,
       keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath, stored)
+    val hwm = hwmOf(spark, storePath)
     if (hwm.exists(batchId <= _)) {
       graft.util.Blocks.freeCheckpoint(batch)
       return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
@@ -857,7 +852,7 @@ object IncrementalCep {
     // LAZY pruned read: a note-rejected replay never probes the store
     lazy val stored = KeyedStore.readPruned(spark, storePath,
       keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath, stored)
+    val hwm = hwmOf(spark, storePath)
     if (hwm.exists(batchId <= _)) {
       graft.util.Blocks.freeCheckpoint(batch)
       return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
@@ -951,7 +946,7 @@ object IncrementalCep {
     // LAZY pruned read: a note-rejected replay never probes the store
     lazy val stored = KeyedStore.readPruned(spark, storePath,
       keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath, stored)
+    val hwm = hwmOf(spark, storePath)
     if (hwm.exists(batchId <= _)) {
       graft.util.Blocks.freeCheckpoint(batch)
       return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
@@ -1108,7 +1103,7 @@ object IncrementalCep {
     // LAZY pruned read: a note-rejected replay never probes the store
     lazy val stored = KeyedStore.readPruned(spark, storePath,
       keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath, stored)
+    val hwm = hwmOf(spark, storePath)
     if (hwm.exists(batchId <= _)) {
       graft.util.Blocks.freeCheckpoint(batch)
       return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")

@@ -47,9 +47,8 @@ object IncrementalCms {
     * Driver-action budget (the round-12 judge's load-amplification
     * finding — every Spark action is a scheduler round-trip that a
     * loaded cluster multiplies): the (d, w) identity + replay HWM ride
-    * the store's manifest NOTE ([[KeyedStore.readNote]] — zero jobs; the
-    * pre-note meta-row collect survives only as the legacy-store
-    * fallback), the store read and the changed-cell frame are LAZY
+    * the store's manifest NOTE ([[KeyedStore.readFoldNote]] — zero
+    * jobs), the store read and the changed-cell frame are LAZY
     * checkpoints whose one materialization happens inside the merge's
     * own stage write, and only the returned cell table pays a dedicated
     * pinning job. Jobs-per-fold is pinned by FoldJobsSpec. */
@@ -59,15 +58,9 @@ object IncrementalCms {
     require(d >= 1 && w >= 2, s"need d >= 1 hash rows and w >= 2, got ($d, $w)")
     val spark = batch.sparkSession
     val live = liveRows(spark, storePath).localCheckpoint(false)
-    // meta rides the manifest note (zero Spark jobs); a pre-note store
-    // with committed state pays the one legacy collect
-    val meta: Option[(Long, Long, Long)] =
-      KeyedStore.readNote(spark, storePath).map(KeyedStore.Note.decode) match {
-        case Some(n) => Some((n("d").toLong, n("w").toLong, n("ver").toLong))
-        case None => live.filter(col("kind") === "m")
-          .select(col("d"), col("w"), col("ver")).collect()
-          .headOption.map(m => (m.getLong(0), m.getLong(1), m.getLong(2)))
-      }
+    // meta rides the manifest note (zero Spark jobs)
+    val meta = KeyedStore.readFoldNote(spark, storePath)
+      .map(n => (n("d").toLong, n("w").toLong, n("ver").toLong))
     meta.foreach { case (md, mw, _) =>
       require(md == d && mw == w,
         s"store $storePath is a (d=$md, w=$mw) " +
@@ -126,14 +119,9 @@ object IncrementalCms {
   def estimate(spark: SparkSession, storePath: String,
       probes: DataFrame): DataFrame = {
     val live = liveRows(spark, storePath)
-    // identity rides the manifest note (zero jobs); legacy stores fall
-    // back to the meta-row collect
-    val meta: Option[(Long, Long)] =
-      KeyedStore.readNote(spark, storePath).map(KeyedStore.Note.decode)
-        .map(n => (n("d").toLong, n("w").toLong))
-        .orElse(live.filter(col("kind") === "m")
-          .select(col("d"), col("w")).collect()
-          .headOption.map(m => (m.getLong(0), m.getLong(1))))
+    // identity rides the manifest note (zero jobs)
+    val meta = KeyedStore.readFoldNote(spark, storePath)
+      .map(n => (n("d").toLong, n("w").toLong))
     require(meta.nonEmpty, s"store $storePath has no folds yet")
     graft.ext.Profile.cmsEstimate(
       live.filter(col("kind") === "v").select(col("g"), col("cell"), col("ct")),

@@ -54,27 +54,16 @@ object IncrementalDecay {
       batchId: Long, unit: Long = 1000000L, numBuckets: Int = 4): DataFrame = {
     require(unit >= 1, s"unit must be >= 1, got $unit")
     val spark = batch.sparkSession
-    // LAZY pin: the merge's stage write (or the legacy meta collect) is
-    // the one materialization
+    // LAZY pin: the first action over it is the one materialization
     val cur = live(spark, storePath).localCheckpoint(false)
-    // (HWM, unit) ride the manifest note — zero Spark jobs; the meta-row
-    // collect survives as the pre-note legacy fallback (Row-shaped to
-    // keep the guards below unchanged)
-    val meta: Option[(Long, Long)] = KeyedStore.readNote(spark, storePath)
-      .map { n =>
-        val d = KeyedStore.Note.decode(n)
-        (d("ver").toLong, d("unit").toLong)
-      }
-      .orElse(cur.filter(col("kind") === "m")
-        .select(col("ver"), col("w")).collect().headOption
-        .map(r => (r.getLong(0), r.getLong(1))))
+    // (HWM, unit) ride the manifest note — zero Spark jobs
+    val meta = KeyedStore.readFoldNote(spark, storePath)
+      .map(d => (d("ver").toLong, d("unit").toLong))
     // unit is part of the store's identity (the IncrementalHist frame
     // contract): a changed unit would silently mix weight scales across
-    // folds — fail fast instead. Stored 0 = a pre-pin-format meta row
-    // (unit was never recorded): adopt the caller's unit, this fold's
-    // meta write heals it. Free the pinned read BEFORE throwing — a
+    // folds — fail fast instead. Free the pinned read BEFORE throwing — a
     // guarded rejection must not leak store-sized blocks.
-    meta.filter(m => m._2 != 0L && m._2 != unit).foreach { m =>
+    meta.filter(_._2 != unit).foreach { m =>
       graft.util.Blocks.freeCheckpoint(cur)
       throw new IllegalArgumentException(
         s"store $storePath decays at unit ${m._2}; fold passed " +

@@ -62,8 +62,7 @@ object IncrementalDedup {
     fresh.drop("__fp")
   }
 
-  /** Live fingerprint rows — tombstones hidden; rows from stores written
-    * before the erasure surface read op_type as NULL and are live. */
+  /** Live fingerprint rows — tombstones hidden. */
   private def liveFps(df: DataFrame): DataFrame =
     KeyedStore.liveView(df)
 
@@ -188,20 +187,17 @@ object IncrementalChunkDedup {
       // the filter below would then fail with a cryptic unresolved-column
       // error instead of the documented rebuild instruction
       if (!Seq("op_type", "cnt", "fb").forall(df.columns.contains))
-        throw new IllegalStateException(
-          s"$storePath predates the refcounted chunk layout " +
-            s"'${Layout.get}' (rows carry ${df.columns.mkString(", ")}) — " +
-            "its presence rows cannot back reference counting. Rebuild " +
-            "the store: re-fold the source history into a fresh root " +
-            "with the current code.")
+        throw KeyedStore.rebuildError(storePath, "predates the refcounted " +
+          s"chunk layout '${Layout.get}' (rows carry " +
+          s"${df.columns.mkString(", ")}) — its presence rows cannot back " +
+          "reference counting")
       df.filter(col("op_type") =!= "delete")
         .select(col("fp"), col("cnt"), col("fb"))
     }
 
   private def hwmNote(spark: org.apache.spark.sql.SparkSession,
       storePath: String): Map[String, String] =
-    KeyedStore.readNote(spark, storePath)
-      .map(KeyedStore.Note.decode).getOrElse(Map.empty)
+    KeyedStore.readFoldNote(spark, storePath).getOrElse(Map.empty)
 
   /** Chunk one micro-batch, screen the chunk fingerprints against the
     * store at `storePath` (creating it on first use), add the batch's

@@ -56,24 +56,13 @@ object IncrementalDf {
     Seq("").toDF("term")
   }
 
-  /** (n_docs, sum_dl, n_terms, hwm) — the manifest note (ZERO Spark jobs)
-    * when present, else one pruned bucket read over the corpus + meta
-    * rows, never a term-table scan. */
+  /** (n_docs, sum_dl, n_terms, hwm) — the manifest note (ZERO Spark
+    * jobs); zeros and no HWM on a fresh root. */
   private def corpusRow(spark: SparkSession,
       storePath: String): (Long, Long, Long, Option[Long]) =
-    KeyedStore.readNote(spark, storePath).map { nn =>
-      val d = KeyedStore.Note.decode(nn)
+    KeyedStore.readFoldNote(spark, storePath).map { d =>
       (d("n").toLong, d("sdl").toLong, d("nt").toLong, Some(d("ver").toLong))
-    }.getOrElse {
-      val rows = prunedLive(spark, storePath, metaProbe(spark))
-        .map(_.filter(col("kind") =!= "v")
-          .select(col("kind"), col("n"), col("sdl"), col("nt"), col("ver"))
-          .collect()).getOrElse(Array.empty)
-      val c = rows.find(_.getString(0) == "c")
-      val m = rows.find(_.getString(0) == "m").map(_.getLong(4))
-      c.map(r => (r.getLong(1), r.getLong(2), r.getLong(3), m))
-        .getOrElse((0L, 0L, 0L, m))
-    }
+    }.getOrElse((0L, 0L, 0L, None))
 
   private def statsFrame(spark: SparkSession, n: Long, sdl: Long,
       nt: Long): DataFrame =
@@ -96,28 +85,14 @@ object IncrementalDf {
       .groupBy("term").agg(count(lit(1)).as("bdf"))
       .localCheckpoint(true) // feeds the probe, the df join, the nt anti
     // ONE pruned read serves the whole fold: batch terms' buckets (df
-    // upsert + new-vocabulary anti-join can only match there) + the
-    // corpus/meta bucket (term = "")
+    // upsert + new-vocabulary anti-join can only match there); the probe
+    // still carries the corpus/meta key (term = ""), which no reader needs
+    // since the corpus scalars ride the note
     val probe = batchDf.select(col("term"))
       .unionByName(metaProbe(spark))
     val pruned = prunedLive(spark, storePath, probe)
-    // corpus scalars + HWM ride the manifest note (zero Spark jobs; the
-    // pruned meta-row collect survives as the pre-note legacy fallback)
-    val (n0, sdl0, nt0, hwm) = KeyedStore.readNote(spark, storePath)
-      .map { nn =>
-        val d = KeyedStore.Note.decode(nn)
-        (d("n").toLong, d("sdl").toLong, d("nt").toLong,
-          Some(d("ver").toLong): Option[Long])
-      }
-      .getOrElse {
-        val cm = pruned.map(_.filter(col("kind") =!= "v")
-          .select(col("kind"), col("n"), col("sdl"), col("nt"), col("ver"))
-          .collect()).getOrElse(Array.empty[org.apache.spark.sql.Row])
-        val m = cm.find(_.getString(0) == "m").map(_.getLong(4))
-        cm.find(_.getString(0) == "c")
-          .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), m))
-          .getOrElse((0L, 0L, 0L, m))
-      }
+    // corpus scalars + HWM ride the manifest note (zero Spark jobs)
+    val (n0, sdl0, nt0, hwm) = corpusRow(spark, storePath)
     if (hwm.exists(batchId <= _)) { // replay: current stats, store untouched
       graft.util.Blocks.freeCheckpoint(batchDf)
       graft.util.Blocks.freeCheckpoint(toks)
@@ -207,21 +182,7 @@ object IncrementalDf {
     val probe = batchDf.select(col("term"))
       .unionByName(metaProbe(spark))
     val pruned = prunedLive(spark, storePath, probe)
-    val (n0, sdl0, nt0, hwm) = KeyedStore.readNote(spark, storePath)
-      .map { nn =>
-        val d = KeyedStore.Note.decode(nn)
-        (d("n").toLong, d("sdl").toLong, d("nt").toLong,
-          Some(d("ver").toLong): Option[Long])
-      }
-      .getOrElse {
-        val cm = pruned.map(_.filter(col("kind") =!= "v")
-          .select(col("kind"), col("n"), col("sdl"), col("nt"), col("ver"))
-          .collect()).getOrElse(Array.empty[org.apache.spark.sql.Row])
-        val m = cm.find(_.getString(0) == "m").map(_.getLong(4))
-        cm.find(_.getString(0) == "c")
-          .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), m))
-          .getOrElse((0L, 0L, 0L, m))
-      }
+    val (n0, sdl0, nt0, hwm) = corpusRow(spark, storePath)
     if (hwm.exists(batchId <= _)) { // replay: current stats, store untouched
       graft.util.Blocks.freeCheckpoint(batchDf)
       graft.util.Blocks.freeCheckpoint(toks)

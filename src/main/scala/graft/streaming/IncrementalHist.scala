@@ -41,11 +41,10 @@ object IncrementalHist {
       }
 
   /** The store's pinned frame (+ HWM) from the manifest note — zero
-    * Spark jobs; None on legacy pre-note stores and fresh roots. */
+    * Spark jobs; None on fresh roots. */
   private def storedFrame(spark: SparkSession,
       storePath: String): Option[(Long, Long, Long, Long)] =
-    KeyedStore.readNote(spark, storePath).map { n =>
-      val m = KeyedStore.Note.decode(n)
+    KeyedStore.readFoldNote(spark, storePath).map { m =>
       (m("lo").toLong, m("hi").toLong, m("bins").toLong, m("ver").toLong)
     }
 
@@ -67,14 +66,10 @@ object IncrementalHist {
     require(hi >= lo, s"frame must satisfy hi >= lo, got [$lo, $hi]")
     require(bins >= 1, s"bins must be >= 1, got $bins")
     val spark = batch.sparkSession
-    // LAZY store read + zero-job meta (the manifest note; meta-row collect
-    // is the legacy fallback) — the FoldJobsSpec driver-action budget
+    // LAZY store read + zero-job meta (the manifest note) — the
+    // FoldJobsSpec driver-action budget
     val live = liveRows(spark, storePath).localCheckpoint(false)
-    val meta: Option[(Long, Long, Long, Long)] = storedFrame(spark, storePath)
-      .orElse(live.filter(col("kind") === "m")
-        .select(col("lo"), col("hi"), col("bins"), col("ver")).collect()
-        .headOption
-        .map(m => (m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3))))
+    val meta = storedFrame(spark, storePath)
     meta.foreach { case (mlo, mhi, mbins, _) =>
       require(mlo == lo && mhi == hi && mbins == bins,
         s"store $storePath is framed [$mlo, $mhi] x " +
@@ -147,9 +142,6 @@ object IncrementalHist {
       groupCol: Column, valueCol: Column): DataFrame = {
     val live = liveRows(spark, storePath)
     val meta = storedFrame(spark, storePath)
-      .orElse(live.filter(col("kind") === "m")
-        .select(col("lo"), col("hi"), col("bins")).collect()
-        .headOption.map(m => (m.getLong(0), m.getLong(1), m.getLong(2), 0L)))
     require(meta.nonEmpty, s"no frame pinned at $storePath — fold a batch first")
     val (lo, hi, bins) = (meta.get._1, meta.get._2, meta.get._3)
     val w = (hi - lo) / bins + 1
@@ -183,15 +175,12 @@ object IncrementalHist {
   }
 
   /** The current per-group estimates at `storePath` without folding; the
-    * frame is read from the store's meta row. Empty frame (no folds yet)
+    * frame is read from the store's manifest note. Empty frame (no folds yet)
     * returns an empty two-column-compatible frame via the caller's qs. */
   def readEstimate(spark: SparkSession, storePath: String,
       qs: Seq[(Int, Int)] = Seq((1, 2), (9, 10), (99, 100))): DataFrame = {
     val live = liveRows(spark, storePath)
     val meta = storedFrame(spark, storePath)
-      .orElse(live.filter(col("kind") === "m")
-        .select(col("lo"), col("hi"), col("bins")).collect()
-        .headOption.map(m => (m.getLong(0), m.getLong(1), m.getLong(2), 0L)))
     val (lo, hi, bins) = meta
       .map(m => (m._1, m._2, m._3.toInt))
       .getOrElse((0L, 0L, 1))

@@ -47,18 +47,10 @@ object IncrementalHll {
           .toDF("kind", "g", "idx", "rank", "p", "ver")
       }
 
-  /** The store's pinned precision: the manifest note (zero Spark jobs)
-    * when present, else the legacy meta-row collect over `live`. */
-  private def storedP(spark: SparkSession, storePath: String,
-      live: DataFrame): Option[Long] =
-    KeyedStore.readNote(spark, storePath)
-      .map(n => KeyedStore.Note.decode(n)("p").toLong)
-      .orElse(live.filter(col("kind") === "m").select(col("p")).collect()
-        .headOption.map(_.getLong(0)))
-
-  private def checkP(spark: SparkSession, live: DataFrame,
-      storePath: String, p: Int): Unit =
-    storedP(spark, storePath, live).foreach { sp =>
+  /** The store's pinned precision rides the manifest note (zero Spark
+    * jobs). */
+  private def checkP(spark: SparkSession, storePath: String, p: Int): Unit =
+    KeyedStore.readFoldNote(spark, storePath).map(_("p").toLong).foreach { sp =>
       require(sp == p,
         s"store $storePath is a p=$sp sketch; fold passed " +
           s"p=$p — the precision is the sketch's identity")
@@ -69,8 +61,7 @@ object IncrementalHll {
     * improved; returns the updated register table (g, idx, rank).
     *
     * Driver-action budget (the round-12 judge's load-amplification
-    * finding): `p` rides the manifest note (zero jobs; meta-row collect
-    * is the legacy fallback), the store read and the improved-register
+    * finding): `p` rides the manifest note (zero jobs), the store read and the improved-register
     * frame are LAZY checkpoints materialized inside the merge's own
     * stage write, and only the returned register table pays a dedicated
     * pinning job. Jobs-per-fold is pinned by FoldJobsSpec. */
@@ -78,8 +69,8 @@ object IncrementalHll {
       valueCol: Column, p: Int = 11, batchId: Long = 0L,
       numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
+    checkP(spark, storePath, p)
     val live = liveRows(spark, storePath).localCheckpoint(false)
-    checkP(spark, live, storePath, p)
     val cur = live.filter(col("kind") === "v")
     val batchRegs = graft.ext.Profile.hllRegisters(
       batch.select(groupCol.cast("string").as("g"), valueCol.as("__val")),
@@ -126,14 +117,10 @@ object IncrementalHll {
 
   /** The integer-exact per-group summary (g, zeros, h_num) of the store's
     * current registers — `Profile.hllSummary` over [[readRegisters]],
-    * with `p` read from the meta row. */
+    * with `p` read from the manifest note. */
   def readSummary(spark: SparkSession, storePath: String): DataFrame = {
-    val live = liveRows(spark, storePath)
-    val meta = storedP(spark, storePath, live)
-    require(meta.nonEmpty, s"store $storePath has no folds yet")
-    graft.ext.Profile.hllSummary(
-      live.filter(col("kind") === "v")
-        .select(col("g"), col("idx"), col("rank")),
-      Seq("g"), meta.get.toInt)
+    val p = KeyedStore.readFoldNote(spark, storePath).map(_("p").toInt)
+    require(p.nonEmpty, s"store $storePath has no folds yet")
+    graft.ext.Profile.hllSummary(readRegisters(spark, storePath), Seq("g"), p.get)
   }
 }

@@ -52,11 +52,12 @@ object IncrementalIds {
       .filter(col("key").isNotNull).distinct()
       // LAZY pin: the pruned read's bucket-probe collect materializes it
       .localCheckpoint(false)
-    // ONE bucket-pruned read covers everything the fold needs: the meta
-    // row (probed via its fixed key = "" bucket) carries the running max
-    // id/version, and the batch keys' buckets hold every stored row an
-    // unseen-key anti-join could match. A full-store read here would make
-    // each fold O(vocabulary) — the cost this store exists to avoid.
+    // ONE bucket-pruned read covers everything the fold needs: the batch
+    // keys' buckets hold every stored row an unseen-key anti-join could
+    // match (the probe still carries the meta row's key "", which no
+    // reader needs since the running max id/version ride the note). A
+    // full-store read here would make each fold O(vocabulary) — the cost
+    // this store exists to avoid.
     val probe = keys.unionByName(spark.range(1).select(lit("").as("key")))
     // no checkpoint: every consumer runs BEFORE the merge mutates the
     // store, and the pruned buckets are already immutable parquet —
@@ -64,16 +65,9 @@ object IncrementalIds {
     // whole touched buckets per fold
     val pruned = KeyedStore.readPruned(spark, storePath, probe)
       .map(_.select(col("kind"), col("key"), col("id"), col("ver")))
-    // running max id / version ride the manifest note (zero Spark jobs;
-    // the meta-row collect survives as the pre-note legacy fallback)
-    val metaIds: Option[(Long, Long)] = KeyedStore.readNote(spark, storePath)
-      .map { n =>
-        val m = KeyedStore.Note.decode(n)
-        (m("id").toLong, m("ver").toLong)
-      }
-      .orElse(pruned.flatMap(_.filter(col("kind") === "m")
-        .select(col("id"), col("ver")).collect().headOption
-        .map(r => (r.getLong(0), r.getLong(1)))))
+    // running max id / version ride the manifest note (zero Spark jobs)
+    val metaIds = KeyedStore.readFoldNote(spark, storePath)
+      .map(m => (m("id").toLong, m("ver").toLong))
     val nextId = metaIds.map(_._1 + 1L).getOrElse(0L)
     val nextVer = metaIds.map(_._2 + 1L).getOrElse(0L)
     val freshKeys = pruned match {

@@ -134,12 +134,8 @@ object IncrementalIvf {
     // LAZY pin: the stats merge's stage write is the one materialization
     // (the ids/codes merges before it never touch the stats store)
     val live = statsLive(spark, s"$storePath/stats").localCheckpoint(false)
-    // replay HWM rides the stats store's manifest note (zero Spark jobs;
-    // the meta-row collect survives as the pre-note legacy fallback)
-    val meta: Option[Long] = KeyedStore.readNote(spark, s"$storePath/stats")
-      .map(n => KeyedStore.Note.decode(n)("ver").toLong)
-      .orElse(live.filter(col("kind") === "m").select(col("ver")).collect()
-        .headOption.map(_.getLong(0)))
+    // replay HWM rides the stats store's manifest note (zero Spark jobs)
+    val meta = KeyedStore.readFoldNote(spark, s"$storePath/stats").map(_("ver").toLong)
     val curS = live.filter(col("kind") === "s")
     val curC = live.filter(col("kind") === "c")
     if (meta.exists(batchId <= _)) {
@@ -274,12 +270,9 @@ object IncrementalIvf {
     val spark = batch.sparkSession
     import spark.implicits._
     // LAZY pin + zero-job HWM via the stats note (the FoldJobsSpec
-    // protocol; legacy stores collect the meta row)
+    // protocol)
     val live = statsLive(spark, s"$storePath/stats").localCheckpoint(false)
-    val meta: Option[Long] = KeyedStore.readNote(spark, s"$storePath/stats")
-      .map(n => KeyedStore.Note.decode(n)("ver").toLong)
-      .orElse(live.filter(col("kind") === "m").select(col("ver")).collect()
-        .headOption.map(_.getLong(0)))
+    val meta = KeyedStore.readFoldNote(spark, s"$storePath/stats").map(_("ver").toLong)
     val curS = live.filter(col("kind") === "s")
     val curC = live.filter(col("kind") === "c")
     if (meta.exists(batchId <= _)) {

@@ -56,16 +56,11 @@ object IncrementalKmv {
       .getOrElse {
         import spark.implicits._
         Seq.empty[(String, String, Long, Long)].toDF("kind", "g", "h", "ver")
-      // LAZY pin: the merge's stage write (or the legacy HWM aggregate)
-      // is the one materialization
+      // LAZY pin: the merge's stage write is the one materialization
       }.localCheckpoint(false)
     val cur = live.filter(col("kind") === "v").select(col("g"), col("h"))
-    // replay HWM rides the manifest note (zero Spark jobs; the aggregate
-    // survives as the pre-note legacy fallback)
-    val maxVer: Option[Long] = KeyedStore.readNote(spark, storePath)
-      .map(n => KeyedStore.Note.decode(n)("ver").toLong)
-      .orElse(Option(live.agg(max(col("ver"))).head().get(0))
-        .map(_.asInstanceOf[Long]))
+    // replay HWM rides the manifest note (zero Spark jobs)
+    val maxVer = KeyedStore.readFoldNote(spark, storePath).map(_("ver").toLong)
     if (maxVer.exists(batchId <= _)) {
       // replay: current state IS the post-batch state. Materialize the
       // (group-sized) estimate so the store-sized `live` checkpoint can be

@@ -126,9 +126,7 @@ object IncrementalLsh {
     accepted.select(col("doc_id"), col("__text").as("text"))
   }
 
-  /** Live index rows — tombstones ([[deleteBatch]]) hidden; rows from
-    * stores written before the erasure surface read op_type as NULL and
-    * are live. */
+  /** Live index rows — tombstones ([[deleteBatch]]) hidden. */
   private def liveRows(df: DataFrame): DataFrame =
     KeyedStore.liveView(df)
 

@@ -84,21 +84,12 @@ object IncrementalRank {
       .map(_.filter(col("op_type") =!= "delete")
         .select(col("kind"), col("node"), col("rank_fp"),
           col("unit"), col("dn"), col("dd"), col("ver"))
-        // LAZY pin: the converge run's first iteration (or the legacy
-        // meta collect) is the one materialization
+        // LAZY pin: the converge run's first iteration is the one
+        // materialization
         .localCheckpoint(false))
-    // (unit, damp, ver) ride the manifest note — zero Spark jobs; the
-    // meta-row collect survives as the pre-note legacy fallback
-    val metaRow: Option[(Long, Long, Long, Long)] =
-      KeyedStore.readNote(spark, rankPath(storeRoot))
-        .map { n =>
-          val d = KeyedStore.Note.decode(n)
-          (d("unit").toLong, d("dn").toLong, d("dd").toLong, d("ver").toLong)
-        }
-        .orElse(stored.flatMap(_.filter(col("kind") === "m")
-          .select(col("unit"), col("dn"), col("dd"), col("ver"))
-          .collect().headOption
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))))
+    // (unit, damp, ver) ride the manifest note — zero Spark jobs
+    val metaRow = KeyedStore.readFoldNote(spark, rankPath(storeRoot))
+      .map(d => (d("unit").toLong, d("dn").toLong, d("dd").toLong, d("ver").toLong))
     metaRow.foreach { m =>
       require(m._1 == unit && m._2 == dampNum && m._3 == dampDen,
         s"store $storeRoot holds a (unit=${m._1}, " +

@@ -49,18 +49,12 @@ object IncrementalSample {
     val storedAll = KeyedStore.read(spark, storePath)
       .map(_.filter(col("op_type") =!= "delete")
         .select(col("kind"), col("g"), col("id"), col("h"), col("ver"))
-        // LAZY pin: the returned frame's eager checkpoint (or the legacy
-        // meta collect) is the one materialization
+        // LAZY pin: the returned frame's eager checkpoint is the one
+        // materialization
         .localCheckpoint(false))
-    // (k, ver) ride the manifest note — zero Spark jobs; the meta-row
-    // collect / ver aggregate survive as the pre-note legacy fallback
-    val noted = KeyedStore.readNote(spark, storePath)
-      .map(KeyedStore.Note.decode)
-    val storedK: Option[Long] = noted.map(_("k").toLong)
-      .orElse(storedAll.flatMap(
-        _.filter(col("kind") === "m").select(col("id")).collect()
-          .headOption.map(_.getLong(0))))
-    storedK.filter(_ != k.toLong).foreach { sk =>
+    // (k, ver) ride the manifest note — zero Spark jobs
+    val noted = KeyedStore.readFoldNote(spark, storePath)
+    noted.map(_("k").toLong).filter(_ != k.toLong).foreach { sk =>
       // free the pinned read BEFORE throwing — a guarded rejection
       // must not leak store-sized blocks
       storedAll.foreach(graft.util.Blocks.freeCheckpoint)
@@ -83,11 +77,7 @@ object IncrementalSample {
       .filter(col("__rk") <= k)
       .select(col("g"), col("id"), col("h"))
       .localCheckpoint(true)
-    val nextVer = noted.map(_("ver").toLong + 1L)
-      .orElse(stored
-        .flatMap(s => Option(s.agg(max(col("ver"))).head().get(0)))
-        .map(_.asInstanceOf[Long] + 1L))
-      .getOrElse(0L)
+    val nextVer = noted.map(_("ver").toLong + 1L).getOrElse(0L)
     val delta = stored match {
       case Some(s) =>
         val cur = s.select(col("g"), col("id"), col("h"))

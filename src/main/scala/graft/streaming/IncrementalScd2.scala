@@ -77,8 +77,9 @@ object IncrementalScd2 {
       // LAZY pin: the pruned read's bucket-probe collect materializes it
       .localCheckpoint(false)
     // ONE bucket-pruned read covers everything the fold needs from the
-    // store: the meta rows (probed via their fixed __k = "" bucket) and
-    // the TOUCHED keys' version rows. The former full-store eager
+    // store: the TOUCHED keys' version rows (the probe still carries the
+    // meta rows' __k = "", which no reader needs since the HWM rides the
+    // note). The former full-store eager
     // checkpoint materialized the whole history every fold — O(history),
     // exactly the cost the seam argument exists to avoid; this is
     // O(batch-touched buckets) file reads + O(touched versions) pinned.
@@ -86,13 +87,8 @@ object IncrementalScd2 {
       spark.range(1).select(lit("").as("__k")))
     val pruned = KeyedStore.readPruned(spark, storePath, probe)
       .map(_.filter(col("op_type") =!= "delete"))
-    // replay HWM rides the manifest note (zero Spark jobs; the meta-row
-    // aggregate survives as the pre-note legacy fallback)
-    val hwm = KeyedStore.readNote(spark, storePath)
-      .map(n => KeyedStore.Note.decode(n)("bver").toLong)
-      .orElse(pruned.flatMap(l =>
-        Option(l.filter(col("kind") === "m").agg(max(col("bver"))).head().get(0)))
-        .map(_.asInstanceOf[Long]))
+    // replay HWM rides the manifest note (zero Spark jobs)
+    val hwm = KeyedStore.readFoldNote(spark, storePath).map(_("bver").toLong)
     if (hwm.exists(batchId <= _)) {
       // replay: current state IS the post-batch state
       val out = readHistory(spark, storePath, batch, keys, attrNames)

@@ -70,22 +70,12 @@ object IncrementalTopK {
         import spark.implicits._
         Seq.empty[(String, String, Long, Long, Long)]
           .toDF("kind", "item", "ct", "n_total", "ver")
-      // LAZY pin: the legacy scalar aggregate (or the merge's stage
-      // write) is the one materialization
+      // LAZY pin: the first action over it is the one materialization
       }.localCheckpoint(false)
     val cur = live.filter(col("kind") === "c")
-    // (HWM, n_total) ride the manifest note — zero Spark jobs; the scalar
-    // aggregate over the <= k+1 stored rows is the legacy fallback
-    val scalars: Option[(Long, Long)] = KeyedStore.readNote(spark, storePath)
-      .map { n =>
-        val d = KeyedStore.Note.decode(n)
-        (d("ver").toLong, d("n") .toLong)
-      }
-      .orElse {
-        val curRow = live.agg(max(col("ver")),
-          coalesce(max(col("n_total")), lit(0L))).head()
-        Option(curRow.get(0)).map(v => (v.asInstanceOf[Long], curRow.getLong(1)))
-      }
+    // (HWM, n_total) ride the manifest note — zero Spark jobs
+    val scalars = KeyedStore.readFoldNote(spark, storePath)
+      .map(d => (d("ver").toLong, d("n").toLong))
     if (scalars.exists(batchId <= _._1))
       // replay: current state IS the post-batch state; `live` backs the
       // returned frame, so its checkpoint must stay pinned on this path

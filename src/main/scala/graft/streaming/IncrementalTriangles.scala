@@ -60,16 +60,9 @@ object IncrementalTriangles {
   }
 
   /** The count store's high-water mark: the manifest note (ZERO Spark
-    * jobs) when present, else the legacy pruned one-bucket read. */
-  private def hwm(spark: SparkSession, root: String): Option[Long] = {
-    import spark.implicits._
-    KeyedStore.readNote(spark, countPath(root))
-      .map(n => KeyedStore.Note.decode(n)("ver").toLong)
-      .orElse(KeyedStore.readPruned(spark, countPath(root),
-          Seq(MetaNode).toDF("node"))
-        .flatMap(_.filter(col("kind") === "m").select(col("ver"))
-          .collect().headOption.map(_.getLong(0))))
-  }
+    * jobs). */
+  private def hwm(spark: SparkSession, root: String): Option[Long] =
+    KeyedStore.readFoldNote(spark, countPath(root)).map(_("ver").toLong)
 
   private def canonical(batch: DataFrame): DataFrame = batch.select(
       least(col("a").cast("long"), col("b").cast("long")).as("u"),

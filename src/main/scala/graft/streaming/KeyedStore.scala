@@ -74,18 +74,13 @@ object KeyedStore {
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Bucket id of a row. Spark's `hash()` is TYPE-sensitive (an INT 3 and a
-    * BIGINT 3 hash differently), so when the store persisted its bucket
-    * columns' types every derivation — batch, stored-state re-read, probe —
-    * casts to those types first; otherwise a probe frame whose column type
-    * drifted from the stored rows' would silently miss its buckets. */
+    * BIGINT 3 hash differently), so every derivation — batch, stored-state
+    * re-read, probe — casts to the store's persisted bucket-column types
+    * first; otherwise a probe frame whose column type drifted from the
+    * stored rows' would silently miss its buckets. */
   private[streaming] def bucketOf(keys: Seq[String], n: Int,
-      types: Option[Seq[DataType]] = None): Column = {
-    val cs = types match {
-      case Some(ts) => keys.zip(ts).map { case (k, t) => col(k).cast(t) }
-      case None => keys.map(col)
-    }
-    bucketOfExprs(cs, n)
-  }
+      types: Seq[DataType]): Column =
+    bucketOfExprs(keys.zip(types).map { case (k, t) => col(k).cast(t) }, n)
 
   /** THE bucket-hash definition — every derivation site (store-side keys,
     * probe frames, DimCache fact columns) must route through this one
@@ -131,19 +126,42 @@ object KeyedStore {
           "rewrite the store (read old layout, merge into a fresh root)")
   }
 
-  /** Null-safe LIVE view of stored rows: delete tombstones hidden; rows
-    * read from pre-erasure stores (no op_type column, or NULL through a
-    * persisted-schema read of older files) are live. ONE definition for
-    * every erasure-aware reader (Dedup fingerprints, LSH signatures, CC
-    * labels) — [[readActive]] stays the strict non-null variant for
-    * stores that always wrote op_type. */
-  def liveView(df: DataFrame, opCol: String = "op_type"): DataFrame =
-    if (df.columns.contains(opCol))
-      df.filter(col(opCol).isNull || col(opCol) =!= "delete")
-    else df
+  /** THE definition of a live row: anything but a delete tombstone. A
+    * NULL op (a caller that never set it on a put) is live. Every reader
+    * and maintenance pass that separates live rows from tombstones —
+    * [[liveView]], [[readActive]], [[compact]]'s tombstone drop,
+    * [[maintain]]'s tombstone count — routes through this one predicate,
+    * so no two of them can disagree about a row. */
+  private[streaming] def isLive(op: Column, deleteOp: String = "delete"): Column =
+    op.isNull || op =!= deleteOp
+
+  /** The named failure for a root whose on-disk shape this code no longer
+    * reads (README "Persistent-store layout versions": forward-only, no
+    * read-through, no in-place migration). */
+  private[streaming] def rebuildError(path: String, what: String): IllegalStateException =
+    new IllegalStateException(s"$path $what. Rebuild the store: re-fold the " +
+      "source history into a fresh root with the current code (or read the " +
+      "old root with the round that wrote it).")
+
+  /** LIVE view of stored rows ([[isLive]]) — for erasure-aware readers
+    * (Dedup fingerprints, LSH signatures, CC labels) that hold a frame
+    * rather than a path. Rows without an `opCol` column come from a store
+    * written before the erasure layout: that fails by name. */
+  def liveView(df: DataFrame, opCol: String = "op_type"): DataFrame = {
+    if (!df.columns.contains(opCol)) {
+      // the error path only: name the store root from a bucket file
+      // (root/__b=<i>__g<gen>/part-…)
+      val root = df.inputFiles.headOption
+        .map(p => new Path(p).getParent.getParent.toString).getOrElse("store")
+      throw rebuildError(root, s"holds rows without an '$opCol' column — " +
+        "it predates the erasure layout")
+    }
+    df.filter(isLive(col(opCol)))
+  }
 
   /** Generation parsed from a commit file name, or None for non-commit
-    * entries. Two accepted shapes: legacy `_graft_commit_g<gen>` and
+    * entries. Two accepted shapes: nonce-less `_graft_commit_g<gen>` (an
+    * older store would otherwise read as empty) and
     * `_graft_commit_g<gen>_<hex-nonce>` — new commits carry a random
     * per-commit nonce so the file PATH is unique across store
     * delete/re-create cycles: the [[manifestCache]] key (path, modTime,
@@ -201,8 +219,7 @@ object KeyedStore {
   /** Parse one manifest. A manifest can only exist complete (rename
     * protocol), so a parse failure is corruption and fails loudly.
     * Lines starting with `#` are header lines (currently only
-    * `#note:`) — skipped by the bucket parse, so pre-note manifests and
-    * noted ones read identically. */
+    * `#note:`) — skipped by the bucket parse. */
   private def parseManifestFull(f: FileSystem, p: Path): Manifest = {
     val lines = readTextFile(f, p).split("\n").filter(_.nonEmpty)
     val note = lines.find(_.startsWith(NotePrefix)).map(_.drop(NotePrefix.length))
@@ -230,9 +247,6 @@ object KeyedStore {
     parsed
   }
 
-  private def parseManifest(f: FileSystem, p: Path): Map[Int, String] =
-    parseManifestFull(f, p).dirs
-
   /** Highest committed manifest: (generation, bucket → directory name).
     * Superseded manifests may coexist (retained snapshots, or a crash before
     * GC) — the highest generation wins. */
@@ -259,18 +273,30 @@ object KeyedStore {
     * sketch identity parameters ride here so a fold's "have I seen this
     * batch?" check costs no cluster round-trip (the round-12 judge's
     * load-amplification finding on the `_stream` drive class). None on
-    * stores with no commits or whose writers never passed a note. */
-  def readNote(spark: SparkSession, path: String): Option[String] = {
+    * stores with no commits or whose last merge passed no note. */
+  def readNote(spark: SparkSession, path: String): Option[String] =
+    readCommitted(spark, path).flatMap(_.note)
+
+  /** The DECODED note of a store whose every merge passes one — the folds'
+    * replay high-water marks and sketch identities. Same single listing
+    * as [[readNote]], zero Spark jobs. None only when the root has no
+    * committed generation (a fresh fold); committed state without a note
+    * is a store written before the note existed, and fails by name
+    * rather than reading as empty. */
+  def readFoldNote(spark: SparkSession, path: String): Option[Map[String, String]] =
+    readCommitted(spark, path).map(_.note.map(Note.decode).getOrElse(
+      throw rebuildError(path, "holds committed state but no manifest note " +
+        "— it was written before fold notes existed")))
+
+  private def readCommitted(spark: SparkSession, path: String): Option[Manifest] = {
     val f = fs(spark, path)
     val root = new Path(path)
     layoutGuard(f, root)
-    readCommitFull(f, root).flatMap(_._2.note)
+    readCommitFull(f, root).map(_._2)
   }
 
   /** The store's persisted bucket metadata: count, derivation columns and
-    * their types. `cols`/`types` are absent only on LEGACY stores written
-    * before they were recorded — those derive buckets from the full key
-    * list, uncast, until a merge heals the meta (see [[merge]]).
+    * their types (a meta without them fails by name in [[readMeta]]).
     * `layout` is the caller-declared LAYOUT-VERSION stamp (e.g.
     * "cep-iter-v1") — absent on stores whose caller never declared one.
     * `schemaDdl` is the bucket files' DATA SCHEMA (all-nullable DDL,
@@ -278,9 +304,9 @@ object KeyedStore {
     * explicit schema instead of paying a parquet footer-inference JOB per
     * read — one of the per-fold driver round-trips the round-12 judge
     * flagged. Dropped (inference fallback) if a merge ever writes a
-    * different shape; absent on pre-schema stores. */
+    * different shape. */
   private[streaming] final case class StoreMeta(n: Int,
-      cols: Option[Seq[String]], types: Option[Seq[DataType]],
+      cols: Seq[String], types: Seq[DataType],
       layout: Option[String] = None, schemaDdl: Option[String] = None)
 
   private def withSchema(reader: org.apache.spark.sql.DataFrameReader,
@@ -325,7 +351,9 @@ object KeyedStore {
     * promotion (the rename) is left to the next writer ([[promoteMeta]]):
     * readers must not need write permission on the store, and on
     * non-atomic-rename filesystems a reader-side rename widens the
-    * concurrent-interleaving surface for no benefit. */
+    * concurrent-interleaving surface for no benefit. A meta without its
+    * `cols:`/`types:` lines predates the persisted derivation and fails
+    * by name. */
   private[streaming] def readMeta(f: FileSystem, root: Path): Option[StoreMeta] = {
     val p = new Path(root, MetaFile)
     val pNew = metaNewPath(root)
@@ -347,17 +375,19 @@ object KeyedStore {
         // corrupt-meta diagnostic, not a NoSuchElementException
         lines.headOption.getOrElse("").trim.toIntOption match {
           case Some(n) =>
-            val cols = lines.drop(1).find(_.startsWith("cols:"))
-              .map(_.stripPrefix("cols:").split(",").toSeq.map(_.trim).filter(_.nonEmpty))
+            def field(prefix: String): Option[String] = lines.drop(1)
+              .find(_.startsWith(prefix)).map(_.stripPrefix(prefix).trim)
+            val cols = field("cols:").map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
             // types are `;`-separated catalog strings — `,` would split
             // array/map types
-            val types = lines.drop(1).find(_.startsWith("types:"))
-              .map(_.stripPrefix("types:").split(";").toSeq.map(s => DataType.fromDDL(s.trim)))
-            val layout = lines.drop(1).find(_.startsWith("layout:"))
-              .map(_.stripPrefix("layout:").trim).filter(_.nonEmpty)
-            val schemaDdl = lines.drop(1).find(_.startsWith("schema:"))
-              .map(_.stripPrefix("schema:").trim).filter(_.nonEmpty)
-            Some(StoreMeta(n, cols, types, layout, schemaDdl))
+            val types = field("types:").map(_.split(";").toSeq.map(s => DataType.fromDDL(s.trim)))
+            (cols, types) match {
+              case (Some(cs), Some(ts)) => Some(StoreMeta(n, cs, ts,
+                field("layout:").filter(_.nonEmpty), field("schema:").filter(_.nonEmpty)))
+              case _ => throw rebuildError(root.toString, s"has a bucket meta " +
+                s"($metaSrc) without its cols:/types: lines — it predates the " +
+                "persisted bucket derivation")
+            }
           case None if !hasState => None // fresh store, rewrite
           case None => throw new java.io.IOException(
             s"corrupt $metaSrc with existing state — bucket count unrecoverable")
@@ -379,15 +409,6 @@ object KeyedStore {
         throw new java.io.IOException(s"meta recovery rename $pNew -> $p failed")
     }
   }
-
-  private[streaming] def readBucketCount(f: FileSystem, root: Path): Option[Int] =
-    readMeta(f, root).map(_.n)
-
-  private[streaming] def readBucketColsMeta(f: FileSystem, root: Path): Option[Seq[String]] =
-    readMeta(f, root).flatMap(_.cols)
-
-  private[streaming] def readBucketTypesMeta(f: FileSystem, root: Path): Option[Seq[DataType]] =
-    readMeta(f, root).flatMap(_.types)
 
   /** Replace the EXISTING meta file crash-safely. `writeAtomic` alone cannot
     * overwrite (its delete-then-rename leaves a window where the meta is
@@ -421,25 +442,20 @@ object KeyedStore {
     * README "persistent-store layout versions" policy made LOUD AND NAMED
     * instead of a cryptic bucketCols `require`: a caller that declares a
     * layout id opens only stores stamped with that exact id. Returns the
-    * layout the healed meta should carry. */
+    * layout the meta should carry. */
   private def checkLayout(path: String, stored: Option[String],
       expected: Option[String], hasCommittedState: Boolean): Option[String] =
     (stored, expected) match {
       case (s, None) => s // generic tooling (compact/maintain) passes None
       case (Some(s), Some(e)) if s == e => stored
       case (Some(s), Some(e)) =>
-        throw new IllegalStateException(
-          s"$path was written with store layout '$s' but this code expects " +
-            s"layout '$e' — the persisted layout changed between rounds. " +
-            "Rebuild the store: re-fold the source history into a fresh " +
-            "root with the current code (or read the old root with the " +
-            "round that wrote it).")
+        throw rebuildError(path, s"was written with store layout '$s' but " +
+          s"this code expects layout '$e' — the persisted layout changed " +
+          "between rounds")
       case (None, Some(e)) if hasCommittedState =>
-        throw new IllegalStateException(
-          s"$path holds committed state but predates layout stamping " +
-            s"(this code expects layout '$e') — its row layout cannot be " +
-            "verified. Rebuild the store: re-fold the source history into " +
-            "a fresh root with the current code.")
+        throw rebuildError(path, "holds committed state but predates layout " +
+          s"stamping (this code expects layout '$e') — its row layout " +
+          "cannot be verified")
       case (None, e) => e // fresh/empty store: adopt the caller's stamp
     }
 
@@ -457,38 +473,29 @@ object KeyedStore {
     readCommit(f, root).filter(_._2.nonEmpty).map { case (_, dirs) =>
       val meta = readMeta(f, root).getOrElse(
         throw new IllegalStateException(s"$path: committed state but no bucket count"))
-      meta.cols match {
-        case Some(bcols) =>
-          val sel = probe.select(bucketOf(bcols, meta.n, meta.types).as("__b"))
-          // DRIVER-LOCAL fast path (round 14): a probe built from driver
-          // rows (Seq.toDF — the collected-keeper and meta probes the
-          // store folds build) optimizes to a LocalRelation whose bucket
-          // hashes ConvertToLocalRelation has ALREADY evaluated — read
-          // them directly for ZERO Spark jobs where the general path pays
-          // a distinct shuffle. Batch-derived probes keep the cluster
-          // path (a batch can be bigger than the driver).
-          val ids = sel.queryExecution.optimizedPlan match {
-            case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-              lr.data.map(_.getInt(0)).distinct
-            case _ => sel.distinct().collect().map(_.getInt(0)).toSeq
-          }
-          val needed = ids.sorted.filter(dirs.contains)
-          if (needed.isEmpty)
-            // schema-correct empty frame; with a persisted schema it never
-            // touches a file (no inference job for a no-hit probe)
-            withSchema(spark.read, meta.schemaDdl)
-              .parquet(dirs.values.map(d => new Path(root, d).toString).toSeq: _*)
-              .filter(lit(false))
-          else
-            withSchema(spark.read, meta.schemaDdl)
-              .parquet(needed.map(b => new Path(root, dirs(b)).toString): _*)
-        case None =>
-          // LEGACY store (no persisted derivation): degrade to the full
-          // committed view — correct, just unpruned — rather than crash a
-          // stream that predates the cols/types meta. The next merge heals
-          // the meta (see merge), after which pruning applies.
-          spark.read.parquet(dirs.values.map(d => new Path(root, d).toString).toSeq: _*)
+      val sel = probe.select(bucketOf(meta.cols, meta.n, meta.types).as("__b"))
+      // DRIVER-LOCAL fast path (round 14): a probe built from driver
+      // rows (Seq.toDF — the collected-keeper and meta probes the
+      // store folds build) optimizes to a LocalRelation whose bucket
+      // hashes ConvertToLocalRelation has ALREADY evaluated — read
+      // them directly for ZERO Spark jobs where the general path pays
+      // a distinct shuffle. Batch-derived probes keep the cluster
+      // path (a batch can be bigger than the driver).
+      val ids = sel.queryExecution.optimizedPlan match {
+        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          lr.data.map(_.getInt(0)).distinct
+        case _ => sel.distinct().collect().map(_.getInt(0)).toSeq
       }
+      val needed = ids.sorted.filter(dirs.contains)
+      if (needed.isEmpty)
+        // schema-correct empty frame; with a persisted schema it never
+        // touches a file (no inference job for a no-hit probe)
+        withSchema(spark.read, meta.schemaDdl)
+          .parquet(dirs.values.map(d => new Path(root, d).toString).toSeq: _*)
+          .filter(lit(false))
+      else
+        withSchema(spark.read, meta.schemaDdl)
+          .parquet(needed.map(b => new Path(root, dirs(b)).toString): _*)
     }
   }
 
@@ -533,10 +540,9 @@ object KeyedStore {
     *
     * ONE Spark job regardless of bucket count: all committed directories are
     * read in a single multi-path scan, each row's bucket recovered from its
-    * FILE PATH (rewrite-in-place-by-name — no re-hash, so legacy stores
-    * whose derivation predates the persisted meta compact correctly too),
-    * and one hash-exchange + `partitionBy` write emits one file per bucket
-    * into a staging root. The earlier shape looped buckets on the driver
+    * FILE PATH (rewrite-in-place-by-name — no re-hash), and one
+    * hash-exchange + `partitionBy` write emits one file per bucket into a
+    * staging root. The earlier shape looped buckets on the driver
     * with a `coalesce(1)` write each — O(buckets) sequential jobs, a
     * driver-throughput ceiling at production bucket counts.
     *
@@ -564,12 +570,10 @@ object KeyedStore {
             dirs.toSeq.sortBy(_._1).map { case (_, d) => new Path(root, d).toString }: _*)
           .withColumn("__b", regexp_extract(input_file_name(),
             """__b=(\d+)__g""", 1).cast("int"))
-        // NULL-safe drop, mirroring [[liveView]]: rows read from
-        // pre-erasure files through a unioned schema carry NULL op — they
-        // are LIVE and must survive the rewrite (a bare =!= would
-        // evaluate NULL and silently drop them)
+        // the one liveness predicate: a NULL-op row is live and survives
+        // the rewrite (a bare =!= would evaluate NULL and drop it)
         val df1 = if (dropTombstones && df0.columns.contains(opCol))
-          df0.filter(col(opCol).isNull || col(opCol) =!= deleteOp) else df0
+          df0.filter(isLive(col(opCol), deleteOp)) else df0
         val df = keepWhere.map(df1.filter).getOrElse(df1)
         val tmpRoot = new Path(path + "__ctmp")
         f.delete(tmpRoot, true) // a crashed previous compact
@@ -595,76 +599,6 @@ object KeyedStore {
         writeAtomic(f, root, new Path(root, commitName(newGen)), manifest)
         gc(f, root, keepGenerations)
       }
-    }
-  }
-
-  /** One-time LAYOUT MIGRATION for stores written before the erasure
-    * surface (round 14): committed rows lack the `opCol` column, so the
-    * first erase's merge fails loudly on the staged/stored schema union.
-    * Rewrites every committed bucket at one fresh generation with
-    * `opCol = putOp` added — every committed winner on a pre-erasure
-    * store IS a put — updates the persisted data schema so later reads
-    * skip footer inference, and carries the manifest note forward. Rows
-    * that already carry the column keep their value (`coalesce`, for the
-    * half-migrated crash case); a store that fully carries the column,
-    * or has no committed state, is a no-op returning false. Same
-    * single-writer crash protocol as [[compact]]: staged directories are
-    * invisible until the single manifest rename publishes all of them.
-    *
-    * ONE Spark job over the committed files (the compact shape) — run it
-    * once per pre-r14 store before the first [[merge]] that writes
-    * tombstones; production stores adopt erasure without a hand rebuild
-    * (VERDICT r14 item 3). */
-  def adoptOpType(spark: SparkSession, path: String,
-      opCol: String = "op_type", putOp: String = "put",
-      keepGenerations: Int = 1): Boolean = {
-    val f = fs(spark, path)
-    val root = new Path(path)
-    layoutGuard(f, root)
-    readCommitFull(f, root).filter(_._2.dirs.nonEmpty).exists {
-      case (gen, Manifest(dirs, note)) =>
-        val meta = readMeta(f, root)
-        val df0 = withSchema(spark.read, meta.flatMap(_.schemaDdl))
-          .parquet(
-            dirs.toSeq.sortBy(_._1).map { case (_, d) => new Path(root, d).toString }: _*)
-        if (df0.columns.contains(opCol) &&
-            df0.schema(opCol).dataType == org.apache.spark.sql.types.StringType &&
-            meta.flatMap(_.schemaDdl).isDefined) return false
-        val newGen = gen + 1
-        val df = df0
-          .withColumn(opCol,
-            if (df0.columns.contains(opCol))
-              coalesce(col(opCol).cast("string"), lit(putOp))
-            else lit(putOp))
-          .withColumn("__b", regexp_extract(input_file_name(),
-            """__b=(\d+)__g""", 1).cast("int"))
-        val tmpRoot = new Path(path + "__ctmp")
-        f.delete(tmpRoot, true)
-        df.repartition(col("__b")).write.partitionBy("__b").parquet(tmpRoot.toString)
-        val staged = f.listStatus(tmpRoot).map(_.getPath.getName)
-          .collect { case d if d.startsWith(BucketPrefix) =>
-            d.drop(BucketPrefix.length).toInt }
-          .sorted
-        staged.foreach { b =>
-          val dst = new Path(root, s"$BucketPrefix${b}__g$newGen")
-          f.delete(dst, true)
-          if (!f.rename(new Path(tmpRoot, BucketPrefix + b), dst))
-            throw new java.io.IOException(s"migrate stage rename -> $dst failed")
-        }
-        f.delete(tmpRoot, true)
-        // persist the migrated shape so reads stay inference-free; legacy
-        // metas (no cols) keep their count-only form — merge heals them
-        meta.foreach {
-          case StoreMeta(n, Some(cs), Some(ts), lay, _) =>
-            replaceMeta(f, root, colsMetaContent(n, cs, ts, lay,
-              Some(dataDdl(df.schema))))
-          case _ => ()
-        }
-        val manifest = note.map(NotePrefix + _ + "\n").getOrElse("") + staged
-          .map(b => s"$b $BucketPrefix${b}__g$newGen").mkString("\n")
-        writeAtomic(f, root, new Path(root, commitName(newGen)), manifest)
-        gc(f, root, keepGenerations)
-        true
     }
   }
 
@@ -710,7 +644,7 @@ object KeyedStore {
           dirs.values.map(d => new Path(root, d).toString).toSeq: _*)
         val fire = df.columns.contains(opCol) && {
           val r = df.agg(count(lit(1)).as("n"),
-            count(when(col(opCol) === deleteOp, 1)).as("d")).head()
+            count(when(!isLive(col(opCol), deleteOp), 1)).as("d")).head()
           r.getLong(0) > 0 &&
             r.getLong(1).toDouble / r.getLong(0) > maxTombstoneFrac
         }
@@ -738,10 +672,10 @@ object KeyedStore {
     }
   }
 
-  /** Live state: winning non-delete rows only. */
+  /** Live state: winning rows that are not tombstones ([[isLive]]). */
   def readActive(spark: SparkSession, path: String,
       opCol: String = "op_type", deleteOp: String = "delete"): Option[DataFrame] =
-    read(spark, path).map(_.filter(col(opCol) =!= deleteOp))
+    read(spark, path).map(_.filter(isLive(col(opCol), deleteOp)))
 
   /** Committed generations still on disk, ascending. With
     * `merge(keepGenerations = k)` the last k stay readable — each retained
@@ -883,77 +817,29 @@ object KeyedStore {
       case None =>
         // fresh store: ALWAYS persist cols + types (cols = keys when no
         // explicit bucketCols), so every store gets the type-cast
-        // derivation and pruned reads — count-only meta is legacy-read only
+        // derivation and pruned reads
         val cols = if (bucketCols.nonEmpty) bucketCols else keys
         val ts = batchTypes(cols)
         val sch = Some(writeDdl(cols, ts))
         writeAtomic(f, root, new Path(root, MetaFile),
           colsMetaContent(numBuckets, cols, ts, layoutId, sch))
-        StoreMeta(numBuckets, Some(cols), Some(ts), layoutId, sch)
-      case Some(m @ StoreMeta(n0, Some(cs), ts0, lay0, sch0)) =>
+        StoreMeta(numBuckets, cols, ts, layoutId, sch)
+      case Some(m @ StoreMeta(n0, cs, ts, lay0, sch0)) =>
         require(bucketCols.isEmpty || bucketCols == cs,
           s"bucketCols ${bucketCols.mkString(",")} != store's ${cs.mkString(",")}")
         val lay = checkLayout(path, lay0, layoutId, hasCommitted)
-        ts0 match {
-          case Some(ts) =>
-            // a batch writing a DIFFERENT shape than the persisted schema
-            // drops the schema line — reads degrade to inference rather
-            // than force a stale schema on mixed files (absent stays
-            // absent: pre-schema stores are not healed, their committed
-            // files' shape is unverified)
-            val sch = sch0.filter(_ == writeDdl(cs, ts))
-            if (lay == lay0 && sch == sch0) m
-            else {
-              replaceMeta(f, root, colsMetaContent(n0, cs, ts, lay, sch))
-              StoreMeta(n0, Some(cs), Some(ts), lay, sch)
-            }
-          case None =>
-            // heal the types line too (stores written by the intermediate
-            // version persisted cols only): committed rows hashed uncast
-            // with their write-time types, which ARE the committed parquet
-            // schema's — cast future batches back to them, same argument as
-            // the legacy heal below
-            val committedDirs = readCommit(f, root).map(_._2).getOrElse(Map.empty)
-            val ts =
-              if (committedDirs.isEmpty) batchTypes(cs)
-              else {
-                val sch = spark.read.parquet(
-                  committedDirs.values.map(d => new Path(root, d).toString).toSeq: _*).schema
-                cs.map(c => sch(c).dataType)
-              }
-            replaceMeta(f, root, colsMetaContent(n0, cs, ts, lay))
-            StoreMeta(n0, Some(cs), Some(ts), lay)
-        }
-      case Some(StoreMeta(n, None, _, lay0, _)) =>
-        // LEGACY count-only meta (or the crash window where a prior merge
-        // persisted the count but died before its first commit). Heal it:
-        val lay = checkLayout(path, lay0, layoutId, hasCommitted)
-        val committedDirs = readCommit(f, root).map(_._2).getOrElse(Map.empty)
-        if (committedDirs.isEmpty) {
-          // no committed rows — the derivation (and schema) is still ours to set
-          val cols = if (bucketCols.nonEmpty) bucketCols else keys
-          val ts = batchTypes(cols)
-          val sch = Some(writeDdl(cols, ts))
-          replaceMeta(f, root, colsMetaContent(n, cols, ts, lay, sch))
-          StoreMeta(n, Some(cols), Some(ts), lay, sch)
-        } else {
-          // committed rows were bucketed by the FULL key list: adopting a
-          // narrower derivation would mis-bucket relative to the committed
-          // winners, so only cols == keys is heal-able. Types come from the
-          // committed parquet schema — the types the stored rows actually
-          // hashed with — so future drifted batches cast back to them.
-          require(bucketCols.isEmpty || bucketCols == keys,
-            s"cannot adopt bucketCols ${bucketCols.mkString(",")} on a " +
-              "store that already has keys-bucketed state")
-          val sch = spark.read.parquet(
-            committedDirs.values.map(d => new Path(root, d).toString).toSeq: _*).schema
-          val ts = keys.map(k => sch(k).dataType)
-          replaceMeta(f, root, colsMetaContent(n, keys, ts, lay))
-          StoreMeta(n, Some(keys), Some(ts), lay)
+        // a batch writing a DIFFERENT shape than the persisted schema
+        // drops the schema line — reads degrade to inference rather
+        // than force a stale schema on mixed files (absent stays absent)
+        val sch = sch0.filter(_ == writeDdl(cs, ts))
+        if (lay == lay0 && sch == sch0) m
+        else {
+          replaceMeta(f, root, colsMetaContent(n0, cs, ts, lay, sch))
+          m.copy(layout = lay, schemaDdl = sch)
         }
     }
     val n = meta.n
-    val bcols = meta.cols.get
+    val bcols = meta.cols
     val btypes = meta.types
     val (gen, committed) = readCommit(f, root).getOrElse((0L, Map.empty[Int, String]))
     val newGen = gen + 1
@@ -964,11 +850,8 @@ object KeyedStore {
     // with no existing state would otherwise write files whose parquet
     // column types differ from the store's, making later multi-file reads
     // depend on reader-side type widening.
-    val canon = btypes match {
-      case Some(ts) => bcols.zip(ts).foldLeft(batch) { case (df, (c, t)) =>
-        if (df.schema(c).dataType == t) df else df.withColumn(c, col(c).cast(t)) }
-      case None => batch
-    }
+    val canon = bcols.zip(btypes).foldLeft(batch) { case (df, (c, t)) =>
+      if (df.schema(c).dataType == t) df else df.withColumn(c, col(c).cast(t)) }
     val wb = canon.withColumn("__b", bucketOfExprs(bcols.map(col), n))
     // WRITE-FIRST protocol, job 1: the batch's own winners, one file per
     // bucket, land in a staging root outside the committed view. The listing

@@ -1,19 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
-/** Structured-Streaming sources/sinks (SURVEY.md §2.1 S1–S3, §2.2 K1/K2, §2.5
-  * T1/T6).
+/** Structured-Streaming envelope decoding and checkpointing (SURVEY.md
+  * §2.1 S2/S3, §2.5 T1/T6).
   *
-  * The Kafka paths mirror the reference's connector configuration
-  * (`util/FlinkSourceUtil.java:29-61`, `util/FlinkSinkUtil.java:20-31`); they
-  * compile against the Spark Kafka source API surface and run wherever the
-  * spark-sql-kafka connector jar is deployed (not present in this test
-  * container — envelope decoding is tested through MemoryStream/file sources
-  * instead, which share every transform below past the source boundary).
+  * The reference's Kafka source and sink (`util/FlinkSourceUtil.java:29-61`,
+  * `util/FlinkSinkUtil.java:20-31`) map to Spark's `kafka` format, which
+  * needs the spark-sql-kafka connector jar; that jar is not part of the Spark
+  * installation this project builds against, so no Kafka helper lives here.
+  * Envelope decoding is tested through MemoryStream/file sources, which feed
+  * every transform below exactly as a Kafka `value` column would.
   */
 object Streams {
 
@@ -32,20 +32,6 @@ object Streams {
     StructField("before", MapType(StringType, StringType)),
     StructField("after", MapType(StringType, StringType))))
 
-  /** S1 — Kafka string source: earliest offsets, group id, null-tolerant
-    * values (`FlinkSourceUtil.java:29-61`, null guard :42-48). Spark's Kafka
-    * `value` is nullable by design — tombstones survive to be filtered
-    * downstream, never killing the job. */
-  def kafkaSource(spark: SparkSession, brokers: String, topic: String,
-      groupId: String): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .option("kafka.group.id", groupId)
-      .load()
-      .selectExpr("CAST(value AS STRING) AS value")
-
   /** S3 — Maxwell envelope decode + event time + watermark
     * (`SQLUtil.getKafkaTopicDb:26-39`): PERMISSIVE `from_json` turns
     * unparseable rows into null structs (dropped by the P1 ETL filter), the
@@ -56,21 +42,6 @@ object Streams {
       .select(col("m.*"))
       .withColumn("row_time", timestamp_seconds(col("ts")))
       .withWatermark("row_time", watermark)
-
-  /** K1/K2 — Kafka JSON append sink (`FlinkSinkUtil.getKafkaSink:20-31`,
-    * `SQLUtil.getKafkaSinkSQL:41-48`). Spark's Kafka sink is at-least-once;
-    * the reference's transactional exactly-once (txn prefix + 15 min timeout,
-    * `FlinkSinkUtil.java:27-29`) is recovered with checkpointed offsets +
-    * idempotent atomic per-batch commits — see [[TxnSink]] (the T7
-    * foreachBatch-transactional path, spec-verified) and
-    * `dropDuplicatesWithinWatermark` redelivery dedup (StreamDedupSpec). */
-  def kafkaJsonSink(df: DataFrame, brokers: String, topic: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
 
   /** T6 — checkpointing harness (`base/BaseAPP.start:40-57`): every query gets
     * a checkpoint dir; trigger cadence plays the reference's 5s checkpoint

@@ -9,17 +9,32 @@ trait SparkSpec extends AnyFunSuite {
   def sfDir(sf: String = "sf0.001"): String = s"/root/testdata/$sf"
 
   /** Call sites of the Spark jobs started while running `body`, one entry
-    * per job (its stage names joined by "+"). Job-start events are posted at
-    * submission, inside the blocking actions `body` runs; the async listener
-    * bus is then drained DETERMINISTICALLY — a fixed sleep is flaky on a
-    * loaded box (late-posted events undercount or leak into the next
-    * measurement). waitUntilEmpty is private[spark] in Scala but public
-    * bytecode, so reflect. */
+    * per job: its stage names joined by "+", then — for a job that runs
+    * inside a Dataset action — " @ " and that action's call site (adaptive
+    * execution names its stages after its own thread pool, so the action's
+    * site is the one that points at engine code). Job-start events are
+    * posted at submission, inside the blocking actions `body` runs; the
+    * async listener bus is then drained DETERMINISTICALLY — a fixed sleep
+    * is flaky on a loaded box (late-posted events undercount or leak into
+    * the next measurement). waitUntilEmpty is private[spark] in Scala but
+    * public bytecode, so reflect. */
   def jobSitesDuring(body: => Unit): Seq[String] = {
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val actions = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sites.add(j.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString("+"))
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            actions.put(s.executionId.toString, s.description)
+          case _ =>
+        }
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val action = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(actions.get(id)))
+        sites.add(j.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString("+") +
+          action.map(" @ " + _.takeWhile(_ != '\n')).getOrElse(""))
+      }
     }
     spark.sparkContext.addSparkListener(l)
     try {

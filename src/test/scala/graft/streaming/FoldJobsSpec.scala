@@ -59,6 +59,22 @@ class FoldJobsSpec extends SparkSpec {
     }
   }
 
+  test("first fold into a fresh root pays no HWM read job (IncrementalKmv)") {
+    val s = spark
+    import s.implicits._
+    val store = Files.createTempDirectory("kmvjobs").toString + "/st"
+    val sites = jobSitesDuring {
+      IncrementalKmv.mergeBatch((0 until 50).map(i => (s"g${i % 2}", s"u$i"))
+        .toDF("g", "u"), store, col("g"), col("u"), k = 8, batchId = 0L)
+    }
+    info("job sites: " + sites.mkString(" | "))
+    // the replay HWM of a fresh root is "none" by the note read alone; an
+    // aggregate over the empty store would show up as a `head` job here
+    assert(!sites.exists(_.contains("head at IncrementalKmv.scala")),
+      s"fresh-root fold ran an HWM job: ${sites.mkString(" | ")}")
+    assert(KeyedStore.readFoldNote(s, store).contains(Map("ver" -> "0")))
+  }
+
   test("sketch fold (IncrementalCms): colliding fold stays inside the job budget") {
     val s = spark
     import s.implicits._

@@ -84,33 +84,6 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(live == 2)
   }
 
-  test("pre-r14 fingerprint store: migrate with adoptOpType, then erase works") {
-    val s = spark
-    import s.implicits._
-    val store = Files.createTempDirectory("inc_dedup_mig").toString + "/store"
-    // OLD-LAYOUT fixture: a fingerprint store as pre-r14 dedupBatch wrote
-    // it — (fp, batch_id) rows, no op_type column
-    val oldRows = Seq(("x", 0L), ("y", 0L), ("z", 0L)).toDF("text", "batch_id")
-      .select(graft.ext.TextStats.fingerprint(col("text")).as("fp"),
-        col("batch_id"))
-    KeyedStore.merge(oldRows, store, keys = Seq("fp"),
-      seqCols = Seq("batch_id"), numBuckets = 16, bucketCols = Seq("fp"))
-    // erasing on the old layout fails loudly (schema union), store intact
-    intercept[Exception] {
-      IncrementalDedup.deleteBatch(
-        Seq((1L, "x")).toDF("id", "text"), store, fp, 1L)
-    }
-    // the one-time migration, then the same erase lands
-    assert(KeyedStore.adoptOpType(s, store))
-    assert(IncrementalDedup.deleteBatch(
-      Seq((1L, "x")).toDF("id", "text"), store, fp, 1L) == 1L)
-    // erased content reads as never-seen; surviving content still screens
-    val out = IncrementalDedup.dedupBatch(
-      Seq((8L, "x"), (9L, "y")).toDF("id", "text"), store, fp, col("id"), 2L)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(out == Set(8L))
-  }
-
   test("drives a foreachBatch stream end-to-end") {
     val s = spark
     import s.implicits._

@@ -358,75 +358,6 @@ class KeyedStoreSpec extends SparkSpec {
     assert(hit == want && hit.size == 20, s"pruned probe missed: ${hit.size}")
   }
 
-  test("meta-upgrade crash window: count-only meta with no commit heals to a bucketCols store") {
-    val s = spark
-    import s.implicits._
-    // Simulate a merge that crashed after writing the meta (count only, no
-    // cols line) but before its first commit: a later bucketCols merge must
-    // persist the cols/types lines, or every subsequent merge would bucket
-    // by the full keys while this one bucketed by bucketCols.
-    val root = Files.createTempDirectory("keyedstore_heal").toString + "/t"
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val f = KeyedStore.fs(s, root)
-    f.mkdirs(rootPath)
-    val out = f.create(new org.apache.hadoop.fs.Path(rootPath, "_graft_buckets"), true)
-    out.write("8".getBytes("UTF-8")); out.close()
-
-    val rows = (0L until 100L).map(i => (i % 10, s"m$i", i)).toDF("grp", "member", "seq")
-    KeyedStore.merge(rows, root, keys = Seq("grp", "member"), seqCols = Seq("seq"),
-      numBuckets = 999 /* must be ignored: the crashed meta's 8 wins */,
-      bucketCols = Seq("grp"))
-    assert(KeyedStore.readBucketColsMeta(f, rootPath).contains(Seq("grp")))
-
-    // a follow-up merge WITHOUT bucketCols adopts the healed derivation, and
-    // pruned reads see both generations' rows
-    KeyedStore.merge(Seq((3L, "m_new", 999L)).toDF("grp", "member", "seq"),
-      root, keys = Seq("grp", "member"), seqCols = Seq("seq"))
-    val got = KeyedStore.readPruned(s, root, Seq(3L).toDF("grp")).get
-      .filter($"grp" === 3L).select("member").collect().map(_.getString(0)).toSet
-    assert(got == ((3L until 100L by 10L).map(i => s"m$i").toSet + "m_new"), s"got $got")
-  }
-
-  test("LEGACY count-only store with committed state: reads degrade, merge heals") {
-    val s = spark
-    import s.implicits._
-    val root = Files.createTempDirectory("keyedstore_legacy").toString + "/t"
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val f = KeyedStore.fs(s, root)
-
-    // build a store with committed state, then strip the meta back to the
-    // legacy count-only form (what stores written before cols/types existed
-    // look like on disk)
-    val rows = (0L until 40L).map(i => (i, s"v$i", 0L)).toDF("k", "v", "seq")
-    KeyedStore.merge(rows, root, keys = Seq("k"), seqCols = Seq("seq"), numBuckets = 8)
-    val metaPath = new org.apache.hadoop.fs.Path(rootPath, "_graft_buckets")
-    f.delete(metaPath, false)
-    val out = f.create(metaPath, true)
-    out.write("8".getBytes("UTF-8")); out.close()
-
-    // 1. the pruned read DEGRADES to the full committed view instead of
-    //    crashing the stream (the pre-change behavior was a hard throw)
-    val pruned = KeyedStore.readPruned(s, root, Seq(3L).toDF("k")).get
-    assert(pruned.count() == 40, "legacy store must serve the full view")
-
-    // 2. the next merge HEALS the meta (cols = keys is derivation-identical
-    //    to the legacy full-key bucketing; types from the committed schema)
-    KeyedStore.merge(Seq((100L, "v100", 1L)).toDF("k", "v", "seq"),
-      root, keys = Seq("k"), seqCols = Seq("seq"))
-    assert(KeyedStore.readBucketColsMeta(f, rootPath).contains(Seq("k")))
-    assert(KeyedStore.readBucketTypesMeta(f, rootPath).nonEmpty)
-
-    // 3. healed store prunes again, and legacy + new rows coexist correctly
-    val got = KeyedStore.readPruned(s, root, Seq(3L, 100L).toDF("k")).get
-      .filter($"k".isin(3L, 100L)).select("v").collect().map(_.getString(0)).toSet
-    assert(got == Set("v3", "v100"), s"got $got")
-    // an explicit narrower derivation is still refused (would mis-bucket)
-    intercept[IllegalArgumentException] {
-      KeyedStore.merge(Seq((1L, "x", 2L)).toDF("k", "v", "seq"),
-        root, keys = Seq("k"), seqCols = Seq("seq"), bucketCols = Seq("v"))
-    }
-  }
-
   test("DEFAULT (keys-bucketed) store casts drifted key types: no split-brain winners") {
     val s = spark
     import s.implicits._
@@ -446,39 +377,76 @@ class KeyedStoreSpec extends SparkSpec {
     assert(winners == Seq("new"), s"split-brain winners: $winners")
   }
 
-  test("cols-persisted store WITHOUT types heals on merge; empty meta is corrupt, loudly") {
+  test("an empty meta beside committed state is corrupt, loudly") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("keyedstore_colsonly").toString + "/t"
+    val root = Files.createTempDirectory("keyedstore_emptymeta").toString + "/t"
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val f = KeyedStore.fs(s, root)
     KeyedStore.merge((0L until 40L).map(i => (i, s"v$i", 0L)).toDF("k", "v", "seq"),
       root, keys = Seq("k"), seqCols = Seq("seq"), numBuckets = 8)
-    // strip the meta to the intermediate cols-only form (no types line)
-    val metaPath = new org.apache.hadoop.fs.Path(rootPath, "_graft_buckets")
-    f.delete(metaPath, false)
-    val out = f.create(metaPath, true)
-    out.write("8\ncols:k".getBytes("UTF-8")); out.close()
-    assert(KeyedStore.readBucketTypesMeta(f, rootPath).isEmpty)
-
-    // merge heals the types from the committed schema…
-    KeyedStore.merge(Seq((100L, "v100", 1L)).toDF("k", "v", "seq"),
-      root, keys = Seq("k"), seqCols = Seq("seq"))
-    assert(KeyedStore.readBucketTypesMeta(f, rootPath).nonEmpty)
-    // …so a subsequently DRIFTED batch casts back and wins in place
-    KeyedStore.merge(
-      Seq((3, "drifted", 2L)).toDF("k", "v", "seq").withColumn("k", $"k".cast("int")),
-      root, keys = Seq("k"), seqCols = Seq("seq"))
-    val winners = KeyedStore.read(s, root).get
-      .filter($"k" === 3L).select("v").collect().map(_.getString(0)).toSeq
-    assert(winners == Seq("drifted"), s"split-brain winners: $winners")
-
     // a zero-byte meta beside committed state is corruption — IOException
     // with the diagnostic, not a NoSuchElementException
+    val metaPath = new org.apache.hadoop.fs.Path(rootPath, "_graft_buckets")
     f.delete(metaPath, false)
     f.create(metaPath, true).close()
-    val e = intercept[java.io.IOException] { KeyedStore.readBucketCount(f, rootPath) }
+    val e = intercept[java.io.IOException] { KeyedStore.readMeta(f, rootPath) }
     assert(e.getMessage.contains("corrupt"), e.getMessage)
+  }
+
+  test("old store shapes fail by name with the rebuild instruction") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    def root(tag: String) = Files.createTempDirectory(s"keyedstore_old_$tag").toString + "/t"
+    def kv(root: String) = KeyedStore.merge(
+      (0L until 20L).map(i => (i, s"v$i", 0L)).toDF("k", "v", "seq"),
+      root, keys = Seq("k"), seqCols = Seq("seq"), numBuckets = 4)
+    def setMeta(root: String, content: String): Unit = {
+      val f = KeyedStore.fs(s, root)
+      val p = new org.apache.hadoop.fs.Path(root, "_graft_buckets")
+      f.delete(p, false)
+      val out = f.create(p, true)
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    // (shape, hand-written old root, the operation that used to read
+    // through, heal or degrade on it)
+    val cases: Seq[(String, String, String => Unit)] = Seq(
+      ("count-only meta with state", {
+        val r = root("count"); kv(r); setMeta(r, "4"); r
+      }, r => KeyedStore.readPruned(s, r, Seq(3L).toDF("k"))),
+      ("count-only meta, merged into", {
+        val r = root("countm"); kv(r); setMeta(r, "4"); r
+      }, r => kv(r)),
+      ("cols without types", {
+        val r = root("cols"); kv(r); setMeta(r, "4\ncols:k"); r
+      }, r => kv(r)),
+      ("noted fold root without a note", {
+        // an IncrementalHll root as folds wrote it before the manifest note
+        val r = root("hll")
+        KeyedStore.merge(Seq(("m", "", -1L, 0L, 11L, 0L, "put"))
+            .toDF("kind", "g", "idx", "rank", "p", "ver", "op_type"),
+          r, keys = Seq("kind", "g", "idx"), seqCols = Seq("rank"), numBuckets = 4)
+        r
+      }, r => IncrementalHll.mergeBatch(Seq(("a", 1L)).toDF("g", "u"), r,
+        col("g"), col("u"), batchId = 1L)),
+      ("Dedup root without op_type", {
+        // a fingerprint store as dedupBatch wrote it before erasure existed
+        val r = root("dedup")
+        KeyedStore.merge(Seq(("x", 0L)).toDF("text", "batch_id")
+            .select(graft.ext.TextStats.fingerprint(col("text")).as("fp"),
+              col("batch_id")),
+          r, keys = Seq("fp"), seqCols = Seq("batch_id"), bucketCols = Seq("fp"))
+        r
+      }, r => IncrementalDedup.dedupBatch(Seq((1L, "x")).toDF("id", "text"), r,
+        graft.ext.TextStats.fingerprint(col("text")), col("id"), 1L)))
+    cases.foreach { case (shape, r, op) =>
+      val gen = KeyedStore.latestGeneration(s, r)
+      val e = intercept[IllegalStateException](op(r))
+      assert(e.getMessage.contains(r) && e.getMessage.contains("Rebuild the store"),
+        s"$shape: ${e.getMessage}")
+      assert(KeyedStore.latestGeneration(s, r) == gen, s"$shape: the store moved")
+    }
   }
 
   test("meta replace survives a crash between delete and rename (__new recovery)") {
@@ -498,8 +466,8 @@ class KeyedStoreSpec extends SparkSpec {
     f.delete(metaPath, false)
     // a READER resolves the store through __new WITHOUT promoting it — the
     // read path must not need write permission on the store directory
-    assert(KeyedStore.readBucketCount(f, rootPath).contains(8))
-    assert(KeyedStore.readBucketColsMeta(f, rootPath).contains(Seq("k")))
+    val meta = KeyedStore.readMeta(f, rootPath)
+    assert(meta.map(_.n).contains(8) && meta.map(_.cols).contains(Seq("k")))
     assert(!f.exists(metaPath) &&
       f.exists(new org.apache.hadoop.fs.Path(rootPath, "_graft_buckets__new")))
     // the next WRITER promotes __new back to the live meta name
@@ -507,8 +475,7 @@ class KeyedStoreSpec extends SparkSpec {
       root, keys = Seq("k"), seqCols = Seq("seq"), numBuckets = 8)
     assert(f.exists(metaPath) &&
       !f.exists(new org.apache.hadoop.fs.Path(rootPath, "_graft_buckets__new")))
-    assert(KeyedStore.readBucketCount(f, rootPath).contains(8))
-    import org.apache.spark.sql.functions.col
+    assert(KeyedStore.readMeta(f, rootPath).map(_.n).contains(8))
     assert(KeyedStore.read(s, root).get.count() == 2)
   }
 
@@ -615,33 +582,19 @@ class KeyedStoreSpec extends SparkSpec {
       s"NULL-op live rows must survive the tombstone drop, kept: $kept")
   }
 
-  test("adoptOpType migrates a pre-erasure store: tombstone merges work after, no-op when present") {
+  test("readActive is null-safe: a NULL-op put is live") {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("keyedstore_mig").toString + "/t"
-    // pre-r14 layout: committed rows carry NO op column
-    KeyedStore.merge((1 to 6).map(i => (s"k$i", i.toLong)).toDF("k", "seq"),
+    val dir = Files.createTempDirectory("keyedstore_nullread").toString + "/t"
+    KeyedStore.merge(Seq(
+        ("a", 1L, Option.empty[String]), ("b", 1L, Some("put")),
+        ("c", 1L, Some("delete"))).toDF("k", "seq", "op_type"),
       dir, keys = Seq("k"), seqCols = Seq("seq"), numBuckets = 4)
-    // an erase on the old layout fails loudly on the schema union
-    intercept[Exception] {
-      KeyedStore.merge(Seq(("k1", 9L, "delete")).toDF("k", "seq", "op_type"),
-        dir, keys = Seq("k"), seqCols = Seq("seq"))
-    }
-    assert(KeyedStore.adoptOpType(s, dir))
-    // every committed winner became an explicit put at a fresh generation
-    val migrated = KeyedStore.read(s, dir).get
-    assert(migrated.filter(col("op_type") === "put").count() == 6)
-    // and the erase that failed above now lands; readActive hides it
-    KeyedStore.merge(Seq(("k1", 9L, "delete")).toDF("k", "seq", "op_type"),
-      dir, keys = Seq("k"), seqCols = Seq("seq"))
-    assert(KeyedStore.readActive(s, dir).get
-      .select("k").collect().map(_.getString(0)).toSet
-      == (2 to 6).map(i => s"k$i").toSet)
-    // already-migrated store: no-op, no new generation
-    val gen = KeyedStore.latestGeneration(s, dir)
-    assert(!KeyedStore.adoptOpType(s, dir))
-    assert(KeyedStore.latestGeneration(s, dir) == gen)
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("k").collect().map(_.getString(0)).toSet
+    assert(keys(KeyedStore.readActive(s, dir).get) == Set("a", "b"))
+    // the frame-level view agrees with the path-level read
+    assert(keys(KeyedStore.liveView(KeyedStore.read(s, dir).get)) == Set("a", "b"))
   }
 
   test("duplicate-generation commit twins: deterministic winner, whole-generation gc") {
