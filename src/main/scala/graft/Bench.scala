@@ -61,8 +61,8 @@ object Bench {
     // q_join_lookup_big runs plan shapes nothing above compiles — the
     // window-lag winners pass feeding a dynamic-partition parquet write, and
     // the pruned-bucket lookup (InMemoryRelation + SHUFFLE_MERGE join).
-    // MergeProbe (two fresh builds, one JVM) puts their first-use codegen/JIT
-    // at ~2.5 s merge + ~2.8 s lookup; a 2k-row store compiles the same code,
+    // Two fresh builds in one JVM put their first-use codegen/JIT at
+    // ~2.5 s merge + ~2.8 s lookup; a 2k-row store compiles the same code,
     // untimed, so the measured query pays only the real per-build cost.
     warm("keyed-store") {
       val d = "/tmp/graft_bench_warm_store"

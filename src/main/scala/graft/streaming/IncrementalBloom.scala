@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   * replay high-water mark is needed (idempotent by construction, unlike
   * the counting sketches).
   *
-  * (m, k) are the filter's identity — pinned in a meta row on first fold;
+  * (m, k) are the filter's identity — pinned in the manifest note on
+  * first fold;
   * a fold or screen with different parameters fails fast (positions are
   * `hash % m`, so mixing m values silently corrupts the table).
   *
@@ -30,26 +31,12 @@ object IncrementalBloom {
   private def posCols(m: Int, k: Int) = (0 until k).map(i =>
     conv(substring(md5(col("s")), 1 + 8 * i, 8), 16, 10).cast("long") % m)
 
-  private def liveRows(spark: SparkSession, storePath: String): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.select(col("kind"), col("pos"), col("m"), col("k"), col("ver")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, Long, Long, Long, Long)]
-          .toDF("kind", "pos", "m", "k", "ver")
-      }
-
-  /** (m, k) from the manifest note (zero Spark jobs). */
-  private def checkParams(spark: SparkSession, storePath: String,
-      m: Int, k: Int): Unit =
-    KeyedStore.readFoldNote(spark, storePath)
-      .map(d => (d("m").toLong, d("k").toLong))
-      .foreach { case (sm, sk) =>
-        require(sm == m && sk == k,
-          s"store $storePath is an (m=$sm, k=$sk) " +
-            s"filter; caller passed (m=$m, k=$k) — the parameters are the " +
-            "filter's identity")
-      }
+  /** The set positions, after pinning (m, k) against the note. */
+  private def setBits(spark: SparkSession, storePath: String,
+      m: Int, k: Int): DataFrame = {
+    StoreFold.pin(spark, storePath, "Bloom filter", "m" -> m, "k" -> k)
+    StoreFold.live(spark, storePath, "pos BIGINT")
+  }
 
   /** Fold one eval-suite batch's shingles `evalSh(doc_id, s)` into the
     * filter at `storePath` (created on first use), writing only positions
@@ -59,27 +46,20 @@ object IncrementalBloom {
       k: Int = 3, batchId: Long = 0L, numBuckets: Int = 4): Long = {
     require(m >= 2, s"filter needs at least 2 positions, got $m")
     require(k >= 1 && k <= 4, s"md5 yields 4 32-bit slices, got k=$k")
-    val spark = evalSh.sparkSession
-    checkParams(spark, storePath, m, k)
     // LAZY pin: the merge's stage write is the one materialization
-    val live = liveRows(spark, storePath).localCheckpoint(false)
+    val live = setBits(evalSh.sparkSession, storePath, m, k)
+      .localCheckpoint(false)
     val batchBits = evalSh
       .select(explode(array(posCols(m, k): _*)).as("pos")).distinct()
-    val fresh = batchBits.join(
-        live.filter(col("kind") === "v").select(col("pos")),
-        Seq("pos"), "left_anti")
+    val fresh = batchBits.join(live, Seq("pos"), "left_anti")
       .select(lit("v").as("kind"), col("pos"), lit(m.toLong).as("m"),
         lit(k.toLong).as("k"), lit(batchId).as("ver"))
       // LAZY pin: the merge's own stage write is the one materialization
       .localCheckpoint(false)
-    val meta = spark.range(1).select(lit("m").as("kind"), lit(-1L).as("pos"),
-      lit(m.toLong).as("m"), lit(k.toLong).as("k"), lit(batchId).as("ver"))
-    KeyedStore.merge(fresh.unionByName(meta), storePath,
-      keys = Seq("kind", "pos"), seqCols = Seq("ver"),
+    StoreFold.commit(fresh, storePath, keys = Seq("kind", "pos"),
       numBuckets = numBuckets,
-      note = Some(KeyedStore.Note.encode(
-        "m" -> m.toString, "k" -> k.toString, "ver" -> batchId.toString)))
-    val fill = live.filter(col("kind") === "v").count() + fresh.count()
+      note = Seq("m" -> m, "k" -> k, "ver" -> batchId))
+    val fill = live.count() + fresh.count()
     graft.util.Blocks.freeCheckpoint(live)
     graft.util.Blocks.freeCheckpoint(fresh)
     fill
@@ -91,11 +71,8 @@ object IncrementalBloom {
   def screenBatch(trainSh: DataFrame, storePath: String, m: Int = 1 << 14,
       k: Int = 3, minHits: Int = 3): DataFrame = {
     require(minHits >= 1, s"minHits must be >= 1, got $minHits")
-    val spark = trainSh.sparkSession
-    checkParams(spark, storePath, m, k)
-    val live = liveRows(spark, storePath)
     // ≤ m rows; checkpoint so the store scan feeds the k probes once
-    val bits = live.filter(col("kind") === "v").select(col("pos"))
+    val bits = setBits(trainSh.sparkSession, storePath, m, k)
       .localCheckpoint(true)
     graft.ext.Dedup.bloomProbe(trainSh, bits, m, k, minHits)
   }

@@ -33,16 +33,16 @@ import org.apache.spark.sql.functions._
   *
   * The two stores commit separately, so a crash between the label merge
   * and the member merge could leave the index one fold behind; the
-  * member store's meta row pins the label-store GENERATION it reflects,
-  * and a fold that finds them out of step rebuilds the index from the
-  * label store (O(nodes), crash-recovery only) before proceeding. EVERY
+  * member store's manifest note pins the label-store GENERATION it
+  * reflects, and a fold that finds them out of step rebuilds the index
+  * from the label store (O(nodes), crash-recovery only) before proceeding. EVERY
   * fold that writes verifies the pin — folds that read members check it
   * on that read, folds that skip the member read (all-new nodes) audit
-  * it with a one-bucket meta read before re-pinning — so the crash
+  * it with a zero-job note read before re-pinning — so the crash
   * window cannot be papered over by a sparse fold.
   * Housekeeping: `KeyedStore.compact(memberPath, dropTombstones = true)`
-  * is safe at any time (winners are already resolved, the meta row and
-  * its pinned generation survive) and bounds the index at O(nodes) live
+  * is safe at any time (winners are already resolved, the note and its
+  * pinned generation survive) and bounds the index at O(nodes) live
   * rows on merge-heavy streams; compacting the LABEL store also works
   * but bumps its generation, which the handshake reads as out-of-step —
   * the next touching fold pays one rebuild.
@@ -58,10 +58,6 @@ import org.apache.spark.sql.functions._
 object IncrementalCc {
 
   private def memberPath(storePath: String) = storePath + "__members"
-  /** Meta sentinel bucket key in the member index (kind disambiguates —
-    * a real doc could in principle carry this id and only shares a
-    * bucket, never a store key). */
-  private val MetaKeeper = Long.MinValue
 
   /** Rebuild the member index as an exact mirror of the label store —
     * first use and crash recovery (label merge committed, member merge
@@ -77,17 +73,24 @@ object IncrementalCc {
         lit(null).cast("long").as("ngen"), lit("put").as("op_type"))
       case None => return
     }
-    // meta ver = the mirrored generation: above every mirrored row's ver,
-    // below every future fold's nextVer, so later meta updates still win
-    val meta = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKeeper).as("keeper_id"), lit(-1L).as("doc_id"),
-      lit(labelGen).as("ver"), lit(labelGen).as("ngen"),
-      lit("put").as("op_type"))
-    KeyedStore.merge(rows.unionByName(meta), mp,
-      keys = Seq("kind", "keeper_id", "doc_id"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("keeper_id"),
-      note = Some(KeyedStore.Note.encode("ngen" -> labelGen.toString)))
+    commitMembers(rows, mp, labelGen, numBuckets)
   }
+
+  /** The member index's one merge: `rows` mirror label moves, and the
+    * note pins the label-store generation `ngen` they reflect. */
+  private def commitMembers(rows: DataFrame, mp: String, ngen: Long,
+      numBuckets: Int): Unit =
+    StoreFold.commit(rows, mp, keys = Seq("kind", "keeper_id", "doc_id"),
+      numBuckets = numBuckets, note = Seq("ngen" -> ngen),
+      bucketCols = Seq("keeper_id"))
+
+  /** The affected clusters' (doc_id, keeper_id) member lists, read
+    * pruned to the `keepers`' buckets of the member index. */
+  private def membersOf(spark: SparkSession, mp: String,
+      keepers: DataFrame): DataFrame =
+    StoreFold.livePruned(spark, mp, keepers, "doc_id BIGINT, keeper_id BIGINT")
+      .join(keepers, Seq("keeper_id"), "left_semi")
+      .select(col("doc_id"), col("keeper_id"))
 
   /** The member index's pinned label-store generation: the manifest note
     * (zero Spark jobs). */
@@ -127,22 +130,17 @@ object IncrementalCc {
         .select(col("keeper_id")).distinct()
         .collect().map(_.getLong(0)))
       .getOrElse(Array.empty)
-    // Read 2 (member index, pruned by the affected keepers' buckets +
-    // the meta bucket): those clusters' full member lists. Only folds
-    // that touch stored clusters pay this read — and only they check the
-    // index's generation handshake (a stale index is harmless until read).
+    // Read 2 (member index, pruned by the affected keepers' buckets):
+    // those clusters' full member lists. Only folds that touch stored
+    // clusters pay this read — and only they check the index's
+    // generation handshake (a stale index is harmless until read).
     val mp = memberPath(storePath)
     val members: Option[DataFrame] = if (affKeepers.isEmpty) None else {
-      val probe = (MetaKeeper +: affKeepers.toSeq).toDF("keeper_id")
       // generation handshake via the member store's note — zero jobs
       if (!memberGen(spark, mp).contains(labelGen))
         // first fold with an index, or a crash window
         rebuildMembers(spark, storePath, labelGen, numBuckets)
-      KeyedStore.readPruned(spark, mp, probe).map(_
-        .filter(col("kind") === "v" && col("op_type") =!= "delete")
-        .join(probe.filter(col("keeper_id") =!= MetaKeeper),
-          Seq("keeper_id"), "left_semi")
-        .select(col("doc_id"), col("keeper_id"))
+      Some(membersOf(spark, mp, affKeepers.toSeq.toDF("keeper_id"))
         // LAZY pin: the components run's first checkpoint materializes it
         .localCheckpoint(false))
     }
@@ -181,7 +179,7 @@ object IncrementalCc {
     if (!changed.isEmpty) {
       // UNCONDITIONAL handshake before re-pinning: a fold that skipped the
       // member read (no affected keepers — the sparse all-new-nodes steady
-      // state) still writes the meta row below with ngen = nextVer. If a
+      // state) still commits the note below with ngen = nextVer. If a
       // previous fold crashed between its label merge and its member merge,
       // trusting that skip would advance the pin over a stale index and
       // hide the gap FOREVER — a later fold touching the stale cluster
@@ -210,18 +208,12 @@ object IncrementalCc {
         .select(lit("v").as("kind"), col("__old").as("keeper_id"),
           col("doc_id"), lit(nextVer).as("ver"),
           lit(null).cast("long").as("ngen"), lit("delete").as("op_type"))
-      val meta = spark.range(1).select(lit("m").as("kind"),
-        lit(MetaKeeper).as("keeper_id"), lit(-1L).as("doc_id"),
-        lit(nextVer).as("ver"), lit(nextVer).as("ngen"),
-        lit("put").as("op_type"))
-      KeyedStore.merge(puts.unionByName(dels).unionByName(meta), mp,
-        keys = Seq("kind", "keeper_id", "doc_id"), seqCols = Seq("ver"),
-        numBuckets = numBuckets, bucketCols = Seq("keeper_id"),
-        note = Some(KeyedStore.Note.encode("ngen" -> nextVer.toString)))
+      commitMembers(puts.unionByName(dels), mp, nextVer, numBuckets)
       // self-scheduled maintenance: member-index tombstones (labels that
       // moved cluster) are ALWAYS safe to drop — winners are resolved and
-      // the meta pin is a put — so a merge-heavy stream compacts itself
-      // when the index turns tombstone-heavy, on the amortized cadence
+      // the generation pin rides the note — so a merge-heavy stream
+      // compacts itself when the index turns tombstone-heavy, on the
+      // amortized cadence
       if (autoMaintain) KeyedStore.maintain(spark, mp)
     }
     graft.util.Blocks.freeCheckpoint(changed)
@@ -290,14 +282,9 @@ object IncrementalCc {
     // affected clusters' member lists, with the generation handshake
     // (the mergePairs read-2 discipline; rebuild heals a crash window)
     val mp = memberPath(storePath)
-    val probe = (MetaKeeper +: affKeepers.toSeq).toDF("keeper_id")
     if (!memberGen(spark, mp).contains(labelGen))
       rebuildMembers(spark, storePath, labelGen, numBuckets)
-    val members = KeyedStore.readPruned(spark, mp, probe).get
-      .filter(col("kind") === "v" && col("op_type") =!= "delete")
-      .join(probe.filter(col("keeper_id") =!= MetaKeeper),
-        Seq("keeper_id"), "left_semi")
-      .select(col("doc_id"), col("keeper_id"))
+    val members = membersOf(spark, mp, affKeepers.toSeq.toDF("keeper_id"))
       .localCheckpoint(true) // feeds dead, survivors, and both diffs
     val dead = members.join(del, Seq("doc_id"), "left_semi")
     val survivors = members.join(del, Seq("doc_id"), "left_anti")
@@ -341,18 +328,11 @@ object IncrementalCc {
       d.select(lit("v").as("kind"), keeper.as("keeper_id"), col("doc_id"),
         lit(nextVer).as("ver"), lit(null).cast("long").as("ngen"),
         lit(op).as("op_type"))
-    val meta = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKeeper).as("keeper_id"), lit(-1L).as("doc_id"),
-      lit(nextVer).as("ver"), lit(nextVer).as("ngen"),
-      lit("put").as("op_type"))
-    KeyedStore.merge(
+    commitMembers(
       mrow(moved, col("keeper_id"), "put")
         .unionByName(mrow(moved, col("__old"), "delete"))
-        .unionByName(mrow(dead, col("keeper_id"), "delete"))
-        .unionByName(meta),
-      mp, keys = Seq("kind", "keeper_id", "doc_id"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("keeper_id"),
-      note = Some(KeyedStore.Note.encode("ngen" -> nextVer.toString)))
+        .unionByName(mrow(dead, col("keeper_id"), "delete")),
+      mp, nextVer, numBuckets)
     if (autoMaintain) KeyedStore.maintain(spark, mp)
     graft.util.Blocks.freeCheckpoint(moved)
     graft.util.Blocks.freeCheckpoint(repaired)
@@ -367,8 +347,5 @@ object IncrementalCc {
   def readLabels(spark: SparkSession, storePath: String): DataFrame =
     KeyedStore.read(spark, storePath)
       .map(df => liveLabels(df).select(col("doc_id"), col("keeper_id")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("doc_id", "keeper_id")
-      }
+      .getOrElse(StoreFold.empty(spark, "doc_id BIGINT, keeper_id BIGINT"))
 }

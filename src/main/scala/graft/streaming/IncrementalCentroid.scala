@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * re-reading history.
   *
   * Replay safety is the counting-sketch contract ([[IncrementalHist]]
-  * verbatim): `batchId` is the `ver` seq, a meta row records the
+  * verbatim): `batchId` is the `ver` seq, the manifest note records the
   * high-water mark on every fold, and a replayed fold returns current
   * state without touching the store.
   *
@@ -24,17 +24,6 @@ import org.apache.spark.sql.functions._
   * (labels·dim rows out), a store read, and a bucketed upsert of only
   * the (label, pos) rows the batch touched. */
 object IncrementalCentroid {
-
-  private def liveRows(spark: SparkSession, storePath: String): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("g"), col("pos"), col("s_sum"), col("n"),
-          col("ver")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, String, Long, Long, Long, Long)]
-          .toDF("kind", "g", "pos", "s_sum", "n", "ver")
-      }
 
   /** Fold one micro-batch (labelCol, embedding array) into the store at
     * `storePath` (created on first use) and return the updated sums
@@ -44,13 +33,10 @@ object IncrementalCentroid {
     val spark = batch.sparkSession
     // LAZY pin + zero-job HWM via the manifest note — the FoldJobsSpec
     // protocol
-    val live = liveRows(spark, storePath).localCheckpoint(false)
-    val meta = KeyedStore.readFoldNote(spark, storePath).map(_("ver").toLong)
-    val cur = live.filter(col("kind") === "v")
-    if (meta.exists(batchId <= _)) {
-      val out = cur.select(col("g"), col("pos"), col("s_sum"), col("n"))
-        .localCheckpoint(true)
-      graft.util.Blocks.freeCheckpoint(live)
+    val cur = readSums(spark, storePath).localCheckpoint(false)
+    if (StoreFold.replayed(KeyedStore.readFoldNote(spark, storePath), batchId)) {
+      val out = cur.localCheckpoint(true)
+      graft.util.Blocks.freeCheckpoint(cur)
       return out
     }
     val batchSums = graft.ext.Similarity.labelCentroidSums(
@@ -59,35 +45,29 @@ object IncrementalCentroid {
       .select(col("label").as("g"), col("pos"), col("s_sum").as("bs"),
         col("n").as("bn"))
     val changed = batchSums
-      .join(cur.select(col("g"), col("pos"), col("s_sum"), col("n")),
-        Seq("g", "pos"), "left_outer")
+      .join(cur, Seq("g", "pos"), "left_outer")
       .select(lit("v").as("kind"), col("g"), col("pos"),
         (coalesce(col("s_sum"), lit(0L)) + col("bs")).as("s_sum"),
         (coalesce(col("n"), lit(0L)) + col("bn")).as("n"),
         lit(batchId).as("ver"), lit("put").as("op_type"))
       // LAZY pin: the merge's own stage write is the one materialization
       .localCheckpoint(false)
-    val metaRow = spark.range(1).select(lit("m").as("kind"), lit("").as("g"),
-      lit(-1L).as("pos"), lit(0L).as("s_sum"), lit(0L).as("n"),
-      lit(batchId).as("ver"), lit("put").as("op_type"))
-    KeyedStore.merge(changed.unionByName(metaRow), storePath,
-      keys = Seq("kind", "g", "pos"), seqCols = Seq("ver"),
-      numBuckets = numBuckets,
-      note = Some(KeyedStore.Note.encode("ver" -> batchId.toString)))
-    val out = cur.select(col("g"), col("pos"), col("s_sum"), col("n"))
+    StoreFold.commit(changed, storePath, keys = Seq("kind", "g", "pos"),
+      numBuckets = numBuckets, note = Seq("ver" -> batchId))
+    val out = cur
       .join(changed.select(col("g"), col("pos")), Seq("g", "pos"),
         "left_anti")
       .unionByName(changed.select(col("g"), col("pos"), col("s_sum"), col("n")))
       .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(live)
+    graft.util.Blocks.freeCheckpoint(cur)
     graft.util.Blocks.freeCheckpoint(changed)
     out
   }
 
   /** The current sums at `storePath` without folding. */
   def readSums(spark: SparkSession, storePath: String): DataFrame =
-    liveRows(spark, storePath).filter(col("kind") === "v")
-      .select(col("g"), col("pos"), col("s_sum"), col("n"))
+    StoreFold.live(spark, storePath,
+      "g STRING, pos BIGINT, s_sum BIGINT, n BIGINT")
 
   /** Per-label cosine between a batch's centroid sums and the STORED
     * profile — the drift gate: 1.0 = batch centered exactly on history,

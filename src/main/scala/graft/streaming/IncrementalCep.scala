@@ -24,13 +24,12 @@ import org.apache.spark.sql.functions._
   * Store layout (stamped — [[KeyedStore]] layout ids "cep-st-v1" /
   * "cep-iter-v1", the latter adding a JSON `f0` capture column for
   * iterative conditions): one row per key ever seen —
-  * (kind 'v', k, st, c, t0[, f0]) — plus a high-water-mark meta row
-  * (kind 'm'), all bucketed by k. The one unbounded axis (a row per key
-  * ever seen) is bounded by [[expire]]/[[maintainExpire]] — pass
-  * `expireWatermarkMs` to the folds and expiry self-schedules. A fold
-  * reads BUCKET-PRUNED by the batch's keys (+ the meta bucket): cost is
+  * (kind 'v', k, st, c, t0[, f0]) — bucketed by k. The one unbounded axis
+  * (a row per key ever seen) is bounded by [[expire]]/[[maintainExpire]]
+  * — pass `expireWatermarkMs` to the folds and expiry self-schedules. A
+  * fold reads BUCKET-PRUNED by the batch's keys: cost is
   * O(batch + touched buckets) however many keys the stream has
-  * accumulated. Everything commits in ONE merge (state rows + meta + the
+  * accumulated. Everything commits in ONE merge (state rows + the
   * manifest NOTE carrying the high-water mark), so the store is never
   * half-advanced; a replayed batch (batchId <= mark) returns no matches
   * and touches nothing — re-emission dedup is the caller's sink
@@ -59,19 +58,55 @@ import org.apache.spark.sql.functions._
   * batch automaton. */
 object IncrementalCep {
 
-  /** Meta sentinel key (kind disambiguates — shares only a bucket). */
-  private val MetaKey = Long.MinValue
+  /** This batch's completed matches — the output shape of every drive
+    * form but [[foldBatchSelect]]. */
+  private val Matches = "k BIGINT, start_tms BIGINT, end_tms BIGINT"
 
-  /** Replay high-water mark under the FoldJobsSpec driver-action budget:
-    * rides the manifest note ([[KeyedStore.readFoldNote]] — ZERO Spark
-    * jobs; committed atomically with the state rows by the fold's one
-    * merge). */
-  private def hwmOf(spark: SparkSession, storePath: String): Option[Long] =
-    KeyedStore.readFoldNote(spark, storePath).map(_("ver").toLong)
+  /** The (k, tms, oid, ty) event projection the typed and SQL folds read. */
+  private def typedEvents(events: DataFrame): DataFrame =
+    events.select(col("k").cast("long").as("k"),
+      col("tms").cast("long").as("tms"), col("oid").cast("long").as("oid"),
+      col("ty").cast("string").as("ty"))
 
-  /** The fold merges' shared note: the replay HWM. */
-  private def hwmNote(batchId: Long): Option[String] =
-    Some(KeyedStore.Note.encode("ver" -> batchId.toString))
+  /** The store-fold skeleton every drive form shares. A replayed batch
+    * (batchId <= the note's high-water mark — a driver metadata read, zero
+    * Spark jobs) returns no matches and touches nothing. Otherwise the
+    * batch pins LAZILY (materialized by the pruned read's bucket-probe
+    * collect; on a fresh store by the merge's stage write), the batch
+    * keys' live state rows (`stateDdl`, one per key) are read
+    * bucket-pruned, and `step(batch, state)` returns the pinned fold frame,
+    * the post-fold state rows (k first, the layout's columns after) and
+    * this batch's matches. State rows and the high-water mark commit in
+    * ONE merge, then expiry self-schedules. */
+  private def foldStore(batch: DataFrame, storePath: String, batchId: Long,
+      numBuckets: Int, layout: String, stateDdl: String, withinMs: Long,
+      expireWatermarkMs: Option[Long], matchesDdl: String = Matches)(
+      step: (DataFrame, DataFrame) => (DataFrame, DataFrame, DataFrame))
+      : DataFrame = {
+    val spark = batch.sparkSession
+    if (StoreFold.replayed(KeyedStore.readFoldNote(spark, storePath), batchId))
+      return StoreFold.empty(spark, matchesDdl)
+    val pinned = batch.localCheckpoint(false)
+    val keys = pinned.select(col("k")).distinct()
+    val state = StoreFold.livePruned(spark, storePath, keys, stateDdl)
+      .join(keys, Seq("k"), "left_semi")
+    val (folded, stateRows, matches) = step(pinned, state)
+    StoreFold.commit(
+      stateRows.select(lit("v").as("kind") +:
+        stateRows.columns.filter(_ != "kind").map(col) :+
+        lit(batchId).as("ver") :+ lit("put").as("op_type"): _*),
+      storePath, keys = Seq("kind", "k"), numBuckets = numBuckets,
+      note = Seq("ver" -> batchId), bucketCols = Seq("k"),
+      layoutId = Some(layout))
+    val out = matches.localCheckpoint(true)
+    graft.util.Blocks.freeCheckpoint(folded)
+    graft.util.Blocks.freeCheckpoint(pinned)
+    // self-scheduled expiry AFTER the commit (the fold's own merge bumped
+    // the generation the cadence keys on)
+    expireWatermarkMs.foreach(w =>
+      maintainExpire(spark, storePath, w, withinMs))
+    out
+  }
 
   /** Fold one batch of events (k, tms, oid, ty) into the automaton state
     * at `storePath` (created on first use) and return THIS batch's
@@ -151,74 +186,41 @@ object IncrementalCep {
     val spark = events.sparkSession
     import spark.implicits._
     val pat = pattern.toIndexedSeq
-    val batch = events.filter(col("ty").isin(pattern.map(_._1).distinct: _*))
-      .select(col("k").cast("long").as("k"),
-        col("tms").cast("long").as("tms"), col("oid").cast("long").as("oid"),
-        col("ty").cast("string").as("ty"))
-      // LAZY pin: the pruned read's bucket-probe collect is the one
-      // materialization (fresh store: the merge's stage write is)
-      .localCheckpoint(false)
-    val keys = batch.select(col("k")).distinct()
-    // LAZY pruned read: a note-rejected replay never probes the store
-    lazy val stored = KeyedStore.readPruned(spark, storePath,
-      keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath)
-    if (hwm.exists(batchId <= _)) {
-      graft.util.Blocks.freeCheckpoint(batch)
-      return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
-    }
-    val state = stored
-      .map(_.filter(col("kind") === "v")
-        .join(keys, Seq("k"), "left_semi")
-        .select(col("k"), col("br").cast("string").as("br"),
-          col("t0").cast("long").as("t0")))
-      .getOrElse(spark.range(0).select(col("id").as("k"),
-        lit(null).cast("string").as("br"), lit(0L).as("t0")))
-      .as[NfaState]
     val within = withinMs
-    val folded = batch.as[SkipEv]
-      .groupByKey(_.k)
-      .cogroupSorted(state.groupByKey(_.k))(
-        col("tms"), col("oid"), col("ty"))() { (k, evs, sts) =>
-        val preds = pat.map { case (t, mn, mx) =>
-          (((e: SkipEv) => e.ty == t), mn, mx) }
-        val stepper = new graft.ops.Cep.NfaStepper[SkipEv](preds,
-          within, _.tms)
-        var (br, t0) = sts.toSeq.headOption
-          .map(s => (decodeBr(s.br), s.t0)).getOrElse((Set.empty[(Int, Int)], 0L))
-        val out = scala.collection.mutable.ListBuffer.empty[SkipOut]
-        evs.foreach { e =>
-          val next = stepper.step(br, t0, e,
-            (s, en) => out += SkipOut("m", k, s, en, 0, 0L, null))
-          br = next._1; t0 = next._2
+    foldStore(
+      typedEvents(events.filter(col("ty").isin(pattern.map(_._1).distinct: _*))),
+      storePath, batchId, numBuckets, "cep-nfa-v1",
+      "k BIGINT, br STRING, t0 BIGINT", withinMs,
+      expireWatermarkMs) { (batch, state) =>
+      val folded = batch.as[SkipEv]
+        .groupByKey(_.k)
+        .cogroupSorted(state.as[NfaState].groupByKey(_.k))(
+          col("tms"), col("oid"), col("ty"))() { (k, evs, sts) =>
+          val preds = pat.map { case (t, mn, mx) =>
+            (((e: SkipEv) => e.ty == t), mn, mx) }
+          val stepper = new graft.ops.Cep.NfaStepper[SkipEv](preds,
+            within, _.tms)
+          var (br, t0) = sts.toSeq.headOption
+            .map(s => (decodeBr(s.br), s.t0)).getOrElse((Set.empty[(Int, Int)], 0L))
+          val out = scala.collection.mutable.ListBuffer.empty[SkipOut]
+          evs.foreach { e =>
+            val next = stepper.step(br, t0, e,
+              (s, en) => out += SkipOut("m", k, s, en, 0, 0L, null))
+            br = next._1; t0 = next._2
+          }
+          out += SkipOut("v", k, 0L, 0L, br.size, if (br.isEmpty) 0L else t0,
+            encodeBr(br))
+          out
         }
-        out += SkipOut("v", k, 0L, 0L, br.size, if (br.isEmpty) 0L else t0,
-          encodeBr(br))
-        out
-      }
-      .toDF("kind", "k", "s", "e", "c", "t0", "br")
-      // LAZY pin: the merge's own stage write is the one materialization —
-      // it still runs BEFORE the merge GCs the read generation
-      .localCheckpoint(false)
-    val stateRows = folded.filter(col("kind") === "v")
-      .select(col("kind"), col("k"), col("c"), col("t0"), col("br"),
-        lit(batchId).as("ver"), lit("put").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKey).as("k"), lit(-1).as("c"), lit(0L).as("t0"),
-      lit(null).cast("string").as("br"), lit(batchId).as("ver"),
-      lit("put").as("op_type"))
-    KeyedStore.merge(stateRows.unionByName(metaRow), storePath,
-      keys = Seq("kind", "k"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("k"),
-      layoutId = Some("cep-nfa-v1"), note = hwmNote(batchId))
-    val out = folded.filter(col("kind") === "m")
-      .select(col("k"), col("s").as("start_tms"), col("e").as("end_tms"))
-      .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(folded)
-    graft.util.Blocks.freeCheckpoint(batch)
-    expireWatermarkMs.foreach(w =>
-      maintainExpire(spark, storePath, w, withinMs))
-    out
+        .toDF("kind", "k", "s", "e", "c", "t0", "br")
+        // LAZY pin: the merge's own stage write is the one materialization —
+        // it still runs BEFORE the merge GCs the read generation
+        .localCheckpoint(false)
+      (folded,
+        folded.filter(col("kind") === "v")
+          .select(col("k"), col("c"), col("t0"), col("br")),
+        typedMatches(folded))
+    }
   }
 
   /** [[foldBatch]] with PREDICATE stages ([[graft.ops.Cep
@@ -307,33 +309,6 @@ object IncrementalCep {
       s"notNext stages must be in 1..${pattern.length - 1}")
     require(notNext.keySet.intersect(nextStages).isEmpty,
       "a stage cannot be both strict and notNext-banned")
-    val spark = events.sparkSession
-    import spark.implicits._
-    // NO type pre-filter: strict adjacency makes every event state-relevant
-    val batch = events
-      .select(col("k").cast("long").as("k"),
-        col("tms").cast("long").as("tms"), col("oid").cast("long").as("oid"),
-        col("ty").cast("string").as("ty"))
-      // LAZY pin: the pruned read's bucket-probe collect is the one
-      // materialization (fresh store: the merge's stage write is)
-      .localCheckpoint(false)
-    val keys = batch.select(col("k")).distinct()
-    // LAZY pruned read: a note-rejected replay never probes the store
-    lazy val stored = KeyedStore.readPruned(spark, storePath,
-      keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath)
-    if (hwm.exists(batchId <= _)) {
-      graft.util.Blocks.freeCheckpoint(batch)
-      return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
-    }
-    val state = stored
-      .map(_.filter(col("kind") === "v")
-        .join(keys, Seq("k"), "left_semi")
-        .select(col("k"), col("st").cast("int").as("__st"),
-          col("t0").cast("long").as("__t0"),
-          col("fr").cast("boolean").as("__fr")))
-      .getOrElse(spark.range(0).select(col("id").as("k"),
-        lit(0).as("__st"), lit(0L).as("__t0"), lit(false).as("__fr")))
     val fold = s"""aggregate(evs,
       named_struct('st', coalesce(__st, 0),
         't0', coalesce(__t0, CAST(0 AS BIGINT)),
@@ -341,31 +316,16 @@ object IncrementalCep {
         'ms', CAST(array() AS array<struct<s: bigint, e: bigint>>)),
       ${graft.ops.Cep.nextFoldStep(pattern, withinMs, nextStages, notNext)},
       acc -> acc)"""
-    val folded = batch.groupBy("k")
-      .agg(sort_array(collect_list(struct(col("tms"), col("oid"), col("ty"))))
-        .as("evs"))
-      .join(state, Seq("k"), "left_outer")
-      .select(col("k"), expr(fold).as("r"))
-      .localCheckpoint(true)
-    val stateRows = folded.select(lit("v").as("kind"), col("k"),
-      col("r.st").as("st"), col("r.st").as("c"), col("r.t0").as("t0"),
-      col("r.fr").as("fr"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKey).as("k"), lit(-1).as("st"), lit(-1).as("c"),
-      lit(0L).as("t0"), lit(false).as("fr"), lit(batchId).as("ver"),
-      lit("put").as("op_type"))
-    KeyedStore.merge(stateRows.unionByName(metaRow), storePath,
-      keys = Seq("kind", "k"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("k"),
-      layoutId = Some("cep-next-v1"), note = hwmNote(batchId))
-    val out = folded.select(col("k"), explode(col("r.ms")).as("m"))
-      .select(col("k"), col("m.s").as("start_tms"), col("m.e").as("end_tms"))
-      .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(folded)
-    graft.util.Blocks.freeCheckpoint(batch)
-    expireWatermarkMs.foreach(w =>
-      maintainExpire(spark, storePath, w, withinMs))
-    out
+    // NO type pre-filter: strict adjacency makes every event state-relevant
+    foldStore(typedEvents(events), storePath, batchId, numBuckets,
+      "cep-next-v1", "k BIGINT, st INT, t0 BIGINT, fr BOOLEAN", withinMs,
+      expireWatermarkMs) { (batch, state) =>
+      val folded = sqlFold(batch, state.toDF("k", "__st", "__t0", "__fr"), fold)
+      (folded,
+        folded.select(col("k"), col("r.st").as("st"), col("r.st").as("c"),
+          col("r.t0").as("t0"), col("r.fr").as("fr")),
+        sqlMatches(folded))
+    }
   }
 
   /** [[foldBatch]]'s NEGATION form ([[graft.ops.Cep.patternMatchesNeg]]'s
@@ -393,35 +353,7 @@ object IncrementalCep {
     require(withinMs > 0, s"withinMs must be positive, got $withinMs")
     require(notBetween.keys.forall(i => i >= 1 && i < pattern.length),
       s"notBetween stages must be in 1..${pattern.length - 1}")
-    val spark = events.sparkSession
-    import spark.implicits._
     val watch = pattern.length
-    val batch = events
-      .filter(col("ty").isin(
-        (pattern ++ notBetween.values.flatten ++ notAfter).distinct: _*))
-      .select(col("k").cast("long").as("k"),
-        col("tms").cast("long").as("tms"), col("oid").cast("long").as("oid"),
-        col("ty").cast("string").as("ty"))
-      // LAZY pin: the pruned read's bucket-probe collect is the one
-      // materialization (fresh store: the merge's stage write is)
-      .localCheckpoint(false)
-    val keys = batch.select(col("k")).distinct()
-    // LAZY pruned read: a note-rejected replay never probes the store
-    lazy val stored = KeyedStore.readPruned(spark, storePath,
-      keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath)
-    if (hwm.exists(batchId <= _)) {
-      graft.util.Blocks.freeCheckpoint(batch)
-      return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
-    }
-    val state = stored
-      .map(_.filter(col("kind") === "v")
-        .join(keys, Seq("k"), "left_semi")
-        .select(col("k"), col("st").cast("int").as("__st"),
-          col("t0").cast("long").as("__t0"),
-          col("te").cast("long").as("__te")))
-      .getOrElse(spark.range(0).select(col("id").as("k"),
-        lit(0).as("__st"), lit(0L).as("__t0"), lit(0L).as("__te")))
     val fold = s"""aggregate(evs,
       named_struct('st', coalesce(__st, 0),
         't0', coalesce(__t0, CAST(0 AS BIGINT)),
@@ -429,33 +361,19 @@ object IncrementalCep {
         'ms', CAST(array() AS array<struct<s: bigint, e: bigint>>)),
       ${graft.ops.Cep.negFoldStep(pattern, withinMs, notBetween, notAfter)},
       acc -> acc)"""
-    val folded = batch.groupBy("k")
-      .agg(sort_array(collect_list(struct(col("tms"), col("oid"), col("ty"))))
-        .as("evs"))
-      .join(state, Seq("k"), "left_outer")
-      .select(col("k"), expr(fold).as("r"))
-      .localCheckpoint(true)
-    val stateRows = folded.select(lit("v").as("kind"), col("k"),
-      col("r.st").as("st"),
-      when(col("r.st") === watch, lit(-1)).otherwise(col("r.st")).as("c"),
-      col("r.t0").as("t0"), col("r.te").as("te"),
-      lit(batchId).as("ver"), lit("put").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKey).as("k"), lit(-1).as("st"), lit(-1).as("c"),
-      lit(0L).as("t0"), lit(0L).as("te"), lit(batchId).as("ver"),
-      lit("put").as("op_type"))
-    KeyedStore.merge(stateRows.unionByName(metaRow), storePath,
-      keys = Seq("kind", "k"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("k"),
-      layoutId = Some("cep-neg-v1"), note = hwmNote(batchId))
-    val out = folded.select(col("k"), explode(col("r.ms")).as("m"))
-      .select(col("k"), col("m.s").as("start_tms"), col("m.e").as("end_tms"))
-      .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(folded)
-    graft.util.Blocks.freeCheckpoint(batch)
-    expireWatermarkMs.foreach(w =>
-      maintainExpire(spark, storePath, w, withinMs))
-    out
+    foldStore(
+      typedEvents(events.filter(col("ty").isin(
+        (pattern ++ notBetween.values.flatten ++ notAfter).distinct: _*))),
+      storePath, batchId, numBuckets, "cep-neg-v1",
+      "k BIGINT, st INT, t0 BIGINT, te BIGINT", withinMs,
+      expireWatermarkMs) { (batch, state) =>
+      val folded = sqlFold(batch, state.toDF("k", "__st", "__t0", "__te"), fold)
+      (folded,
+        folded.select(col("k"), col("r.st").as("st"),
+          when(col("r.st") === watch, lit(-1)).otherwise(col("r.st")).as("c"),
+          col("r.t0").as("t0"), col("r.te").as("te")),
+        sqlMatches(folded))
+    }
   }
 
   /** Emit [[foldBatchNeg]] watches whose window CLOSED banned-free under
@@ -480,38 +398,28 @@ object IncrementalCep {
   def flushBatchNeg(spark: SparkSession, storePath: String,
       pattern: Seq[String], watermarkMs: Long, withinMs: Long,
       batchId: Long, numBuckets: Int = 4): DataFrame = {
-    import spark.implicits._
-    val watch = pattern.length
-    val live = KeyedStore.readActive(spark, storePath) match {
-      case None =>
-        return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
-      case Some(s) => s
-    }
-    val hwm = hwmOf(spark, storePath)
-    require(hwm.forall(batchId > _),
+    val note = KeyedStore.readFoldNote(spark, storePath)
+    if (note.isEmpty) return StoreFold.empty(spark, Matches) // fresh root
+    require(!StoreFold.replayed(note, batchId),
       s"flushBatchNeg batchId $batchId must exceed the stored high-water " +
-        s"mark ${hwm.getOrElse(-1L)} — an equal-or-lower id would tie " +
+        s"mark ${note.fold("-1")(_("ver"))} — an equal-or-lower id would tie " +
         "with live state rows nondeterministically")
-    val due = live.filter(col("kind") === "v" && col("st") === watch &&
+    val due = StoreFold.live(spark, storePath,
+        "k BIGINT, st INT, t0 BIGINT, te BIGINT")
+      .filter(col("st") === pattern.length &&
         lit(watermarkMs) - col("t0") >= withinMs)
       .select(col("k"), col("t0"), col("te"))
       .localCheckpoint(true)
     val out = due.select(col("k"), col("t0").as("start_tms"),
       col("te").as("end_tms")).localCheckpoint(true)
-    if (!due.isEmpty) {
-      val metaRow = spark.range(1).select(lit("m").as("kind"),
-        lit(MetaKey).as("k"), lit(-1).as("st"), lit(-1).as("c"),
-        lit(0L).as("t0"), lit(0L).as("te"), lit(batchId).as("ver"),
-        lit("put").as("op_type"))
-      KeyedStore.merge(
+    if (!due.isEmpty)
+      StoreFold.commit(
         due.select(lit("v").as("kind"), col("k"), lit(0).as("st"),
           lit(0).as("c"), lit(0L).as("t0"), lit(0L).as("te"),
-          lit(batchId).as("ver"), lit("put").as("op_type"))
-          .unionByName(metaRow),
-        storePath, keys = Seq("kind", "k"), seqCols = Seq("ver"),
-        numBuckets = numBuckets, bucketCols = Seq("k"),
-        layoutId = Some("cep-neg-v1"), note = hwmNote(batchId))
-    }
+          lit(batchId).as("ver"), lit("put").as("op_type")),
+        storePath, keys = Seq("kind", "k"), numBuckets = numBuckets,
+        note = Seq("ver" -> batchId), bucketCols = Seq("k"),
+        layoutId = Some("cep-neg-v1"))
     graft.util.Blocks.freeCheckpoint(due)
     out
   }
@@ -540,35 +448,6 @@ object IncrementalCep {
       expireWatermarkMs: Option[Long] = None): DataFrame = {
     require(pattern.nonEmpty, "pattern must not be empty")
     require(withinMs > 0, s"withinMs must be positive, got $withinMs")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val batch = events.filter(col("ty").isin(pattern.distinct: _*))
-      .select(col("k").cast("long").as("k"),
-        col("tms").cast("long").as("tms"), col("oid").cast("long").as("oid"),
-        col("ty").cast("string").as("ty"))
-      // LAZY pin: the pruned read's bucket-probe collect is the one
-      // materialization (fresh store: the merge's stage write is)
-      .localCheckpoint(false)
-    val keys = batch.select(col("k")).distinct()
-    // LAZY pruned read: a note-rejected replay never probes the store
-    lazy val stored = KeyedStore.readPruned(spark, storePath,
-      keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath)
-    if (hwm.exists(batchId <= _)) {
-      graft.util.Blocks.freeCheckpoint(batch)
-      return Seq.empty[(Long, Long, Long, Int, Long, Long, Long)]
-        .toDF("k", "start_tms", "end_tms", "stage_n", "ev_tms", "ev_oid",
-          "m_oid")
-    }
-    val state = stored
-      .map(_.filter(col("kind") === "v")
-        .join(keys, Seq("k"), "left_semi")
-        .select(col("k"), col("st").cast("int").as("__st"),
-          col("t0").cast("long").as("__t0"),
-          col("es").cast("string").as("__es")))
-      .getOrElse(spark.range(0).select(col("id").as("k"),
-        lit(0).as("__st"), lit(0L).as("__t0"),
-        lit(null).cast("string").as("__es")))
     // the SELECT automaton's step — patternMatches' (st, t0) branches
     // with the per-stage (t, o) capture threaded through `es`; one
     // SQL object would be ideal but the capture makes the state shape
@@ -611,41 +490,26 @@ object IncrementalCep {
         WHEN $stageMatch THEN $advance
         ELSE acc END,
       acc -> acc)"""
-    val folded = batch.groupBy("k")
-      .agg(sort_array(collect_list(struct(col("tms"), col("oid"), col("ty"))))
-        .as("evs"))
-      .join(state, Seq("k"), "left_outer")
-      .select(col("k"), expr(fold).as("r"))
-      // LAZY pin: the merge's own stage write is the one materialization —
-      // it still runs BEFORE the merge GCs the read generation
-      .localCheckpoint(false)
-    val stateRows = folded.select(lit("v").as("kind"), col("k"),
-      col("r.st").as("st"), col("r.st").as("c"), col("r.t0").as("t0"),
-      to_json(col("r.es")).as("es"),
-      lit(batchId).as("ver"), lit("put").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKey).as("k"), lit(-1).as("st"), lit(-1).as("c"),
-      lit(0L).as("t0"), lit(null).cast("string").as("es"),
-      lit(batchId).as("ver"), lit("put").as("op_type"))
-    KeyedStore.merge(stateRows.unionByName(metaRow), storePath,
-      keys = Seq("kind", "k"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("k"),
-      layoutId = Some("cep-sel-v1"), note = hwmNote(batchId))
-    val out = folded.select(col("k"), explode(col("r.ms")).as("m"))
-      .select(col("k"),
-        element_at(col("m"), 1).getField("t").as("start_tms"),
-        element_at(col("m"), -1).getField("t").as("end_tms"),
-        element_at(col("m"), 1).getField("o").as("m_oid"),
-        posexplode(col("m")).as(Seq("j", "ev")))
-      .select(col("k"), col("start_tms"), col("end_tms"),
-        (col("j") + 1).as("stage_n"), col("ev.t").as("ev_tms"),
-        col("ev.o").as("ev_oid"), col("m_oid"))
-      .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(folded)
-    graft.util.Blocks.freeCheckpoint(batch)
-    expireWatermarkMs.foreach(w =>
-      maintainExpire(spark, storePath, w, withinMs))
-    out
+    foldStore(typedEvents(events.filter(col("ty").isin(pattern.distinct: _*))),
+      storePath, batchId, numBuckets, "cep-sel-v1",
+      "k BIGINT, st INT, t0 BIGINT, es STRING", withinMs, expireWatermarkMs,
+      matchesDdl = Matches + ", stage_n INT, ev_tms BIGINT, ev_oid BIGINT, " +
+        "m_oid BIGINT") { (batch, state) =>
+      val folded = sqlFold(batch, state.toDF("k", "__st", "__t0", "__es"), fold,
+        eager = false)
+      (folded,
+        folded.select(col("k"), col("r.st").as("st"), col("r.st").as("c"),
+          col("r.t0").as("t0"), to_json(col("r.es")).as("es")),
+        folded.select(col("k"), explode(col("r.ms")).as("m"))
+          .select(col("k"),
+            element_at(col("m"), 1).getField("t").as("start_tms"),
+            element_at(col("m"), -1).getField("t").as("end_tms"),
+            element_at(col("m"), 1).getField("o").as("m_oid"),
+            posexplode(col("m")).as(Seq("j", "ev")))
+          .select(col("k"), col("start_tms"), col("end_tms"),
+            (col("j") + 1).as("stage_n"), col("ev.t").as("ev_tms"),
+            col("ev.o").as("ev_oid"), col("m_oid")))
+    }
   }
 
   /** Typed per-key event row of [[foldBatchSkipNext]]'s cogroup. */
@@ -657,6 +521,28 @@ object IncrementalCep {
     * run's start — see the expiry note on [[foldBatchSkipNext]]). */
   private[streaming] final case class SkipOut(kind: String, k: Long, s: Long, e: Long,
       c: Int, t0: Long, runs: String)
+
+  /** The matches (kind "m" rows) of a typed cogroup fold. */
+  private def typedMatches(folded: DataFrame): DataFrame =
+    folded.filter(col("kind") === "m")
+      .select(col("k"), col("s").as("start_tms"), col("e").as("end_tms"))
+
+  /** A SQL `aggregate` fold: each key's sorted (`fields`) events folded by
+    * `fold` from its `state` row into one struct `r`, pinned (eagerly, or
+    * lazily for the merge's stage write to materialize). */
+  private def sqlFold(batch: DataFrame, state: DataFrame, fold: String,
+      fields: Seq[String] = Seq("tms", "oid", "ty"),
+      eager: Boolean = true): DataFrame =
+    batch.groupBy("k")
+      .agg(sort_array(collect_list(struct(fields.map(col): _*))).as("evs"))
+      .join(state, Seq("k"), "left_outer")
+      .select(col("k"), expr(fold).as("r"))
+      .localCheckpoint(eager)
+
+  /** The matches (`r.ms`) of a SQL fold. */
+  private def sqlMatches(folded: DataFrame): DataFrame =
+    folded.select(col("k"), explode(col("r.ms")).as("m"))
+      .select(col("k"), col("m.s").as("start_tms"), col("m.e").as("end_tms"))
 
   /** Encode/decode the active run set — "st:t0;st:t0;…" in OPEN order
     * (t0 non-decreasing by construction: runs open in event-time order).
@@ -717,73 +603,39 @@ object IncrementalCep {
     val spark = events.sparkSession
     import spark.implicits._
     val pat = pattern.toIndexedSeq
-    val batch = events.filter(col("ty").isin(pattern.distinct: _*))
-      .select(col("k").cast("long").as("k"),
-        col("tms").cast("long").as("tms"), col("oid").cast("long").as("oid"),
-        col("ty").cast("string").as("ty"))
-      // LAZY pin: the pruned read's bucket-probe collect is the one
-      // materialization (fresh store: the merge's stage write is)
-      .localCheckpoint(false)
-    val keys = batch.select(col("k")).distinct()
-    // LAZY pruned read: a note-rejected replay never probes the store
-    lazy val stored = KeyedStore.readPruned(spark, storePath,
-      keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath)
-    if (hwm.exists(batchId <= _)) {
-      graft.util.Blocks.freeCheckpoint(batch)
-      return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
-    }
-    val state = stored
-      .map(_.filter(col("kind") === "v")
-        .join(keys, Seq("k"), "left_semi")
-        .select(col("k"), col("runs").cast("string").as("runs")))
-      .getOrElse(spark.range(0).select(col("id").as("k"),
-        lit(null).cast("string").as("runs")))
-      .as[SkipState]
     val within = withinMs
     val cap = maxActiveRuns
-    val folded = batch.as[SkipEv]
-      .groupByKey(_.k)
-      .cogroupSorted(state.groupByKey(_.k))(
-        col("tms"), col("oid"), col("ty"))() { (k, evs, sts) =>
-        val stepper = new graft.ops.Cep.SkipStepper(pat, within)
-        var runs = sts.toSeq.headOption
-          .map(s => decodeRuns(s.runs)).getOrElse(Vector.empty)
-        val out = scala.collection.mutable.ListBuffer.empty[SkipOut]
-        evs.foreach { e =>
-          runs = stepper.step(runs, e.tms, e.ty,
-            (s, en) => out += SkipOut("m", k, s, en, 0, 0L, null))
+    foldStore(typedEvents(events.filter(col("ty").isin(pattern.distinct: _*))),
+      storePath, batchId, numBuckets, "cep-skip-v1", "k BIGINT, runs STRING",
+      withinMs, expireWatermarkMs) { (batch, state) =>
+      val folded = batch.as[SkipEv]
+        .groupByKey(_.k)
+        .cogroupSorted(state.as[SkipState].groupByKey(_.k))(
+          col("tms"), col("oid"), col("ty"))() { (k, evs, sts) =>
+          val stepper = new graft.ops.Cep.SkipStepper(pat, within)
+          var runs = sts.toSeq.headOption
+            .map(s => decodeRuns(s.runs)).getOrElse(Vector.empty)
+          val out = scala.collection.mutable.ListBuffer.empty[SkipOut]
+          evs.foreach { e =>
+            runs = stepper.step(runs, e.tms, e.ty,
+              (s, en) => out += SkipOut("m", k, s, en, 0, 0L, null))
+          }
+          if (cap > 0 && runs.length > cap) runs = runs.takeRight(cap)
+          // t0 = the YOUNGEST run's start: expire may drop the row only
+          // when every run is timed out (runs open in time order)
+          out += SkipOut("v", k, 0L, 0L, runs.length,
+            runs.lastOption.map(_._2).getOrElse(0L), encodeRuns(runs))
+          out
         }
-        if (cap > 0 && runs.length > cap) runs = runs.takeRight(cap)
-        // t0 = the YOUNGEST run's start: expire may drop the row only
-        // when every run is timed out (runs open in time order)
-        out += SkipOut("v", k, 0L, 0L, runs.length,
-          runs.lastOption.map(_._2).getOrElse(0L), encodeRuns(runs))
-        out
-      }
-      .toDF("kind", "k", "s", "e", "c", "t0", "runs")
-      // LAZY pin: the merge's own stage write is the one materialization —
-      // it still runs BEFORE the merge GCs the read generation
-      .localCheckpoint(false)
-    val stateRows = folded.filter(col("kind") === "v")
-      .select(col("kind"), col("k"), col("c"), col("t0"), col("runs"),
-        lit(batchId).as("ver"), lit("put").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKey).as("k"), lit(-1).as("c"), lit(0L).as("t0"),
-      lit(null).cast("string").as("runs"), lit(batchId).as("ver"),
-      lit("put").as("op_type"))
-    KeyedStore.merge(stateRows.unionByName(metaRow), storePath,
-      keys = Seq("kind", "k"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("k"),
-      layoutId = Some("cep-skip-v1"), note = hwmNote(batchId))
-    val out = folded.filter(col("kind") === "m")
-      .select(col("k"), col("s").as("start_tms"), col("e").as("end_tms"))
-      .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(folded)
-    graft.util.Blocks.freeCheckpoint(batch)
-    expireWatermarkMs.foreach(w =>
-      maintainExpire(spark, storePath, w, withinMs))
-    out
+        .toDF("kind", "k", "s", "e", "c", "t0", "runs")
+        // LAZY pin: the merge's own stage write is the one materialization —
+        // it still runs BEFORE the merge GCs the read generation
+        .localCheckpoint(false)
+      (folded,
+        folded.filter(col("kind") === "v")
+          .select(col("k"), col("c"), col("t0"), col("runs")),
+        typedMatches(folded))
+    }
   }
 
   /** Typed cogroup rows of [[foldBatchConsec]] / [[foldBatchSkipTo]]. */
@@ -840,76 +692,40 @@ object IncrementalCep {
     val spark = events.sparkSession
     import spark.implicits._
     val pat = pattern.toIndexedSeq
-    // NO type pre-filter: any event is state-relevant
-    val batch = events
-      .select(col("k").cast("long").as("k"),
-        col("tms").cast("long").as("tms"), col("oid").cast("long").as("oid"),
-        col("ty").cast("string").as("ty"))
-      // LAZY pin: the pruned read's bucket-probe collect is the one
-      // materialization (fresh store: the merge's stage write is)
-      .localCheckpoint(false)
-    val keys = batch.select(col("k")).distinct()
-    // LAZY pruned read: a note-rejected replay never probes the store
-    lazy val stored = KeyedStore.readPruned(spark, storePath,
-      keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath)
-    if (hwm.exists(batchId <= _)) {
-      graft.util.Blocks.freeCheckpoint(batch)
-      return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
-    }
-    val state = stored
-      .map(_.filter(col("kind") === "v")
-        .join(keys, Seq("k"), "left_semi")
-        .select(col("k"), col("st").cast("int").as("st"),
-          col("c").cast("int").as("c"), col("cl").cast("boolean").as("cl"),
-          col("t0").cast("long").as("t0")))
-      .getOrElse(spark.range(0).select(col("id").as("k"), lit(0).as("st"),
-        lit(0).as("c"), lit(false).as("cl"), lit(0L).as("t0")))
-      .as[ConsecState]
     val within = withinMs
     val consec = consecutive
-    val folded = batch.as[SkipEv]
-      .groupByKey(_.k)
-      .cogroupSorted(state.groupByKey(_.k))(
-        col("tms"), col("oid"), col("ty"))() { (k, evs, sts) =>
-        val preds = pat.map { case (t, mn, mx) =>
-          (((e: SkipEv) => e.ty == t), mn, mx) }
-        val stepper = new graft.ops.Cep.ConsecStepper[SkipEv](preds,
-          within, consec, _.tms)
-        var (st, c, cl, t0) = sts.toSeq.headOption
-          .map(s => (s.st, s.c, s.cl, s.t0)).getOrElse((0, 0, false, 0L))
-        val out = scala.collection.mutable.ListBuffer.empty[ConsecOut]
-        evs.foreach { e =>
-          val next = stepper.step(st, c, cl, t0, e,
-            (s, en) => out += ConsecOut("m", k, s, en, 0, 0, false, 0L))
-          st = next._1; c = next._2; cl = next._3; t0 = next._4
+    // NO type pre-filter: any event is state-relevant
+    foldStore(typedEvents(events), storePath, batchId, numBuckets,
+      "cep-consec-v1", "k BIGINT, st INT, c INT, cl BOOLEAN, t0 BIGINT",
+      withinMs, expireWatermarkMs) { (batch, state) =>
+      val folded = batch.as[SkipEv]
+        .groupByKey(_.k)
+        .cogroupSorted(state.as[ConsecState].groupByKey(_.k))(
+          col("tms"), col("oid"), col("ty"))() { (k, evs, sts) =>
+          val preds = pat.map { case (t, mn, mx) =>
+            (((e: SkipEv) => e.ty == t), mn, mx) }
+          val stepper = new graft.ops.Cep.ConsecStepper[SkipEv](preds,
+            within, consec, _.tms)
+          var (st, c, cl, t0) = sts.toSeq.headOption
+            .map(s => (s.st, s.c, s.cl, s.t0)).getOrElse((0, 0, false, 0L))
+          val out = scala.collection.mutable.ListBuffer.empty[ConsecOut]
+          evs.foreach { e =>
+            val next = stepper.step(st, c, cl, t0, e,
+              (s, en) => out += ConsecOut("m", k, s, en, 0, 0, false, 0L))
+            st = next._1; c = next._2; cl = next._3; t0 = next._4
+          }
+          out += ConsecOut("v", k, 0L, 0L, st, c, cl, t0)
+          out
         }
-        out += ConsecOut("v", k, 0L, 0L, st, c, cl, t0)
-        out
-      }
-      .toDF("kind", "k", "s", "e", "st", "c", "cl", "t0")
-      // LAZY pin: the merge's own stage write is the one materialization —
-      // it still runs BEFORE the merge GCs the read generation
-      .localCheckpoint(false)
-    val stateRows = folded.filter(col("kind") === "v")
-      .select(col("kind"), col("k"), col("st"), col("c"), col("cl"),
-        col("t0"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKey).as("k"), lit(-1).as("st"), lit(-1).as("c"),
-      lit(false).as("cl"), lit(0L).as("t0"), lit(batchId).as("ver"),
-      lit("put").as("op_type"))
-    KeyedStore.merge(stateRows.unionByName(metaRow), storePath,
-      keys = Seq("kind", "k"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("k"),
-      layoutId = Some("cep-consec-v1"), note = hwmNote(batchId))
-    val out = folded.filter(col("kind") === "m")
-      .select(col("k"), col("s").as("start_tms"), col("e").as("end_tms"))
-      .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(folded)
-    graft.util.Blocks.freeCheckpoint(batch)
-    expireWatermarkMs.foreach(w =>
-      maintainExpire(spark, storePath, w, withinMs))
-    out
+        .toDF("kind", "k", "s", "e", "st", "c", "cl", "t0")
+        // LAZY pin: the merge's own stage write is the one materialization —
+        // it still runs BEFORE the merge GCs the read generation
+        .localCheckpoint(false)
+      (folded,
+        folded.filter(col("kind") === "v")
+          .select(col("k"), col("st"), col("c"), col("cl"), col("t0")),
+        typedMatches(folded))
+    }
   }
 
   /** [[foldBatch]]'s SKIP-TO-FIRST/LAST form ([[graft.ops.Cep
@@ -935,74 +751,39 @@ object IncrementalCep {
     val spark = events.sparkSession
     import spark.implicits._
     val pat = pattern.toIndexedSeq
-    val batch = events.filter(col("ty").isin(pattern.distinct: _*))
-      .select(col("k").cast("long").as("k"),
-        col("tms").cast("long").as("tms"), col("oid").cast("long").as("oid"),
-        col("ty").cast("string").as("ty"))
-      // LAZY pin: the pruned read's bucket-probe collect is the one
-      // materialization (fresh store: the merge's stage write is)
-      .localCheckpoint(false)
-    val keys = batch.select(col("k")).distinct()
-    // LAZY pruned read: a note-rejected replay never probes the store
-    lazy val stored = KeyedStore.readPruned(spark, storePath,
-      keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath)
-    if (hwm.exists(batchId <= _)) {
-      graft.util.Blocks.freeCheckpoint(batch)
-      return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
-    }
-    val state = stored
-      .map(_.filter(col("kind") === "v")
-        .join(keys, Seq("k"), "left_semi")
-        .select(col("k"), col("st").cast("int").as("st"),
-          col("t0").cast("long").as("t0"),
-          col("buf").cast("string").as("buf")))
-      .getOrElse(spark.range(0).select(col("id").as("k"), lit(0).as("st"),
-        lit(0L).as("t0"), lit(null).cast("string").as("buf")))
-      .as[SkipToState]
     val within = withinMs
     val sk = skipToStage
-    val folded = batch.as[SkipEv]
-      .groupByKey(_.k)
-      .cogroupSorted(state.groupByKey(_.k))(
-        col("tms"), col("oid"), col("ty"))() { (k, evs, sts) =>
-        val runner = new graft.ops.Cep.SkipToRunner(pat, within, sk)
-        sts.toSeq.headOption.foreach { s =>
-          runner.st = s.st; runner.t0 = s.t0
-          decodeBuf(s.buf).foreach(runner.buf.append)
+    foldStore(typedEvents(events.filter(col("ty").isin(pattern.distinct: _*))),
+      storePath, batchId, numBuckets, "cep-skipto-v1",
+      "k BIGINT, st INT, t0 BIGINT, buf STRING", withinMs,
+      expireWatermarkMs) { (batch, state) =>
+      val folded = batch.as[SkipEv]
+        .groupByKey(_.k)
+        .cogroupSorted(state.as[SkipToState].groupByKey(_.k))(
+          col("tms"), col("oid"), col("ty"))() { (k, evs, sts) =>
+          val runner = new graft.ops.Cep.SkipToRunner(pat, within, sk)
+          sts.toSeq.headOption.foreach { s =>
+            runner.st = s.st; runner.t0 = s.t0
+            decodeBuf(s.buf).foreach(runner.buf.append)
+          }
+          val out = scala.collection.mutable.ListBuffer.empty[SkipToOut]
+          evs.foreach { e =>
+            runner.feed(e.tms, e.oid, e.ty,
+              (s, en) => out += SkipToOut("m", k, s, en, 0, 0, 0L, null))
+          }
+          out += SkipToOut("v", k, 0L, 0L, runner.st, runner.st, runner.t0,
+            encodeBuf(runner.buf))
+          out
         }
-        val out = scala.collection.mutable.ListBuffer.empty[SkipToOut]
-        evs.foreach { e =>
-          runner.feed(e.tms, e.oid, e.ty,
-            (s, en) => out += SkipToOut("m", k, s, en, 0, 0, 0L, null))
-        }
-        out += SkipToOut("v", k, 0L, 0L, runner.st, runner.st, runner.t0,
-          encodeBuf(runner.buf))
-        out
-      }
-      .toDF("kind", "k", "s", "e", "st", "c", "t0", "buf")
-      // LAZY pin: the merge's own stage write is the one materialization —
-      // it still runs BEFORE the merge GCs the read generation
-      .localCheckpoint(false)
-    val stateRows = folded.filter(col("kind") === "v")
-      .select(col("kind"), col("k"), col("st"), col("c"), col("t0"),
-        col("buf"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaKey).as("k"), lit(-1).as("st"), lit(-1).as("c"),
-      lit(0L).as("t0"), lit(null).cast("string").as("buf"),
-      lit(batchId).as("ver"), lit("put").as("op_type"))
-    KeyedStore.merge(stateRows.unionByName(metaRow), storePath,
-      keys = Seq("kind", "k"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("k"),
-      layoutId = Some("cep-skipto-v1"), note = hwmNote(batchId))
-    val out = folded.filter(col("kind") === "m")
-      .select(col("k"), col("s").as("start_tms"), col("e").as("end_tms"))
-      .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(folded)
-    graft.util.Blocks.freeCheckpoint(batch)
-    expireWatermarkMs.foreach(w =>
-      maintainExpire(spark, storePath, w, withinMs))
-    out
+        .toDF("kind", "k", "s", "e", "st", "c", "t0", "buf")
+        // LAZY pin: the merge's own stage write is the one materialization —
+        // it still runs BEFORE the merge GCs the read generation
+        .localCheckpoint(false)
+      (folded,
+        folded.filter(col("kind") === "v")
+          .select(col("k"), col("st"), col("c"), col("t0"), col("buf")),
+        typedMatches(folded))
+    }
   }
 
   /** State EXPIRY — the Flink state-TTL analog for the CEP store, closing
@@ -1083,40 +864,16 @@ object IncrementalCep {
       numBuckets: Int, payload: Seq[(String, org.apache.spark.sql.Column)],
       capture: Seq[String], expireWatermarkMs: Option[Long])
       : DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
     val batch = events
       .select(Seq(col("k").cast("long").as("k"),
         col("tms").cast("long").as("tms"),
         col("oid").cast("long").as("oid")) ++
         payload.map { case (n, c) => c.as(n) }: _*)
-      // LAZY pin: the pruned read's bucket-probe collect is the one
-      // materialization (fresh store: the merge's stage write is)
-      .localCheckpoint(false)
     // capture field → SQL type, from the projected batch (the payload
     // type contract: identical on every fold of one store)
     val capTyped = capture.map(n => n -> batch.schema(n).dataType.catalogString)
     val capDdl = capTyped.map { case (n, t) => s"$n $t" }.mkString(", ")
     val hasCap = capture.nonEmpty
-    val layout = if (hasCap) "cep-iter-v1" else "cep-st-v1"
-    val keys = batch.select(col("k")).distinct()
-    // LAZY pruned read: a note-rejected replay never probes the store
-    lazy val stored = KeyedStore.readPruned(spark, storePath,
-      keys.unionByName(Seq(MetaKey).toDF("k")))
-    val hwm = hwmOf(spark, storePath)
-    if (hwm.exists(batchId <= _)) {
-      graft.util.Blocks.freeCheckpoint(batch)
-      return Seq.empty[(Long, Long, Long)].toDF("k", "start_tms", "end_tms")
-    }
-    val state = stored
-      .map(_.filter(col("kind") === "v")
-        .join(keys, Seq("k"), "left_semi")
-        .select(Seq(col("k"), col("st").cast("int").as("__st"),
-          col("c").cast("int").as("__c"), col("t0").cast("long").as("__t0")) ++
-          (if (hasCap) Seq(col("f0").cast("string").as("__f0")) else Nil): _*))
-      .getOrElse(spark.range(0).select(Seq(col("id").as("k"),
-        lit(0).as("__st"), lit(0).as("__c"), lit(0L).as("__t0")) ++
-        (if (hasCap) Seq(lit(null).cast("string").as("__f0")) else Nil): _*))
     // the SAME step function as the batch operator, seeded from storage;
     // the persisted JSON capture deserializes back into the f0 slot (a
     // key absent from the store seeds a null capture — identical to the
@@ -1128,37 +885,18 @@ object IncrementalCep {
         'ms', CAST(array() AS array<struct<s: bigint, e: bigint>>)),
       ${graft.ops.Cep.timesFoldStepPred(predStages, withinMs, capTyped)},
       acc -> acc)"""
-    val fields = Seq(col("tms"), col("oid")) ++ payload.map(p => col(p._1))
-    val folded = batch.groupBy("k")
-      .agg(sort_array(collect_list(struct(fields: _*))).as("evs"))
-      .join(state, Seq("k"), "left_outer")
-      .select(col("k"), expr(fold).as("r"))
-      // LAZY pin: the merge's own stage write is the one materialization —
-      // it still runs BEFORE the merge GCs the read generation
-      .localCheckpoint(false)
-    val stateRows = folded.select(Seq(lit("v").as("kind"), col("k"),
-      col("r.st").as("st"), col("r.c").as("c"), col("r.t0").as("t0")) ++
-      (if (hasCap) Seq(to_json(col("r.f0")).as("f0")) else Nil) ++
-      Seq(lit(batchId).as("ver"), lit("put").as("op_type")): _*)
-    val metaRow = spark.range(1).select(Seq(lit("m").as("kind"),
-      lit(MetaKey).as("k"), lit(-1).as("st"), lit(-1).as("c"),
-      lit(0L).as("t0")) ++
-      (if (hasCap) Seq(lit(null).cast("string").as("f0")) else Nil) ++
-      Seq(lit(batchId).as("ver"), lit("put").as("op_type")): _*)
-    // ONE commit point: state rows and the high-water mark land together
-    KeyedStore.merge(stateRows.unionByName(metaRow), storePath,
-      keys = Seq("kind", "k"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("k"),
-      layoutId = Some(layout), note = hwmNote(batchId))
-    val out = folded.select(col("k"), explode(col("r.ms")).as("m"))
-      .select(col("k"), col("m.s").as("start_tms"), col("m.e").as("end_tms"))
-      .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(folded)
-    graft.util.Blocks.freeCheckpoint(batch)
-    // self-scheduled expiry AFTER the commit (the fold's own merge bumped
-    // the generation the cadence keys on)
-    expireWatermarkMs.foreach(w =>
-      maintainExpire(spark, storePath, w, withinMs))
-    out
+    val f0 = if (hasCap) Seq("f0") else Nil
+    foldStore(batch, storePath, batchId, numBuckets,
+      if (hasCap) "cep-iter-v1" else "cep-st-v1",
+      "k BIGINT, st INT, c INT, t0 BIGINT" + f0.map(", " + _ + " STRING").mkString,
+      withinMs, expireWatermarkMs) { (batch, state) =>
+      val folded = sqlFold(batch,
+        state.toDF(Seq("k", "__st", "__c", "__t0") ++ f0.map("__" + _): _*),
+        fold, Seq("tms", "oid") ++ payload.map(_._1), eager = false)
+      (folded,
+        folded.select(Seq(col("k"), col("r.st").as("st"), col("r.c").as("c"),
+          col("r.t0").as("t0")) ++ f0.map(_ => to_json(col("r.f0")).as("f0")): _*),
+        sqlMatches(folded))
+    }
   }
 }

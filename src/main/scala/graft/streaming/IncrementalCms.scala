@@ -15,12 +15,13 @@ import org.apache.spark.sql.functions._
   * O(groups·d·w) state regardless of history length — a frequency oracle
   * over an unbounded key stream in fixed space.
   *
-  * (d, w) are the sketch's identity — pinned in a meta row on first fold;
+  * (d, w) are the sketch's identity — pinned in the manifest note on
+  * first fold;
   * a fold with different parameters fails fast (cells are `r·w + h mod w`,
   * so mixing widths silently corrupts the table).
   *
   * Replay safety is the counting-sketch contract ([[IncrementalHist]]
-  * verbatim): `batchId` is the `ver` seq, the meta row records the
+  * verbatim): `batchId` is the `ver` seq, the manifest note records the
   * high-water mark on every fold, and a replayed fold returns the current
   * cell table without touching the store.
   *
@@ -28,17 +29,6 @@ import org.apache.spark.sql.functions._
   * over the BATCH, a store read, and a bucketed upsert of ONLY the cells
   * the batch touched. */
 object IncrementalCms {
-
-  private def liveRows(spark: SparkSession, storePath: String): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("g"), col("cell"), col("ct"),
-          col("d"), col("w"), col("ver")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, String, Long, Long, Long, Long, Long)]
-          .toDF("kind", "g", "cell", "ct", "d", "w", "ver")
-      }
 
   /** Fold one micro-batch into the sketch at `storePath` (created on first
     * use, (d, w) pinned then) and return the updated cell table
@@ -57,22 +47,13 @@ object IncrementalCms {
       numBuckets: Int = 4): DataFrame = {
     require(d >= 1 && w >= 2, s"need d >= 1 hash rows and w >= 2, got ($d, $w)")
     val spark = batch.sparkSession
-    val live = liveRows(spark, storePath).localCheckpoint(false)
-    // meta rides the manifest note (zero Spark jobs)
-    val meta = KeyedStore.readFoldNote(spark, storePath)
-      .map(n => (n("d").toLong, n("w").toLong, n("ver").toLong))
-    meta.foreach { case (md, mw, _) =>
-      require(md == d && mw == w,
-        s"store $storePath is a (d=$md, w=$mw) " +
-          s"sketch; fold passed (d=$d, w=$w) — the parameters are the " +
-          "sketch's identity")
-    }
-    val cur = live.filter(col("kind") === "v")
-    if (meta.exists(m => batchId <= m._3)) {
+    val note = StoreFold.pin(spark, storePath, "count-min sketch",
+      "d" -> d, "w" -> w)
+    val cur = readCells(spark, storePath).localCheckpoint(false)
+    if (StoreFold.replayed(note, batchId)) {
       // replay: current state IS the post-batch state
-      val out = cur.select(col("g"), col("cell"), col("ct"))
-        .localCheckpoint(true)
-      graft.util.Blocks.freeCheckpoint(live)
+      val out = cur.localCheckpoint(true)
+      graft.util.Blocks.freeCheckpoint(cur)
       return out
     }
     val batchCts = graft.ext.Profile.cmsCells(
@@ -81,8 +62,7 @@ object IncrementalCms {
       .withColumnRenamed("ct", "bct")
     // bin-wise ADD, writing only the touched (g, cell) rows
     val changed = batchCts
-      .join(cur.select(col("g"), col("cell"), col("ct")), Seq("g", "cell"),
-        "left_outer")
+      .join(cur, Seq("g", "cell"), "left_outer")
       .select(lit("v").as("kind"), col("g"), col("cell"),
         (coalesce(col("ct"), lit(0L)) + col("bct")).as("ct"),
         lit(d.toLong).as("d"), lit(w.toLong).as("w"),
@@ -91,41 +71,30 @@ object IncrementalCms {
       // (it runs before the merge GCs the read generation, so the pin
       // still precedes the mutation the eager form guarded against)
       .localCheckpoint(false)
-    val metaRow = spark.range(1).select(lit("m").as("kind"), lit("").as("g"),
-      lit(-1L).as("cell"), lit(0L).as("ct"), lit(d.toLong).as("d"),
-      lit(w.toLong).as("w"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    KeyedStore.merge(changed.unionByName(metaRow), storePath,
-      keys = Seq("kind", "g", "cell"), seqCols = Seq("ver"),
+    StoreFold.commit(changed, storePath, keys = Seq("kind", "g", "cell"),
       numBuckets = numBuckets,
-      note = Some(KeyedStore.Note.encode(
-        "d" -> d.toString, "w" -> w.toString, "ver" -> batchId.toString)))
-    val out = cur.select(col("g"), col("cell"), col("ct"))
+      note = Seq("d" -> d, "w" -> w, "ver" -> batchId))
+    val out = cur
       .join(changed.select(col("g"), col("cell")), Seq("g", "cell"),
         "left_anti")
       .unionByName(changed.select(col("g"), col("cell"), col("ct")))
       .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(live)
+    graft.util.Blocks.freeCheckpoint(cur)
     graft.util.Blocks.freeCheckpoint(changed)
     out
   }
 
   /** The current cell table at `storePath` without folding. */
   def readCells(spark: SparkSession, storePath: String): DataFrame =
-    liveRows(spark, storePath).filter(col("kind") === "v")
-      .select(col("g"), col("cell"), col("ct"))
+    StoreFold.live(spark, storePath, "g STRING, cell BIGINT, ct BIGINT")
 
   /** Point estimates for `probes` (g, key rows) against the store — the
-    * (d, w) identity is read from the meta row. */
+    * (d, w) identity is read from the manifest note (zero jobs). */
   def estimate(spark: SparkSession, storePath: String,
       probes: DataFrame): DataFrame = {
-    val live = liveRows(spark, storePath)
-    // identity rides the manifest note (zero jobs)
-    val meta = KeyedStore.readFoldNote(spark, storePath)
-      .map(n => (n("d").toLong, n("w").toLong))
-    require(meta.nonEmpty, s"store $storePath has no folds yet")
-    graft.ext.Profile.cmsEstimate(
-      live.filter(col("kind") === "v").select(col("g"), col("cell"), col("ct")),
-      probes, Seq("g"), col("key"),
-      meta.get._1.toInt, meta.get._2.toInt)
+    val note = KeyedStore.readFoldNote(spark, storePath)
+    require(note.nonEmpty, s"store $storePath has no folds yet")
+    graft.ext.Profile.cmsEstimate(readCells(spark, storePath),
+      probes, Seq("g"), col("key"), note.get("d").toInt, note.get("w").toInt)
   }
 }

@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
   * streams with churning key sets. Decay applies per FOLD (the caller's
   * clock is the fold cadence; fold empty batches to advance time).
   *
-  * Replay safety is the counting stance: a meta row records the
+  * Replay safety is the counting stance: the manifest note records the
   * high-water mark and a replayed fold returns current weights without
   * touching the store (halving twice would double-decay — the exact
   * failure the HWM exists to prevent). `unit` is part of the store's
-  * identity — pinned in the meta row, mismatched folds fail fast (a
+  * identity — pinned in the note, mismatched folds fail fast (a
   * changed unit would silently mix weight scales). Per-fold cost: one map-side-
   * combined batch count + a full-store halving rewrite (every live
   * weight changes every fold by design — unlike the additive sketches,
@@ -34,19 +34,9 @@ import org.apache.spark.sql.functions._
   * rewrite is recency-bounded, not corpus-bounded). */
 object IncrementalDecay {
 
-  private def live(spark: SparkSession, storePath: String): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("key"), col("w"), col("ver")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, String, Long, Long)].toDF("kind", "key", "w", "ver")
-      }
-
   /** The current decayed weights without folding (empty if never run). */
   def readWeights(spark: SparkSession, storePath: String): DataFrame =
-    live(spark, storePath)
-      .filter(col("kind") === "v").select(col("key"), col("w"))
+    StoreFold.live(spark, storePath, "key STRING, w BIGINT")
 
   /** Fold one batch (decay everything, add the batch's counts) and return
     * the updated (key, w) weights. */
@@ -54,33 +44,19 @@ object IncrementalDecay {
       batchId: Long, unit: Long = 1000000L, numBuckets: Int = 4): DataFrame = {
     require(unit >= 1, s"unit must be >= 1, got $unit")
     val spark = batch.sparkSession
+    val note = StoreFold.pin(spark, storePath, "decayed-count table",
+      "unit" -> unit)
     // LAZY pin: the first action over it is the one materialization
-    val cur = live(spark, storePath).localCheckpoint(false)
-    // (HWM, unit) ride the manifest note — zero Spark jobs
-    val meta = KeyedStore.readFoldNote(spark, storePath)
-      .map(d => (d("ver").toLong, d("unit").toLong))
-    // unit is part of the store's identity (the IncrementalHist frame
-    // contract): a changed unit would silently mix weight scales across
-    // folds — fail fast instead. Free the pinned read BEFORE throwing — a
-    // guarded rejection must not leak store-sized blocks.
-    meta.filter(_._2 != unit).foreach { m =>
-      graft.util.Blocks.freeCheckpoint(cur)
-      throw new IllegalArgumentException(
-        s"store $storePath decays at unit ${m._2}; fold passed " +
-          s"unit = $unit — unit is part of the store's identity")
-    }
-    val hwm = meta.map(_._1)
-    if (hwm.exists(batchId <= _)) {
-      val out = cur.filter(col("kind") === "v").select(col("key"), col("w"))
-        .localCheckpoint(true)
+    val cur = readWeights(spark, storePath).localCheckpoint(false)
+    if (StoreFold.replayed(note, batchId)) {
+      val out = cur.localCheckpoint(true)
       graft.util.Blocks.freeCheckpoint(cur)
       return out
     }
     val counts = batch.select(keyCol.cast("string").as("key"))
       .filter(col("key").isNotNull)
       .groupBy("key").agg(count(lit(1)).as("__c"))
-    val merged = cur.filter(col("kind") === "v")
-      .select(col("key"), col("w"))
+    val merged = cur
       .join(counts, Seq("key"), "full_outer")
       // integer floor halving (`div`, not `/` — long `/` is float division)
       .select(col("key"), (expr("coalesce(w, 0L) div 2") +
@@ -91,17 +67,12 @@ object IncrementalDecay {
     val dels = merged.filter(col("w") <= 0)
       .select(lit("v").as("kind"), col("key"), lit(0L).as("w"),
         lit(batchId).as("ver"), lit("delete").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit("").as("key"), lit(unit).as("w"), lit(batchId).as("ver"),
-      lit("put").as("op_type"))
-    val changed = puts.unionByName(dels).unionByName(metaRow)
+    val changed = puts.unionByName(dels)
       .localCheckpoint(true) // pin: the returned frame derives from it
-    KeyedStore.merge(changed, storePath, keys = Seq("kind", "key"),
-      seqCols = Seq("ver"), numBuckets = numBuckets,
-      bucketCols = Seq("kind", "key"),
-      note = Some(KeyedStore.Note.encode(
-        "ver" -> batchId.toString, "unit" -> unit.toString)))
-    val out = changed.filter(col("kind") === "v" && col("op_type") === "put")
+    StoreFold.commit(changed, storePath, keys = Seq("kind", "key"),
+      numBuckets = numBuckets, note = Seq("ver" -> batchId, "unit" -> unit),
+      bucketCols = Seq("kind", "key"))
+    val out = changed.filter(col("op_type") === "put")
       .select(col("key"), col("w")).localCheckpoint(true)
     graft.util.Blocks.freeCheckpoint(changed)
     graft.util.Blocks.freeCheckpoint(cur)

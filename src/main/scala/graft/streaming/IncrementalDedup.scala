@@ -109,19 +109,15 @@ object IncrementalDedup {
     // lie (ADVICE r14).
     val noted = KeyedStore.readNote(spark, storePath)
       .map(KeyedStore.Note.decode).filter(_.contains("delver"))
-    noted.foreach { d =>
-      val hwm = d("delver").toLong
-      if (batchId == hwm) return d("deln").toLong
-      if (batchId < hwm) return 0L
-    }
+    if (StoreFold.replayed(noted, batchId, key = "delver"))
+      return noted.filter(_("delver").toLong == batchId).fold(0L)(_("deln").toLong)
     // set semantics: the same content listed twice erases once
     val fps = batch.select(fpCol.as("fp")).distinct()
       // LAZY pin: the pruned read's bucket-probe collect materializes it
       .localCheckpoint(false)
     val live = KeyedStore.readPruned(spark, storePath, fps)
       .map(df => liveFps(df).select(col("fp")))
-      .getOrElse(fps.limit(0))
-    val missing = fps.join(live, Seq("fp"), "left_anti")
+    val missing = live.fold(fps)(fps.join(_, Seq("fp"), "left_anti"))
       .limit(3).collect().map(_.get(0))
     require(missing.isEmpty,
       s"deleteBatch: fingerprints ${missing.mkString(", ")}… are not live " +
@@ -179,25 +175,14 @@ object IncrementalChunkDedup {
 
   private val Layout = Some("chunk-rc-v1")
 
+  /** Live (fp, cnt, fb) rows of the `probe` fingerprints' buckets. The
+    * read-path layout guard names the layout: the merge-time stamp check
+    * never runs if the caller only ever probes a pre-r15 presence-layout
+    * store, whose rows lack the refcount columns. */
   private def liveRows(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, probe: DataFrame): Option[DataFrame] =
-    KeyedStore.readPruned(spark, storePath, probe).map { df =>
-      // read-path layout guard: the merge-time stamp check never runs if
-      // the caller only ever probes a pre-r15 presence-layout store, and
-      // the filter below would then fail with a cryptic unresolved-column
-      // error instead of the documented rebuild instruction
-      if (!Seq("op_type", "cnt", "fb").forall(df.columns.contains))
-        throw KeyedStore.rebuildError(storePath, "predates the refcounted " +
-          s"chunk layout '${Layout.get}' (rows carry " +
-          s"${df.columns.mkString(", ")}) — its presence rows cannot back " +
-          "reference counting")
-      df.filter(col("op_type") =!= "delete")
-        .select(col("fp"), col("cnt"), col("fb"))
-    }
-
-  private def hwmNote(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): Map[String, String] =
-    KeyedStore.readFoldNote(spark, storePath).getOrElse(Map.empty)
+      storePath: String, probe: DataFrame): DataFrame =
+    StoreFold.livePruned(spark, storePath, probe,
+      "fp BIGINT, cnt BIGINT, fb BIGINT", kind = None, layout = Layout)
 
   /** Chunk one micro-batch, screen the chunk fingerprints against the
     * store at `storePath` (creating it on first use), add the batch's
@@ -232,15 +217,12 @@ object IncrementalChunkDedup {
       .localCheckpoint(true)
     // pruned read: only the store buckets this batch's fingerprints hash
     // into are opened — O(batch) file IO at any store size
-    val seen = liveRows(spark, storePath, chunks.select(col("fp")).distinct())
-    val hwm = hwmNote(spark, storePath).get("ver").map(_.toLong)
-    if (hwm.exists(batchId <= _)) {
+    val s = liveRows(spark, storePath, chunks.select(col("fp")).distinct())
+    if (StoreFold.replayed(KeyedStore.readFoldNote(spark, storePath), batchId)) {
       // replay: output from the committed store, counts untouched — fb
       // marks the fingerprints THIS batch stored (their bytes must be
       // re-written by the caller); fingerprints a LATER erase dropped
       // read as unseen-but-unstored (erasure must not resurrect here)
-      val s = seen.getOrElse(chunks.select(col("fp")).limit(0)
-        .withColumn("cnt", lit(0L)).withColumn("fb", lit(0L)))
       val out = chunks.join(s.select(col("fp"), col("fb")), Seq("fp"), "left_outer")
         .withColumn("stored",
           (coalesce(col("fb"), lit(Long.MinValue)) === batchId &&
@@ -251,8 +233,6 @@ object IncrementalChunkDedup {
       graft.util.Blocks.freeCheckpoint(chunks)
       return out
     }
-    val s = seen.getOrElse(chunks.select(col("fp")).limit(0)
-      .withColumn("cnt", lit(0L)).withColumn("fb", lit(0L)))
     val out = chunks
       .join(s.select(col("fp"), lit(1).as("__seen")), Seq("fp"), "left_outer")
       .withColumn("stored",
@@ -277,10 +257,9 @@ object IncrementalChunkDedup {
       // LAZY pin: the merge's own stage write is the one materialization
       .localCheckpoint(false)
     if (!upserts.isEmpty)
-      KeyedStore.merge(upserts, storePath, keys = Seq("fp"),
-        seqCols = Seq("ver"), numBuckets = numBuckets,
-        bucketCols = Seq("fp"), layoutId = Layout,
-        note = Some(KeyedStore.Note.encode("ver" -> batchId.toString)))
+      StoreFold.commit(upserts, storePath, keys = Seq("fp"),
+        numBuckets = numBuckets, note = Seq("ver" -> batchId),
+        bucketCols = Seq("fp"), layoutId = Layout)
     graft.util.Blocks.freeCheckpoint(upserts)
     graft.util.Blocks.freeCheckpoint(chunks)
     out
@@ -317,21 +296,17 @@ object IncrementalChunkDedup {
       textCol: Column, batchId: Long, window: Int = 3, divisor: Int = 16,
       numBuckets: Int = 16): Long = {
     val spark = batch.sparkSession
-    val d = hwmNote(spark, storePath)
-    d.get("ver").map(_.toLong).foreach { hwm =>
-      if (batchId <= hwm)
-        return if (d.get("delver").map(_.toLong).contains(batchId))
-          d("deln").toLong else 0L
-    }
+    val note = KeyedStore.readFoldNote(spark, storePath)
+    if (StoreFold.replayed(note, batchId))
+      return note.filter(_.get("delver").map(_.toLong).contains(batchId))
+        .fold(0L)(_("deln").toLong)
     val chunks = graft.ext.TextStats
       .cdcChunks(batch, idCol, textCol, window, divisor)
       .localCheckpoint(true) // feeds the refs agg + nothing else re-runs
     val refs = chunks.groupBy(col("fp")).agg(count(lit(1)).as("__refs"))
       // LAZY pin: the pruned read's bucket-probe collect materializes it
       .localCheckpoint(false)
-    val s = liveRows(spark, storePath, refs)
-      .getOrElse(refs.select(col("fp")).limit(0)
-        .withColumn("cnt", lit(0L)).withColumn("fb", lit(0L)))
+    val s = liveRows(spark, storePath, refs.select(col("fp")))
     val dec = refs.join(s, Seq("fp"), "left_outer")
       .localCheckpoint(true) // feeds the guard, the drop count, the merge
     val bad = dec.filter(col("cnt").isNull || col("cnt") < col("__refs"))
@@ -343,16 +318,15 @@ object IncrementalChunkDedup {
         "a double delete (erase the chunk index BEFORE the corpus drops " +
         "the text)")
     val dropped = dec.filter(col("cnt") === col("__refs")).count()
-    KeyedStore.merge(
+    StoreFold.commit(
       dec.select(col("fp"),
         (col("cnt") - col("__refs")).as("cnt"), col("fb"),
         lit(batchId).as("ver"),
         when(col("cnt") === col("__refs"), lit("delete"))
           .otherwise(lit("put")).as("op_type")),
-      storePath, keys = Seq("fp"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("fp"), layoutId = Layout,
-      note = Some(KeyedStore.Note.encode("ver" -> batchId.toString,
-        "delver" -> batchId.toString, "deln" -> dropped.toString)))
+      storePath, keys = Seq("fp"), numBuckets = numBuckets,
+      note = Seq("ver" -> batchId, "delver" -> batchId, "deln" -> dropped),
+      bucketCols = Seq("fp"), layoutId = Layout)
     // zero-count tombstones compact on the amortized cadence: an absent
     // fingerprint reads exactly as a tombstoned one (unseen — a re-ingest
     // reseeds it), and replay safety rides the note, which compaction

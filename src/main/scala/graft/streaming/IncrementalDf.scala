@@ -24,45 +24,32 @@ import org.apache.spark.sql.functions._
   * Contract: each document id folds ONCE (the [[IncrementalDedup]]
   * assumption — re-ingested docs should pass the exact-dedup store first);
   * replay of a whole batch is safe via the counting-sketch protocol
-  * (`batchId` as the `ver` seq, a meta row as the high-water mark, a
-  * replayed fold returns current stats without touching the store).
+  * (`batchId` as the `ver` seq, the manifest note as the high-water mark,
+  * a replayed fold returns current stats without touching the store).
   *
   * State: one row per distinct term ever seen (Heaps-law bounded — the
-  * vocabulary grows ~√corpus, not linearly) + one corpus row + one meta
-  * row. The corpus row carries the RUNNING vocabulary size (`nt`), so no
-  * read path ever counts the term table. Store access is bucket-pruned
-  * throughout (the [[IncrementalScd2]] pattern, buckets keyed by `term`):
-  * a fold reads only the batch terms' buckets + the corpus/meta bucket,
-  * [[readDf]] reads only the query terms' buckets, [[readStats]] one
-  * bucket — a million-term index costs a fold the same file reads as a
+  * vocabulary grows ~√corpus, not linearly). The corpus scalars (n_docs,
+  * sum_dl and the RUNNING vocabulary size `nt`) ride the manifest note,
+  * so no read path ever counts the term table. Store access is
+  * bucket-pruned throughout (the [[IncrementalScd2]] pattern, buckets
+  * keyed by `term`): a fold reads only the batch terms' buckets,
+  * [[readDf]] reads only the query terms' buckets, [[readStats]] none —
+  * a million-term index costs a fold the same file reads as a
   * thousand-term one. Per-fold cost: one batch tokenize + distinct, the
   * pruned read, and a bucketed upsert of only the terms the batch
   * touched. */
 object IncrementalDf {
 
-  private val Cols =
-    Seq("kind", "term", "df", "n", "sdl", "nt", "ver", "op_type")
+  /** Live (term, df) rows of the `terms` probe's buckets. */
+  private def termDf(spark: SparkSession, storePath: String,
+      terms: DataFrame): DataFrame =
+    StoreFold.livePruned(spark, storePath, terms, "term STRING, df BIGINT")
 
-  private def prunedLive(spark: SparkSession, storePath: String,
-      probe: DataFrame): Option[DataFrame] =
-    KeyedStore.readPruned(spark, storePath, probe)
-      .map(_.filter(col("op_type") =!= "delete").select(Cols.map(col): _*))
-
-  private def metaProbe(spark: SparkSession): DataFrame = {
-    // LocalRelation on purpose (not range(1).select): readPruned's
-    // driver-local fast path then resolves the probe's bucket with ZERO
-    // Spark jobs (Range does not fold to a LocalRelation)
-    import spark.implicits._
-    Seq("").toDF("term")
-  }
-
-  /** (n_docs, sum_dl, n_terms, hwm) — the manifest note (ZERO Spark
-    * jobs); zeros and no HWM on a fresh root. */
-  private def corpusRow(spark: SparkSession,
-      storePath: String): (Long, Long, Long, Option[Long]) =
-    KeyedStore.readFoldNote(spark, storePath).map { d =>
-      (d("n").toLong, d("sdl").toLong, d("nt").toLong, Some(d("ver").toLong))
-    }.getOrElse((0L, 0L, 0L, None))
+  /** (n_docs, sum_dl, n_terms) from the manifest note (ZERO Spark
+    * jobs); zeros on a fresh root. */
+  private def corpus(note: Option[Map[String, String]]): (Long, Long, Long) =
+    note.map(d => (d("n").toLong, d("sdl").toLong, d("nt").toLong))
+      .getOrElse((0L, 0L, 0L))
 
   private def statsFrame(spark: SparkSession, n: Long, sdl: Long,
       nt: Long): DataFrame =
@@ -75,6 +62,11 @@ object IncrementalDf {
   def mergeBatch(batch: DataFrame, storePath: String, idCol: Column,
       textCol: Column, batchId: Long, numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
+    // corpus scalars + HWM ride the manifest note (zero Spark jobs)
+    val note = KeyedStore.readFoldNote(spark, storePath)
+    val (n0, sdl0, nt0) = corpus(note)
+    // replay: current stats, store untouched (literal-only frame)
+    if (StoreFold.replayed(note, batchId)) return statsFrame(spark, n0, sdl0, nt0)
     val toks = batch.select(idCol.as("doc_id"),
         graft.ext.TextStats.toks(textCol).as("__toks"))
       // LAZY pin: batchDf's eager checkpoint materializes it; one
@@ -85,23 +77,8 @@ object IncrementalDf {
       .groupBy("term").agg(count(lit(1)).as("bdf"))
       .localCheckpoint(true) // feeds the probe, the df join, the nt anti
     // ONE pruned read serves the whole fold: batch terms' buckets (df
-    // upsert + new-vocabulary anti-join can only match there); the probe
-    // still carries the corpus/meta key (term = ""), which no reader needs
-    // since the corpus scalars ride the note
-    val probe = batchDf.select(col("term"))
-      .unionByName(metaProbe(spark))
-    val pruned = prunedLive(spark, storePath, probe)
-    // corpus scalars + HWM ride the manifest note (zero Spark jobs)
-    val (n0, sdl0, nt0, hwm) = corpusRow(spark, storePath)
-    if (hwm.exists(batchId <= _)) { // replay: current stats, store untouched
-      graft.util.Blocks.freeCheckpoint(batchDf)
-      graft.util.Blocks.freeCheckpoint(toks)
-      // literal-only frame: nothing to pin
-      return statsFrame(spark, n0, sdl0, nt0)
-    }
-    val cur = pruned.map(_.filter(col("kind") === "v")
-        .select(col("term"), col("df")))
-      .getOrElse(batchDf.select(col("term"), lit(0L).as("df")).limit(0))
+    // upsert + new-vocabulary anti-join can only match there)
+    val cur = termDf(spark, storePath, batchDf.select(col("term")))
     val vRows = batchDf.join(cur, Seq("term"), "left_outer")
       .select(lit("v").as("kind"), col("term"),
         (coalesce(col("df"), lit(0L)) + col("bdf")).as("df"),
@@ -122,25 +99,24 @@ object IncrementalDf {
         "re-ingested docs through IncrementalDedup upstream")
     val (n1, sdl1, nt1) = (n0 + bStats.getLong(0), sdl0 + bStats.getLong(2),
       nt0 + freshTerms)
-    def row(kind: String, n: Long, sdl: Long, nt: Long) =
-      spark.range(1).select(lit(kind).as("kind"), lit("").as("term"),
-        lit(0L).as("df"), lit(n).as("n"), lit(sdl).as("sdl"),
-        lit(nt).as("nt"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    val changed = vRows.unionByName(row("c", n1, sdl1, nt1))
-      .unionByName(row("m", 0L, 0L, 0L))
-      // LAZY pin: the merge's own stage write is the one materialization
-      .localCheckpoint(false)
-    KeyedStore.merge(changed, storePath,
-      keys = Seq("kind", "term"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("term"),
-      note = Some(KeyedStore.Note.encode(
-        "n" -> n1.toString, "sdl" -> sdl1.toString, "nt" -> nt1.toString,
-        "ver" -> batchId.toString)))
-    graft.util.Blocks.freeCheckpoint(changed)
+    commitTerms(vRows, storePath, numBuckets, n1, sdl1, nt1, batchId)
     graft.util.Blocks.freeCheckpoint(batchDf)
     graft.util.Blocks.freeCheckpoint(toks)
     // literal-only frame: nothing to pin
     statsFrame(spark, n1, sdl1, nt1)
+  }
+
+  /** The fold's one merge: the changed term rows, with the corpus
+    * scalars + HWM in the note. */
+  private def commitTerms(vRows: DataFrame, storePath: String,
+      numBuckets: Int, n: Long, sdl: Long, nt: Long, batchId: Long): Unit = {
+    // LAZY pin: the merge's own stage write is the one materialization
+    val changed = vRows.localCheckpoint(false)
+    StoreFold.commit(changed, storePath, keys = Seq("kind", "term"),
+      numBuckets = numBuckets,
+      note = Seq("n" -> n, "sdl" -> sdl, "nt" -> nt, "ver" -> batchId),
+      bucketCols = Seq("term"))
+    graft.util.Blocks.freeCheckpoint(changed)
   }
 
   /** CDC DELETE half for the BM25 index (round 13 — the
@@ -171,6 +147,11 @@ object IncrementalDf {
   def deleteBatch(batch: DataFrame, storePath: String, idCol: Column,
       textCol: Column, batchId: Long, numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
+    // corpus scalars + HWM ride the manifest note (zero Spark jobs)
+    val note = KeyedStore.readFoldNote(spark, storePath)
+    val (n0, sdl0, nt0) = corpus(note)
+    // replay: current stats, store untouched (literal-only frame)
+    if (StoreFold.replayed(note, batchId)) return statsFrame(spark, n0, sdl0, nt0)
     val toks = batch.select(idCol.as("doc_id"),
         graft.ext.TextStats.toks(textCol).as("__toks"))
       // LAZY pin: batchDf's eager checkpoint materializes it
@@ -179,18 +160,7 @@ object IncrementalDf {
       .select(col("doc_id"), explode(col("__toks")).as("term")).distinct()
       .groupBy("term").agg(count(lit(1)).as("bdf"))
       .localCheckpoint(true) // feeds the probe, the guard, and the decrement
-    val probe = batchDf.select(col("term"))
-      .unionByName(metaProbe(spark))
-    val pruned = prunedLive(spark, storePath, probe)
-    val (n0, sdl0, nt0, hwm) = corpusRow(spark, storePath)
-    if (hwm.exists(batchId <= _)) { // replay: current stats, store untouched
-      graft.util.Blocks.freeCheckpoint(batchDf)
-      graft.util.Blocks.freeCheckpoint(toks)
-      return statsFrame(spark, n0, sdl0, nt0)
-    }
-    val cur = pruned.map(_.filter(col("kind") === "v")
-        .select(col("term"), col("df")))
-      .getOrElse(batchDf.select(col("term"), lit(0L).as("df")).limit(0))
+    val cur = termDf(spark, storePath, batchDf.select(col("term")))
     val dec = batchDf.join(cur, Seq("term"), "left_outer")
     // the enforceable half of the contract: a term the store lacks (or
     // holds fewer docs of) proves an unfolded doc or drifted text
@@ -226,20 +196,7 @@ object IncrementalDf {
         "once; dedup the delete batch by doc id")
     val (n1, sdl1, nt1) = (n0 - bStats.getLong(0), sdl0 - bStats.getLong(2),
       nt0 - zeroed)
-    def row(kind: String, n: Long, sdl: Long, nt: Long) =
-      spark.range(1).select(lit(kind).as("kind"), lit("").as("term"),
-        lit(0L).as("df"), lit(n).as("n"), lit(sdl).as("sdl"),
-        lit(nt).as("nt"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    val changed = vRows.unionByName(row("c", n1, sdl1, nt1))
-      .unionByName(row("m", 0L, 0L, 0L))
-      // LAZY pin: the merge's own stage write is the one materialization
-      .localCheckpoint(false)
-    KeyedStore.merge(changed, storePath,
-      keys = Seq("kind", "term"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("term"),
-      note = Some(KeyedStore.Note.encode(
-        "n" -> n1.toString, "sdl" -> sdl1.toString, "nt" -> nt1.toString,
-        "ver" -> batchId.toString)))
+    commitTerms(vRows, storePath, numBuckets, n1, sdl1, nt1, batchId)
     // self-scheduled tombstone maintenance (round 14, VERDICT r13 item 6):
     // a df-reached-0 tombstone is safe to drop — the HWM serializes folds
     // (no late lower-seq put to resurrect), and an absent term reads
@@ -247,7 +204,6 @@ object IncrementalDf {
     // reseeds from 0, readDf returns 0) — so a delete-heavy index
     // compacts itself and reads stay O(live terms).
     KeyedStore.maintain(spark, storePath)
-    graft.util.Blocks.freeCheckpoint(changed)
     graft.util.Blocks.freeCheckpoint(batchDf)
     graft.util.Blocks.freeCheckpoint(toks)
     // literal-only frame: nothing to pin
@@ -256,7 +212,7 @@ object IncrementalDf {
 
   /** The current corpus stats at `storePath` without folding. */
   def readStats(spark: SparkSession, storePath: String): DataFrame = {
-    val (n, sdl, nt, _) = corpusRow(spark, storePath)
+    val (n, sdl, nt) = corpus(KeyedStore.readFoldNote(spark, storePath))
     statsFrame(spark, n, sdl, nt)
   }
 
@@ -265,11 +221,9 @@ object IncrementalDf {
   def readDf(spark: SparkSession, storePath: String,
       terms: Seq[String]): Map[String, Long] = {
     import spark.implicits._
-    val hit = prunedLive(spark, storePath, terms.toDF("term"))
-      .map(_.filter(col("kind") === "v" && col("term").isin(terms: _*))
-        .select(col("term"), col("df")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap)
-      .getOrElse(Map.empty)
+    val hit = termDf(spark, storePath, terms.toDF("term"))
+      .filter(col("term").isin(terms: _*)).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     terms.map(t => t -> hit.getOrElse(t, 0L)).toMap
   }
 
@@ -288,7 +242,7 @@ object IncrementalDf {
       idCol: Column, textCol: Column, terms: Seq[String], topK: Int = 20,
       k1: Double = 1.25, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    val (n, sdl, _, _) = corpusRow(spark, storePath)
+    val (n, sdl, _) = corpus(KeyedStore.readFoldNote(spark, storePath))
     require(n > 0,
       s"empty index at $storePath — n_docs = 0 would score NaN (0/0 idf)")
     val dfs = readDf(spark, storePath, terms)

@@ -131,13 +131,10 @@ object IncrementalDsir {
     * base rows carry `batch_id = -1`, inside every screening horizon. */
   def readModel(spark: SparkSession, storePath: String,
       upTo: Long = Long.MaxValue): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete" && col("batch_id") < upTo)
-        .groupBy("b").agg(sum(col("ct")).as("ct")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("b", "ct")
-      }
+    StoreFold.live(spark, storePath, "b BIGINT, batch_id BIGINT, ct BIGINT",
+        kind = None)
+      .filter(col("batch_id") < upTo)
+      .groupBy("b").agg(sum(col("ct")).as("ct"))
 
   /** Append one batch's token-count deltas to the model at `storePath`
     * (creating it on first use). `batchId` must be unique per batch and is
@@ -200,8 +197,7 @@ object IncrementalDsir {
           "from the base row. Pass lastBatchCommitted = true only if the " +
           s"sink is known to have committed batch ${hwm - 1}.")
     }
-    KeyedStore.read(spark, storePath).foreach { cur =>
-      val live = cur.filter(col("op_type") =!= "delete")
+    KeyedStore.readActive(spark, storePath).foreach { live =>
       val toFold = live.filter(col("batch_id") >= 0 && col("batch_id") < below)
       if (!toFold.isEmpty) {
         val oldBase = live.filter(col("batch_id") === -1)

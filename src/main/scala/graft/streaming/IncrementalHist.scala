@@ -14,38 +14,30 @@ import org.apache.spark.sql.functions._
   * history, at O(groups·bins) state regardless of history length.
   *
   * The frame (lo, hi, bins) is part of the store's identity — it is
-  * pinned in a meta row on first fold and every later fold must pass the
+  * pinned in the manifest note on first fold and every later fold must pass the
   * SAME frame (re-framing would need the raw history the sketch exists to
   * discard; a mismatch fails fast instead of silently mixing bin spaces).
   * Values outside [lo, hi] clamp into the edge bins, the
   * [[graft.ext.Profile.histQuantilesFramed]] contract.
   *
-  * Replay safety is the family contract: `batchId` is the `ver` seq, a
-  * META row records the high-water mark on every fold (a fold whose batch
-  * touches no bins still writes it), and a replayed fold returns the
+  * Replay safety is the family contract: `batchId` is the `ver` seq, the
+  * manifest note records the high-water mark on every fold (a fold whose
+  * batch touches no bins still commits it), and a replayed fold returns the
   * current estimates without touching the store.
   *
   * Per-fold cost: one map-side-combined (g, bin) count over the BATCH, a
   * store read, and a bucketed upsert of ONLY the bins the batch touched. */
 object IncrementalHist {
 
-  private def liveRows(spark: SparkSession, storePath: String): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("g"), col("bin"), col("ct"),
-          col("lo"), col("hi"), col("bins"), col("ver")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, String, Long, Long, Long, Long, Long, Long)]
-          .toDF("kind", "g", "bin", "ct", "lo", "hi", "bins", "ver")
-      }
+  private def binCounts(spark: SparkSession, storePath: String): DataFrame =
+    StoreFold.live(spark, storePath, "g STRING, bin BIGINT, ct BIGINT")
 
-  /** The store's pinned frame (+ HWM) from the manifest note — zero
-    * Spark jobs; None on fresh roots. */
+  /** The store's pinned frame (lo, hi, bins) from the manifest note —
+    * zero Spark jobs; None on fresh roots. */
   private def storedFrame(spark: SparkSession,
-      storePath: String): Option[(Long, Long, Long, Long)] =
+      storePath: String): Option[(Long, Long, Int)] =
     KeyedStore.readFoldNote(spark, storePath).map { m =>
-      (m("lo").toLong, m("hi").toLong, m("bins").toLong, m("ver").toLong)
+      (m("lo").toLong, m("hi").toLong, m("bins").toInt)
     }
 
   private def estimateOf(cur: DataFrame, lo: Long, hi: Long, bins: Int,
@@ -66,21 +58,15 @@ object IncrementalHist {
     require(hi >= lo, s"frame must satisfy hi >= lo, got [$lo, $hi]")
     require(bins >= 1, s"bins must be >= 1, got $bins")
     val spark = batch.sparkSession
-    // LAZY store read + zero-job meta (the manifest note) — the
-    // FoldJobsSpec driver-action budget
-    val live = liveRows(spark, storePath).localCheckpoint(false)
-    val meta = storedFrame(spark, storePath)
-    meta.foreach { case (mlo, mhi, mbins, _) =>
-      require(mlo == lo && mhi == hi && mbins == bins,
-        s"store $storePath is framed [$mlo, $mhi] x " +
-          s"$mbins bins; fold passed [$lo, $hi] x $bins — the frame " +
-          "is part of the store's identity")
-    }
-    val cur = live.filter(col("kind") === "v")
-    if (meta.exists(m => batchId <= m._4)) {
+    // zero-job identity + HWM (the manifest note) and a LAZY store read —
+    // the FoldJobsSpec driver-action budget
+    val frame = Seq("lo" -> lo, "hi" -> hi, "bins" -> bins)
+    val note = StoreFold.pin(spark, storePath, "framed histogram", frame: _*)
+    val cur = binCounts(spark, storePath).localCheckpoint(false)
+    if (StoreFold.replayed(note, batchId)) {
       // replay: current state IS the post-batch state
       val out = estimateOf(cur, lo, hi, bins, qs).localCheckpoint(true)
-      graft.util.Blocks.freeCheckpoint(live)
+      graft.util.Blocks.freeCheckpoint(cur)
       return out
     }
     val w = (hi - lo) / bins + 1
@@ -92,8 +78,7 @@ object IncrementalHist {
       .groupBy("g", "bin").agg(count(lit(1)).as("bct"))
     // bin-wise ADD, writing only the touched (g, bin) rows
     val changed = batchCts
-      .join(cur.select(col("g"), col("bin"), col("ct")), Seq("g", "bin"),
-        "left_outer")
+      .join(cur, Seq("g", "bin"), "left_outer")
       .select(lit("v").as("kind"), col("g"), col("bin"),
         (coalesce(col("ct"), lit(0L)) + col("bct")).as("ct"),
         lit(lo).as("lo"), lit(hi).as("hi"), lit(bins.toLong).as("bins"),
@@ -101,22 +86,14 @@ object IncrementalHist {
       // LAZY pin: the merge's own stage write is the one materialization
       // (it runs before the merge GCs the read generation)
       .localCheckpoint(false)
-    val metaRow = spark.range(1).select(lit("m").as("kind"), lit("").as("g"),
-      lit(-1L).as("bin"), lit(0L).as("ct"), lit(lo).as("lo"),
-      lit(hi).as("hi"), lit(bins.toLong).as("bins"),
-      lit(batchId).as("ver"), lit("put").as("op_type"))
-    KeyedStore.merge(changed.unionByName(metaRow), storePath,
-      keys = Seq("kind", "g", "bin"), seqCols = Seq("ver"),
-      numBuckets = numBuckets,
-      note = Some(KeyedStore.Note.encode(
-        "lo" -> lo.toString, "hi" -> hi.toString, "bins" -> bins.toString,
-        "ver" -> batchId.toString)))
-    val merged = cur.select(col("g"), col("bin"), col("ct"))
+    StoreFold.commit(changed, storePath, keys = Seq("kind", "g", "bin"),
+      numBuckets = numBuckets, note = frame :+ ("ver" -> batchId))
+    val merged = cur
       .join(changed.select(col("g"), col("bin")), Seq("g", "bin"),
         "left_anti")
       .unionByName(changed.select(col("g"), col("bin"), col("ct")))
     val out = estimateOf(merged, lo, hi, bins, qs).localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(live)
+    graft.util.Blocks.freeCheckpoint(cur)
     graft.util.Blocks.freeCheckpoint(changed)
     out
   }
@@ -140,22 +117,21 @@ object IncrementalHist {
     * @return (g, n_batch, n_store, tv_num, tv_den) */
   def tvDrift(spark: SparkSession, storePath: String, batch: DataFrame,
       groupCol: Column, valueCol: Column): DataFrame = {
-    val live = liveRows(spark, storePath)
     val meta = storedFrame(spark, storePath)
     require(meta.nonEmpty, s"no frame pinned at $storePath — fold a batch first")
-    val (lo, hi, bins) = (meta.get._1, meta.get._2, meta.get._3)
-    val w = (hi - lo) / bins + 1
+    val (lo, hi, nBins) = meta.get
+    val w = (hi - lo) / nBins + 1
     // null groups are dropped on BOTH sides: the bin join's equi keys
     // cannot match null = null, so a null cohort would silently compare
     // its batch bins against nothing (and a drift gate needs a named
     // cohort anyway — route unknowns to a sentinel upstream)
-    val stored = live.filter(col("kind") === "v" && col("g").isNotNull)
+    val stored = binCounts(spark, storePath).filter(col("g").isNotNull)
       .select(col("g"), col("bin"), col("ct").as("__s"))
     val batchCts = batch
       .select(groupCol.cast("string").as("g"), valueCol.cast("long").as("__v"))
       .filter(col("__v").isNotNull && col("g").isNotNull)
       .withColumn("bin",
-        expr(s"least(greatest((__v - $lo) div $w, 0L), ${bins - 1}L)"))
+        expr(s"least(greatest((__v - $lo) div $w, 0L), ${nBins - 1}L)"))
       .groupBy("g", "bin").agg(count(lit(1)).as("__o"))
     val pv = batchCts.join(stored, Seq("g", "bin"), "full_outer")
       .select(col("g"), coalesce(col("__o"), lit(0L)).as("o"),
@@ -179,11 +155,7 @@ object IncrementalHist {
     * returns an empty two-column-compatible frame via the caller's qs. */
   def readEstimate(spark: SparkSession, storePath: String,
       qs: Seq[(Int, Int)] = Seq((1, 2), (9, 10), (99, 100))): DataFrame = {
-    val live = liveRows(spark, storePath)
-    val meta = storedFrame(spark, storePath)
-    val (lo, hi, bins) = meta
-      .map(m => (m._1, m._2, m._3.toInt))
-      .getOrElse((0L, 0L, 1))
-    estimateOf(live.filter(col("kind") === "v"), lo, hi, bins, qs)
+    val (lo, hi, nBins) = storedFrame(spark, storePath).getOrElse((0L, 0L, 1))
+    estimateOf(binCounts(spark, storePath), lo, hi, nBins, qs)
   }
 }

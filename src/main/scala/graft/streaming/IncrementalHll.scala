@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * number of folds the store is bit-identical to `Profile.hllRegisters`
   * over the concatenated history.
   *
-  * `p` is the sketch's identity — pinned in a meta row on first fold; a
-  * fold with a different precision fails fast (the index/rank split is
+  * `p` is the sketch's identity — pinned in the manifest note on first
+  * fold; a fold with a different precision fails fast (the index/rank split is
   * `p`-dependent, so mixing precisions silently corrupts the table).
   *
   * The store's last-write-wins SEQUENCE is the RANK itself, not the
@@ -36,26 +36,6 @@ import org.apache.spark.sql.functions._
   * store read, and a bucketed upsert of ONLY improved registers. */
 object IncrementalHll {
 
-  private def liveRows(spark: SparkSession, storePath: String): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("g"), col("idx"), col("rank"),
-          col("p"), col("ver")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, String, Long, Long, Long, Long)]
-          .toDF("kind", "g", "idx", "rank", "p", "ver")
-      }
-
-  /** The store's pinned precision rides the manifest note (zero Spark
-    * jobs). */
-  private def checkP(spark: SparkSession, storePath: String, p: Int): Unit =
-    KeyedStore.readFoldNote(spark, storePath).map(_("p").toLong).foreach { sp =>
-      require(sp == p,
-        s"store $storePath is a p=$sp sketch; fold passed " +
-          s"p=$p — the precision is the sketch's identity")
-    }
-
   /** Fold one micro-batch into the sketch at `storePath` (created on
     * first use, `p` pinned then), writing only registers the batch
     * improved; returns the updated register table (g, idx, rank).
@@ -69,17 +49,15 @@ object IncrementalHll {
       valueCol: Column, p: Int = 11, batchId: Long = 0L,
       numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
-    checkP(spark, storePath, p)
-    val live = liveRows(spark, storePath).localCheckpoint(false)
-    val cur = live.filter(col("kind") === "v")
+    StoreFold.pin(spark, storePath, "HLL sketch", "p" -> p)
+    val cur = readRegisters(spark, storePath).localCheckpoint(false)
     val batchRegs = graft.ext.Profile.hllRegisters(
       batch.select(groupCol.cast("string").as("g"), valueCol.as("__val")),
       Seq("g"), col("__val"), p)
       .withColumnRenamed("rank", "brank")
     // per-register MAX: only strictly-improved (or new) registers write
     val improved = batchRegs
-      .join(cur.select(col("g"), col("idx"), col("rank")), Seq("g", "idx"),
-        "left_outer")
+      .join(cur, Seq("g", "idx"), "left_outer")
       .filter(col("rank").isNull || col("brank") > col("rank"))
       .select(lit("v").as("kind"), col("g"), col("idx"),
         col("brank").as("rank"), lit(p.toLong).as("p"),
@@ -87,33 +65,22 @@ object IncrementalHll {
       // LAZY pin: the merge's own stage write is the one materialization
       // (it runs before the merge GCs the read generation)
       .localCheckpoint(false)
-    // the meta row's seq slot (rank) carries the batch id so the stored
-    // meta reflects the highest fold seen — a constant would tie on every
-    // fold, violating merge's total-order contract on seqCols (harmless
-    // for identical content, but any future reader of meta.ver would see
-    // an arbitrary generation)
-    val metaRow = spark.range(1).select(lit("m").as("kind"), lit("").as("g"),
-      lit(-1L).as("idx"), lit(batchId).as("rank"), lit(p.toLong).as("p"),
-      lit(batchId).as("ver"), lit("put").as("op_type"))
-    KeyedStore.merge(improved.unionByName(metaRow), storePath,
-      keys = Seq("kind", "g", "idx"), seqCols = Seq("rank"),
-      numBuckets = numBuckets,
-      note = Some(KeyedStore.Note.encode(
-        "p" -> p.toString, "ver" -> batchId.toString)))
-    val out = cur.select(col("g"), col("idx"), col("rank"))
+    StoreFold.commit(improved, storePath, keys = Seq("kind", "g", "idx"),
+      numBuckets, note = Seq("p" -> p, "ver" -> batchId),
+      seqCols = Seq("rank"))
+    val out = cur
       .join(improved.select(col("g"), col("idx")), Seq("g", "idx"),
         "left_anti")
       .unionByName(improved.select(col("g"), col("idx"), col("rank")))
       .localCheckpoint(true)
-    graft.util.Blocks.freeCheckpoint(live)
+    graft.util.Blocks.freeCheckpoint(cur)
     graft.util.Blocks.freeCheckpoint(improved)
     out
   }
 
   /** The current register table at `storePath` without folding. */
   def readRegisters(spark: SparkSession, storePath: String): DataFrame =
-    liveRows(spark, storePath).filter(col("kind") === "v")
-      .select(col("g"), col("idx"), col("rank"))
+    StoreFold.live(spark, storePath, "g STRING, idx BIGINT, rank BIGINT")
 
   /** The integer-exact per-group summary (g, zeros, h_num) of the store's
     * current registers — `Profile.hllSummary` over [[readRegisters]],

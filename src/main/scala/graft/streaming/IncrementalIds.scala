@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
   * high-water mark. A fold that mints nothing writes nothing.
   *
   * Scale posture: the store is touched only through ONE bucket-pruned
-  * read per fold — probe = batch keys ∪ the meta key — so a fold costs
+  * read per fold — probe = the batch keys — so a fold costs
   * O(batch-touched buckets) file reads however large the vocabulary
   * grows (the [[IncrementalScd2]] readPruned pattern). The running max
-  * id and version are PINNED in a meta row (kind = "m", key = "") rather
-  * than scanned, and minting ranks the fold's new keys with the
+  * id and version ride the manifest note rather than being scanned, and
+  * minting ranks the fold's new keys with the
   * [[graft.ops.Scale.denseIds]] two-level pattern (local rank inside
   * key-prefix buckets + broadcast offsets — a character prefix is a
   * monotone coarsening of lexicographic order), so even the
@@ -35,12 +35,7 @@ object IncrementalIds {
 
   /** The stored key → id mapping without folding (empty if never run). */
   def readIds(spark: SparkSession, storePath: String): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.filter(col("kind") === "v").select(col("key"), col("id")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("key", "id")
-      }
+    StoreFold.live(spark, storePath, "key STRING, id BIGINT")
 
   /** Fold one batch: mint ids for unseen keys, return the FULL updated
     * mapping (a lazy store read — callers that outlive the store
@@ -54,28 +49,18 @@ object IncrementalIds {
       .localCheckpoint(false)
     // ONE bucket-pruned read covers everything the fold needs: the batch
     // keys' buckets hold every stored row an unseen-key anti-join could
-    // match (the probe still carries the meta row's key "", which no
-    // reader needs since the running max id/version ride the note). A
-    // full-store read here would make each fold O(vocabulary) — the cost
-    // this store exists to avoid.
-    val probe = keys.unionByName(spark.range(1).select(lit("").as("key")))
-    // no checkpoint: every consumer runs BEFORE the merge mutates the
-    // store, and the pruned buckets are already immutable parquet —
-    // re-reads are column-pruned scans, an eager pin would materialize
-    // whole touched buckets per fold
-    val pruned = KeyedStore.readPruned(spark, storePath, probe)
-      .map(_.select(col("kind"), col("key"), col("id"), col("ver")))
+    // match. A full-store read here would make each fold O(vocabulary) —
+    // the cost this store exists to avoid. No checkpoint: every consumer
+    // runs BEFORE the merge mutates the store, and the pruned buckets are
+    // already immutable parquet — re-reads are column-pruned scans, an
+    // eager pin would materialize whole touched buckets per fold
+    val freshKeys = keys.join(
+      StoreFold.livePruned(spark, storePath, keys, "key STRING"),
+      Seq("key"), "left_anti")
     // running max id / version ride the manifest note (zero Spark jobs)
-    val metaIds = KeyedStore.readFoldNote(spark, storePath)
-      .map(m => (m("id").toLong, m("ver").toLong))
-    val nextId = metaIds.map(_._1 + 1L).getOrElse(0L)
-    val nextVer = metaIds.map(_._2 + 1L).getOrElse(0L)
-    val freshKeys = pruned match {
-      case Some(p) => keys.join(
-        p.filter(col("kind") === "v").select(col("key")),
-        Seq("key"), "left_anti")
-      case None => keys
-    }
+    val noted = KeyedStore.readFoldNote(spark, storePath)
+    val nextId = noted.map(_("id").toLong + 1L).getOrElse(0L)
+    val nextVer = noted.map(_("ver").toLong + 1L).getOrElse(0L)
     // two-level lexicographic rank: a 4-char prefix bucket keeps the
     // bootstrap fold's sort distributed (prefix order IS key order, so
     // bucket offset + local rank = global rank)
@@ -87,18 +72,11 @@ object IncrementalIds {
       // every partition), still before the merge mutates the store
       .localCheckpoint(false)
     val minted = fresh.count()
-    if (minted > 0L) {
-      val meta = spark.range(1).select(lit("m").as("kind"),
-        lit("").as("key"), lit(nextId + minted - 1L).as("id"),
-        lit(nextVer).as("ver"))
-      KeyedStore.merge(
-        fresh.unionByName(meta).withColumn("op_type", lit("put")), storePath,
-        keys = Seq("kind", "key"), seqCols = Seq("ver"),
-        numBuckets = numBuckets, bucketCols = Seq("key"),
-        note = Some(KeyedStore.Note.encode(
-          "id" -> (nextId + minted - 1L).toString,
-          "ver" -> nextVer.toString)))
-    }
+    if (minted > 0L)
+      StoreFold.commit(fresh.withColumn("op_type", lit("put")), storePath,
+        keys = Seq("kind", "key"), numBuckets = numBuckets,
+        note = Seq("id" -> (nextId + minted - 1L), "ver" -> nextVer),
+        bucketCols = Seq("key"))
     graft.util.Blocks.freeCheckpoint(fresh)
     graft.util.Blocks.freeCheckpoint(keys)
     readIds(spark, storePath)

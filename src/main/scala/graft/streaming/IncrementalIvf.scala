@@ -38,7 +38,8 @@ import org.apache.spark.sql.functions._
   * batch), and `<root>/ids` (one row per indexed vec_id, bucketed by
   * vec_id — the fold-once contract's enforcement probe, read and written
   * bucket-pruned at O(batch)). A fold merges ids, then codes, then
-  * stats; the stats meta row is the commit point. Crash between the two leaves the high-water mark unadvanced, so
+  * stats; the stats merge (its manifest note carries the high-water mark)
+  * is the commit point. Crash between the two leaves the mark unadvanced, so
   * the replayed fold re-upserts the same (vec_id, sub)-keyed code rows
   * with identical values (idempotent) and folds the sums exactly once —
   * the [[IncrementalTriangles]] two-store discipline. Replay safety is the
@@ -47,21 +48,24 @@ import org.apache.spark.sql.functions._
   * store.
   *
   * Per-fold cost: one batch-sized encode + label join, a bucketed upsert
-  * of batch·m code rows, one labels·dim-row stats read/fold, one meta row.
+  * of batch·m code rows, one labels·dim-row stats read/fold.
   * The fold never reads the code store — index maintenance stays O(batch)
   * as the index grows to corpus scale. */
 object IncrementalIvf {
 
+  /** Live stats rows: per-cell sums (kind "s") and counts (kind "c"). */
   private def statsLive(spark: SparkSession, statsPath: String): DataFrame =
-    KeyedStore.read(spark, statsPath)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("g"), col("pos"), col("csum"), col("n"),
-          col("ver")))
-      .getOrElse {
-        spark.range(0).select(lit("").as("kind"), lit("").as("g"),
-          lit(0L).as("pos"), lit(null).cast("decimal(38,10)").as("csum"),
-          lit(0L).as("n"), lit(0L).as("ver"))
-      }
+    StoreFold.live(spark, statsPath,
+      "kind STRING, g STRING, pos BIGINT, csum DECIMAL(38,10), n BIGINT",
+      kind = None)
+
+  /** The stats store's decoded note (the fold's HWM, zero jobs) and its
+    * live rows, lazily pinned — the stats merge's own stage write is the
+    * one materialization. */
+  private def statsFold(spark: SparkSession,
+      storePath: String): (Option[Map[String, String]], DataFrame) =
+    (KeyedStore.readFoldNote(spark, s"$storePath/stats"),
+      statsLive(spark, s"$storePath/stats").localCheckpoint(false))
 
   private def directoryOf(curC: DataFrame): DataFrame =
     curC.select(col("g").cast("long").as("label"), col("n").as("n_vecs"))
@@ -131,14 +135,11 @@ object IncrementalIvf {
       batchId: Long, m: Int = 4, numBuckets: Int = 4,
       guardIds: Boolean = true): DataFrame = {
     val spark = batch.sparkSession
-    // LAZY pin: the stats merge's stage write is the one materialization
-    // (the ids/codes merges before it never touch the stats store)
-    val live = statsLive(spark, s"$storePath/stats").localCheckpoint(false)
-    // replay HWM rides the stats store's manifest note (zero Spark jobs)
-    val meta = KeyedStore.readFoldNote(spark, s"$storePath/stats").map(_("ver").toLong)
+    // (the ids/codes merges before the stats merge never touch its store)
+    val (note, live) = statsFold(spark, storePath)
     val curS = live.filter(col("kind") === "s")
     val curC = live.filter(col("kind") === "c")
-    if (meta.exists(batchId <= _)) {
+    if (StoreFold.replayed(note, batchId)) {
       val out = directoryOf(curC).localCheckpoint(true)
       graft.util.Blocks.freeCheckpoint(live)
       return out
@@ -173,14 +174,14 @@ object IncrementalIvf {
         rejectStored =
           // deleted ids are exempt: an id removed by [[deleteBatch]] may
           // be re-indexed — its tombstone is not "already indexed"
-          Some((col("ver") < batchId && col("op_type") =!= "delete",
+          Some((col("ver") < batchId && KeyedStore.isLive(col("op_type")),
             "already indexed by an earlier fold")),
         rejectMsg = "IVF fold-once contract violated — a re-encoded vec " +
           "whose cell moved would leave the old cell's code rows live, " +
           "and a within-batch duplicate double-adds centroid sums; route " +
           "re-arrivals through IncrementalDedup")
     }
-    // codes next: the stats meta row below is the commit point, so a
+    // codes next: the stats merge below is the commit point, so a
     // crash landing here replays into an idempotent code re-upsert
     mergeCodes(batch, storePath, books, m, batchId, numBuckets)
     val batchSums = graft.ext.Similarity.coarseCentroidSums(
@@ -208,23 +209,27 @@ object IncrementalIvf {
         lit(null).cast("decimal(38,10)").as("csum"),
         (coalesce(col("n"), lit(0L)) + col("bn")).as("n"),
         lit(batchId).as("ver"), lit("put").as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"), lit("").as("g"),
-      lit(-2L).as("pos"), lit(null).cast("decimal(38,10)").as("csum"),
-      lit(0L).as("n"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    val changed = sumRows.unionByName(countRows).unionByName(metaRow)
-      // LAZY pin: the stats merge's own stage write is the one
-      // materialization, before it GCs the read generation
-      .localCheckpoint(false)
-    KeyedStore.merge(changed, s"$storePath/stats",
-      keys = Seq("kind", "g", "pos"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, layoutId = Some("ivf-stats-v1"),
-      note = Some(KeyedStore.Note.encode("ver" -> batchId.toString)))
+    commitStats(sumRows.unionByName(countRows), storePath, live, curC,
+      batchId, numBuckets)
+  }
+
+  /** The stats merge — the fold's commit point, its note carrying the
+    * HWM — then the updated cell directory (put count rows over `curC`).
+    * Frees the fold's pinned `live` read. */
+  private def commitStats(rows: DataFrame, storePath: String,
+      live: DataFrame, curC: DataFrame, batchId: Long,
+      numBuckets: Int): DataFrame = {
+    // LAZY pin: the stats merge's own stage write is the one
+    // materialization, before it GCs the read generation
+    val changed = rows.localCheckpoint(false)
+    StoreFold.commit(changed, s"$storePath/stats",
+      keys = Seq("kind", "g", "pos"), numBuckets = numBuckets,
+      note = Seq("ver" -> batchId), layoutId = Some("ivf-stats-v1"))
+    val counts = changed.filter(col("kind") === "c")
     val out = directoryOf(
         curC.select(col("g"), col("n"))
-          .join(changed.filter(col("kind") === "c").select(col("g")),
-            Seq("g"), "left_anti")
-          .unionByName(
-            changed.filter(col("kind") === "c").select(col("g"), col("n"))))
+          .join(counts.select(col("g")), Seq("g"), "left_anti")
+          .unionByName(KeyedStore.active(counts).select(col("g"), col("n"))))
       .localCheckpoint(true)
     graft.util.Blocks.freeCheckpoint(live)
     graft.util.Blocks.freeCheckpoint(changed)
@@ -247,8 +252,8 @@ object IncrementalIvf {
     * which would double-subtract — aborts inside the ids merge's own
     * bucket IO (`rejectStaged cnt > 1`), before anything publishes.
     *
-    * Effects, in the crash-ordered sequence (stats meta is the commit
-    * point, exactly [[mergeBatch]]'s): ids rows TOMBSTONE (and
+    * Effects, in the crash-ordered sequence (the stats merge is the
+    * commit point, exactly [[mergeBatch]]'s): ids rows TOMBSTONE (and
     * [[mergeBatch]]'s fold-once guard exempts deleted rows, so an
     * erased id may be re-indexed later); code rows tombstone at
     * (label, vec_id, sub 0..m-1) — [[search]]'s live filter hides them
@@ -268,14 +273,12 @@ object IncrementalIvf {
   def deleteBatch(batch: DataFrame, storePath: String, books: DataFrame,
       batchId: Long, m: Int = 4, numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
-    import spark.implicits._
     // LAZY pin + zero-job HWM via the stats note (the FoldJobsSpec
     // protocol)
-    val live = statsLive(spark, s"$storePath/stats").localCheckpoint(false)
-    val meta = KeyedStore.readFoldNote(spark, s"$storePath/stats").map(_("ver").toLong)
+    val (note, live) = statsFold(spark, storePath)
     val curS = live.filter(col("kind") === "s")
     val curC = live.filter(col("kind") === "c")
-    if (meta.exists(batchId <= _)) {
+    if (StoreFold.replayed(note, batchId)) {
       val out = directoryOf(curC).localCheckpoint(true)
       graft.util.Blocks.freeCheckpoint(live)
       return out
@@ -288,14 +291,10 @@ object IncrementalIvf {
       .distinct()
       // LAZY pin: the pruned read's bucket-probe collect materializes it
       .localCheckpoint(false)
-    val idRows = KeyedStore.readPruned(spark, idsPath, delIds)
-      .getOrElse(spark.range(0).select(col("id").as("vec_id"),
-        lit(0L).as("cnt"), lit(0L).as("ver"), lit("put").as("op_type")))
-    val dead = delIds.join(
-      idRows.filter(col("op_type") =!= "delete" ||
-          col("ver") === batchId)
-        .select(col("vec_id")),
-      Seq("vec_id"), "left_anti")
+    val liveIds = KeyedStore.readPruned(spark, idsPath, delIds).map(_
+      .filter(KeyedStore.isLive(col("op_type")) || col("ver") === batchId)
+      .select(col("vec_id")))
+    val dead = liveIds.fold(delIds)(delIds.join(_, Seq("vec_id"), "left_anti"))
     val badIds = dead.limit(3).collect().map(_.getLong(0))
     require(badIds.isEmpty,
       s"deleteBatch: ids ${badIds.mkString(", ")}… are not live in the " +
@@ -355,24 +354,8 @@ object IncrementalIvf {
         greatest(col("n1"), lit(0L)).as("n"), lit(batchId).as("ver"),
         when(col("n1") <= 0, lit("delete")).otherwise(lit("put"))
           .as("op_type"))
-    val metaRow = spark.range(1).select(lit("m").as("kind"), lit("").as("g"),
-      lit(-2L).as("pos"), lit(null).cast("decimal(38,10)").as("csum"),
-      lit(0L).as("n"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    val changed = sumRows.unionByName(countRows).unionByName(metaRow)
-      // LAZY pin: the stats merge's own stage write materializes it
-      .localCheckpoint(false)
-    KeyedStore.merge(changed, s"$storePath/stats",
-      keys = Seq("kind", "g", "pos"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, layoutId = Some("ivf-stats-v1"),
-      note = Some(KeyedStore.Note.encode("ver" -> batchId.toString)))
-    val out = directoryOf(
-        curC.select(col("g"), col("n"))
-          .join(changed.filter(col("kind") === "c").select(col("g")),
-            Seq("g"), "left_anti")
-          .unionByName(
-            changed.filter(col("kind") === "c" && col("op_type") === "put")
-              .select(col("g"), col("n"))))
-      .localCheckpoint(true)
+    val out = commitStats(sumRows.unionByName(countRows), storePath, live,
+      curC, batchId, numBuckets)
     // self-scheduled tombstone maintenance (round 14, VERDICT r13 item 6):
     // CODE tombstones are safe to drop — the stats HWM serializes folds
     // (no late lower-seq put to resurrect a dropped key, and a crashed
@@ -386,8 +369,6 @@ object IncrementalIvf {
     // round-14 review's finding). Its rows are three longs per id ever
     // indexed; [[reclusterRebuild]]'s blue/green root is what resets it.
     KeyedStore.maintain(spark, s"$storePath/codes")
-    graft.util.Blocks.freeCheckpoint(live)
-    graft.util.Blocks.freeCheckpoint(changed)
     graft.util.Blocks.freeCheckpoint(delIds)
     out
   }
@@ -400,8 +381,8 @@ object IncrementalIvf {
   def idLiveness(spark: SparkSession, storePath: String): (Long, Long) =
     KeyedStore.read(spark, s"$storePath/ids").map { df =>
       val r = df.agg(
-        count(when(col("op_type") =!= "delete", 1)).as("live"),
-        count(when(col("op_type") === "delete", 1)).as("dead")).head()
+        count(when(KeyedStore.isLive(col("op_type")), 1)).as("live"),
+        count(when(!KeyedStore.isLive(col("op_type")), 1)).as("dead")).head()
       (r.getLong(0), r.getLong(1))
     }.getOrElse((0L, 0L))
 
@@ -480,16 +461,12 @@ object IncrementalIvf {
     // the search plan behind an RDD scan (PlanSpec reads it)
     val probes = graft.ext.Similarity.probePairs(queries, cent0, nProbe)
     val cells = probes.select(col("c_label").as("label")).distinct()
-    val codes = KeyedStore.readPruned(spark, s"$storePath/codes", cells)
-      .map(_.filter(col("op_type") =!= "delete")
-        // sub pivots against the literal 0..m-1 INT grid in the shared
-        // core — hand it back at the batch path's exact type
-        .select(col("vec_id"), col("sub").cast("int").as("sub"),
-          col("label"), col("code").cast("int").as("code")))
-      .getOrElse {
-        spark.range(0).select(lit(0L).as("vec_id"), lit(0).as("sub"),
-          lit("").as("label"), lit(0).as("code"))
-      }
+    val codes = StoreFold.livePruned(spark, s"$storePath/codes", cells,
+        "vec_id BIGINT, sub BIGINT, label BIGINT, code BIGINT", kind = None)
+      // sub pivots against the literal 0..m-1 INT grid in the shared
+      // core — hand it back at the batch path's exact type
+      .select(col("vec_id"), col("sub").cast("int").as("sub"),
+        col("label"), col("code").cast("int").as("code"))
     val labels = codes.filter(col("sub") === 0)
       .select(col("vec_id"), col("label"))
     graft.ext.Similarity.ivfPqCore(queries, cent0, labels, books,

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * `ver` seq; a replayed fold sees `batchId <= max ver` and returns the
   * current state without touching the store (value rows alone can't carry
   * that mark — a fold whose batch adds no new hashes writes no value rows —
-  * so a META row records the high-water mark on every fold).
+  * so the manifest note records the high-water mark on every fold).
   *
   * Per-fold cost: one distinct + WindowGroupLimit rank over the BATCH
   * (k rows per group out), one k-rows-per-group store read, the k-bounded
@@ -50,24 +50,15 @@ object IncrementalKmv {
       valueCol: Column, k: Int, batchId: Long, numBuckets: Int = 4): DataFrame = {
     require(k >= 3, s"k must be >= 3 (estimator needs k-1 >= 2), got $k")
     val spark = batch.sparkSession
-    val live = KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("g"), col("h"), col("ver")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, String, Long, Long)].toDF("kind", "g", "h", "ver")
-      // LAZY pin: the merge's stage write is the one materialization
-      }.localCheckpoint(false)
-    val cur = live.filter(col("kind") === "v").select(col("g"), col("h"))
-    // replay HWM rides the manifest note (zero Spark jobs)
-    val maxVer = KeyedStore.readFoldNote(spark, storePath).map(_("ver").toLong)
-    if (maxVer.exists(batchId <= _)) {
+    // LAZY pin: the merge's stage write is the one materialization
+    val cur = mins(spark, storePath).localCheckpoint(false)
+    if (StoreFold.replayed(KeyedStore.readFoldNote(spark, storePath), batchId)) {
       // replay: current state IS the post-batch state. Materialize the
-      // (group-sized) estimate so the store-sized `live` checkpoint can be
+      // (group-sized) estimate so the store-sized `cur` checkpoint can be
       // freed here too — the early return must not leak what the fold path
       // frees below.
       val out = estimateOf(cur, k).localCheckpoint(true)
-      graft.util.Blocks.freeCheckpoint(live)
+      graft.util.Blocks.freeCheckpoint(cur)
       return out
     }
     val bh = conv(substring(md5(valueCol.cast("string")), 1, 8), 16, 10)
@@ -84,27 +75,19 @@ object IncrementalKmv {
     val dropped = cur.except(merged)
       .select(lit("v").as("kind"), col("g"), col("h"),
         lit(batchId).as("ver"), lit("delete").as("op_type"))
-    val meta = spark.range(1).select(lit("m").as("kind"), lit("").as("g"),
-      lit(0L).as("h"), lit(batchId).as("ver"), lit("put").as("op_type"))
-    KeyedStore.merge(next.unionByName(dropped).unionByName(meta), storePath,
-      keys = Seq("kind", "g", "h"), seqCols = Seq("ver"),
-      numBuckets = numBuckets,
-      note = Some(KeyedStore.Note.encode("ver" -> batchId.toString)))
-    graft.util.Blocks.freeCheckpoint(live)
+    StoreFold.commit(next.unionByName(dropped), storePath,
+      keys = Seq("kind", "g", "h"), numBuckets = numBuckets,
+      note = Seq("ver" -> batchId))
+    graft.util.Blocks.freeCheckpoint(cur)
     val out = estimateOf(merged, k).localCheckpoint(true)
     graft.util.Blocks.freeCheckpoint(merged)
     out
   }
 
   /** The current per-group estimates at `storePath` without folding. */
-  def readEstimate(spark: SparkSession, storePath: String, k: Int): DataFrame = {
-    val cur = KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete" && col("kind") === "v")
-        .select(col("g"), col("h")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("g", "h")
-      }
-    estimateOf(cur, k)
-  }
+  def readEstimate(spark: SparkSession, storePath: String, k: Int): DataFrame =
+    estimateOf(mins(spark, storePath), k)
+
+  private def mins(spark: SparkSession, storePath: String): DataFrame =
+    StoreFold.live(spark, storePath, "g STRING, h BIGINT")
 }

@@ -74,8 +74,8 @@ object IncrementalLsh {
     // (1) cross-batch screen against the stored index — a PRUNED read: only
     // the store buckets the batch's (band, bkey) probes hash into are
     // opened, so the screen is O(batch) file IO at any index size
-    val crossDups = KeyedStore.readPruned(spark, storePath, buckets) match {
-      case Some(stored) =>
+    val crossDups = KeyedStore.readPruned(spark, storePath, buckets).map {
+      stored =>
         val hits = buckets.join(
           cappedStored(
             liveRows(stored)
@@ -89,9 +89,9 @@ object IncrementalLsh {
               (acc, x) => acc + x))
           .filter(col("__matches") * simDen >= lit(simNum) * k)
           .select(col("doc_id")).distinct()
-      case None => docs.select(col("doc_id")).limit(0)
     }
-    val survivors = docs.join(crossDups, Seq("doc_id"), "left_anti")
+    val survivors =
+      crossDups.fold(docs)(docs.join(_, Seq("doc_id"), "left_anti"))
 
     // (2) within-batch near-dup clustering over the survivors (batch-sized)
     val shS = sh.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -165,11 +165,8 @@ object IncrementalLsh {
     // (ADVICE r14; the [[IncrementalDedup.deleteBatch]] stance).
     val noted = KeyedStore.readNote(spark, storePath)
       .map(KeyedStore.Note.decode).filter(_.contains("delver"))
-    noted.foreach { d =>
-      val hwm = d("delver").toLong
-      if (batchId == hwm) return d("deln").toLong
-      if (batchId < hwm) return 0L
-    }
+    if (StoreFold.replayed(noted, batchId, key = "delver"))
+      return noted.filter(_("delver").toLong == batchId).fold(0L)(_("deln").toLong)
     val docs = batch.select(idCol.as("doc_id"), textCol.as("__text"))
     val sh = Dedup.shingles(docs, col("doc_id"), col("__text"))
     // LAZY pin: the pruned read's bucket-probe collect materializes it
@@ -179,9 +176,8 @@ object IncrementalLsh {
     val live = KeyedStore.readPruned(spark, storePath, rows)
       .map(df => liveRows(df)
         .select(col("band"), col("bkey"), col("doc_id")))
-      .getOrElse(rows.select(col("band"), col("bkey"), col("doc_id"))
-        .limit(0))
-    val missing = rows.join(live, Seq("band", "bkey", "doc_id"), "left_anti")
+    val missing = live
+      .fold(rows)(rows.join(_, Seq("band", "bkey", "doc_id"), "left_anti"))
       .select(col("doc_id")).distinct().limit(3).collect().map(_.getLong(0))
     require(missing.isEmpty,
       s"deleteBatch: docs ${missing.mkString(", ")}… have band rows not " +

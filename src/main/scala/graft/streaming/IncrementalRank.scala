@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * frame): the stored vector's VALUES are in `1/unit` fixed-point units,
   * so warm-starting it under a different unit feeds the iteration ranks
   * at the wrong scale (at worst past the overflow guard, which only
-  * checks the caller's unit). Pinned in a meta row on first use; a
+  * checks the caller's unit). Pinned in the manifest note on first use; a
   * mismatch fails fast.
   *
   * Deltas take BOTH shapes of the CDC world: `edgeDelta` adds edges and
@@ -73,36 +73,19 @@ object IncrementalRank {
         edgePath(storeRoot), keys = Seq("src", "dst"), seqCols = Seq("ver"),
         numBuckets = numBuckets, bucketCols = Seq("src"))
     }
-    val edges = KeyedStore.read(spark, edgePath(storeRoot))
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("src"), col("dst")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("src", "dst")
-      }
-    val stored = KeyedStore.read(spark, rankPath(storeRoot))
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("node"), col("rank_fp"),
-          col("unit"), col("dn"), col("dd"), col("ver"))
-        // LAZY pin: the converge run's first iteration is the one
-        // materialization
-        .localCheckpoint(false))
+    val edges = StoreFold.live(spark, edgePath(storeRoot),
+      "src BIGINT, dst BIGINT", kind = None)
     // (unit, damp, ver) ride the manifest note — zero Spark jobs
-    val metaRow = KeyedStore.readFoldNote(spark, rankPath(storeRoot))
-      .map(d => (d("unit").toLong, d("dn").toLong, d("dd").toLong, d("ver").toLong))
-    metaRow.foreach { m =>
-      require(m._1 == unit && m._2 == dampNum && m._3 == dampDen,
-        s"store $storeRoot holds a (unit=${m._1}, " +
-          s"damp=${m._2}/${m._3}) vector; caller passed " +
-          s"(unit=$unit, damp=$dampNum/$dampDen) — the arithmetic " +
-          "parameters are the store's identity")
-    }
-    val start = stored.map(_.filter(col("kind") === "v")
-      .select(col("node"), col("rank_fp")))
+    val identity = Seq("unit" -> unit, "dn" -> dampNum, "dd" -> dampDen)
+    val note = StoreFold.pin(spark, rankPath(storeRoot), "rank vector",
+      identity: _*)
+    // LAZY pin: the converge run's first iteration is the one
+    // materialization (None on a fresh root: a uniform cold start)
+    val start = note.map(_ => readRanks(spark, storeRoot).localCheckpoint(false))
     // the store's seq must be a TOTAL order over re-written keys (same
-    // node, new rank): the meta row pins the last version (every update
-    // rewrites it), so the next version never needs a store-wide max scan
-    val nextVer = metaRow.map(_._4 + 1L).getOrElse(0L)
+    // node, new rank): the note pins the last version (every update
+    // commits it), so the next version never needs a store-wide max scan
+    val nextVer = note.map(_("ver").toLong + 1L).getOrElse(0L)
     // ranks is already backed by the converge run's own final checkpoint
     // and shares nothing with the rank store, so it is returned as-is —
     // a second checkpoint here would copy a node-sized block set per
@@ -120,29 +103,16 @@ object IncrementalRank {
       .select(lit("v").as("kind"), col("node"), lit(0L).as("rank_fp"),
         lit(unit).as("unit"), lit(dampNum).as("dn"), lit(dampDen).as("dd"),
         lit(nextVer).as("ver"), lit("delete").as("op_type")))
-    val meta = spark.range(1).select(lit("m").as("kind"),
-      lit(-1L).as("node"), lit(0L).as("rank_fp"), lit(unit).as("unit"),
-      lit(dampNum).as("dn"), lit(dampDen).as("dd"), lit(nextVer).as("ver"),
-      lit("put").as("op_type"))
     val upsert = departed.map(rows.unionByName(_)).getOrElse(rows)
     if (!ranks.isEmpty || departed.exists(!_.isEmpty))
-      KeyedStore.merge(upsert.unionByName(meta), rankPath(storeRoot),
-        keys = Seq("kind", "node"), seqCols = Seq("ver"),
-        numBuckets = numBuckets, bucketCols = Seq("kind", "node"),
-        note = Some(KeyedStore.Note.encode(
-          "unit" -> unit.toString, "dn" -> dampNum.toString,
-          "dd" -> dampDen.toString, "ver" -> nextVer.toString)))
-    stored.foreach(graft.util.Blocks.freeCheckpoint)
+      StoreFold.commit(upsert, rankPath(storeRoot), keys = Seq("kind", "node"),
+        numBuckets = numBuckets, note = identity :+ ("ver" -> nextVer),
+        bucketCols = Seq("kind", "node"))
+    start.foreach(graft.util.Blocks.freeCheckpoint)
     (ranks, iters)
   }
 
   /** The stored rank vector without updating (empty frame if never run). */
   def readRanks(spark: SparkSession, storeRoot: String): DataFrame =
-    KeyedStore.read(spark, rankPath(storeRoot))
-      .map(_.filter(col("kind") === "v" && col("op_type") =!= "delete")
-        .select(col("node"), col("rank_fp")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("node", "rank_fp")
-      }
+    StoreFold.live(spark, rankPath(storeRoot), "node BIGINT, rank_fp BIGINT")
 }

@@ -21,10 +21,10 @@ import graft.ops.Stateful
   * `__seed`, ts = its `effective_from`), the batch operator runs over
   * `seed ∪ batch` for the touched keys only, local version numbers shift
   * by the key's stored max, and the store receives ONLY closed-seed
-  * updates and new versions (an all-absorbed fold writes nothing but the
-  * high-water meta row). Closed versions are immutable, and the fold's
-  * store read is BUCKET-PRUNED to the batch's touched keys (one
-  * [[KeyedStore.readPruned]] covers the meta row and the touched version
+  * updates and new versions (an all-absorbed fold writes no rows, only
+  * the high-water mark in the manifest note). Closed versions are
+  * immutable, and the fold's store read is BUCKET-PRUNED to the batch's
+  * touched keys (one [[KeyedStore.readPruned]] covers the touched version
   * lists; only those rows are pinned) — a fold costs O(batch + touched
   * versions), never O(history).
   *
@@ -32,34 +32,27 @@ import graft.ops.Stateful
   * order after its rows in every batch < N, and `ordCols` totally order
   * rows within a key; null key components are the caller's to route.
   * Replay safety is the counting-sketch stance: `batchId` must increase,
-  * a meta row records the high-water mark every fold, and a replayed fold
-  * returns the current history without touching the store. */
+  * the manifest note records the high-water mark every fold, and a
+  * replayed fold returns the current history without touching the store. */
 object IncrementalScd2 {
 
   /** Unit separator for the composite key (empty would collide "ab"+"c"
     * with "a"+"bc"). */
   private val Sep = "\u001f"
 
-  private def emptyHistory(spark: SparkSession, batch: DataFrame,
-      keys: Seq[String], attrNames: Seq[String]): DataFrame = {
-    val cols = (keys ++ attrNames).map(n =>
-      lit(null).cast(batch.schema(n).dataType).as(n)) ++ Seq(
-      lit(null).cast("long").as("effective_from"),
-      lit(null).cast("long").as("effective_to"),
-      lit(null).cast("boolean").as("is_current"),
-      lit(null).cast("long").as("ver"))
-    spark.range(1).select(cols: _*).limit(0)
-  }
+  /** The stored row schema (DDL): the batch's key and attribute columns,
+    * the version interval, and `extra`. */
+  private def historyDdl(batch: DataFrame, keys: Seq[String],
+      attrNames: Seq[String], extra: String = ""): String =
+    ((keys ++ attrNames).map(n => s"`$n` ${batch.schema(n).dataType.sql}") ++
+      Seq("effective_from BIGINT, effective_to BIGINT, is_current BOOLEAN, " +
+        "ver BIGINT" + extra)).mkString(", ")
 
   /** The stored history without folding (empty, schema-compatible frame if
     * never run). Feed directly to [[graft.ops.Stateful.scd2Lookup]]. */
   def readHistory(spark: SparkSession, storePath: String, batch: DataFrame,
       keys: Seq[String], attrNames: Seq[String]): DataFrame =
-    KeyedStore.read(spark, storePath)
-      .map(_.filter(col("kind") === "v")
-        .select((keys ++ attrNames).map(col) ++ Seq(col("effective_from"),
-          col("effective_to"), col("is_current"), col("ver")): _*))
-      .getOrElse(emptyHistory(spark, batch, keys, attrNames))
+    StoreFold.live(spark, storePath, historyDdl(batch, keys, attrNames))
 
   /** Fold one CDC micro-batch into the history at `storePath` (created on
     * first use) and return the FULL updated history (a lazy store read —
@@ -72,37 +65,25 @@ object IncrementalScd2 {
       ordCols: Seq[String], attrNames: Seq[String], batchId: Long,
       deleteType: String = "delete", numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
+    // replay HWM rides the manifest note (zero Spark jobs)
+    if (StoreFold.replayed(KeyedStore.readFoldNote(spark, storePath),
+        batchId, key = "bver"))
+      // replay: current state IS the post-batch state
+      return readHistory(spark, storePath, batch, keys, attrNames)
     val kExpr = concat_ws(Sep, keys.map(k => col(k).cast("string")): _*)
     val batchKeys = batch.select(kExpr.as("__k")).distinct()
       // LAZY pin: the pruned read's bucket-probe collect materializes it
       .localCheckpoint(false)
     // ONE bucket-pruned read covers everything the fold needs from the
-    // store: the TOUCHED keys' version rows (the probe still carries the
-    // meta rows' __k = "", which no reader needs since the HWM rides the
-    // note). The former full-store eager
-    // checkpoint materialized the whole history every fold — O(history),
-    // exactly the cost the seam argument exists to avoid; this is
-    // O(batch-touched buckets) file reads + O(touched versions) pinned.
-    val probe = batchKeys.unionByName(
-      spark.range(1).select(lit("").as("__k")))
-    val pruned = KeyedStore.readPruned(spark, storePath, probe)
-      .map(_.filter(col("op_type") =!= "delete"))
-    // replay HWM rides the manifest note (zero Spark jobs)
-    val hwm = KeyedStore.readFoldNote(spark, storePath).map(_("bver").toLong)
-    if (hwm.exists(batchId <= _)) {
-      // replay: current state IS the post-batch state
-      val out = readHistory(spark, storePath, batch, keys, attrNames)
-      graft.util.Blocks.freeCheckpoint(batchKeys)
-      return out
-    }
-    // the touched keys' full version lists, pinned ONCE (seeds and the
-    // version offsets both fold over it)
-    val live = pruned.map(_.filter(col("kind") === "v")
+    // store: the TOUCHED keys' full version lists, pinned ONCE (seeds and
+    // the version offsets both fold over it) — O(batch-touched buckets)
+    // file reads + O(touched versions) pinned, never O(history).
+    val storedV = StoreFold.livePruned(spark, storePath, batchKeys,
+        historyDdl(batch, keys, attrNames, extra = ", __k STRING"))
       .join(batchKeys, Seq("__k"), "left_semi")
       // LAZY pin: one materialization inside the merge's stage write,
       // still before the merge GCs the read generation
-      .localCheckpoint(false))
-    val storedV = live
+      .localCheckpoint(false)
     // working-frame columns keep their batch names (ordCols may overlap
     // keys/attrs/ts/typ); "ts"/"typ" are reserved by the contract
     val payload = (keys ++ attrNames ++ ordCols).distinct
@@ -111,15 +92,15 @@ object IncrementalScd2 {
       .select(Seq(col("__k"), lit(1).as("__seed"), col("typ"),
         col("ts").cast("long").as("ts")) ++ payload.map(col): _*)
     // seeds: each TOUCHED key's open version, ordered before the batch
-    // (live is already pruned to batch-touched keys)
-    val seeds = storedV.map(_
+    // (storedV is already pruned to batch-touched keys)
+    val seeds = storedV
       .filter(col("is_current"))
       .select(Seq(col("__k"), lit(0).as("__seed"), lit("__seed").as("typ"),
         col("effective_from").as("ts")) ++
         payload.map(n =>
           if (keys.contains(n) || attrNames.contains(n)) col(n)
-          else lit(null).cast(batch.schema(n).dataType).as(n)): _*))
-    val all = seeds.map(_.unionByName(batchProj)).getOrElse(batchProj)
+          else lit(null).cast(batch.schema(n).dataType).as(n)): _*)
+    val all = seeds.unionByName(batchProj)
     val local = Stateful.scd2History(all, Seq(col("__k")),
       col("__seed") +: ordCols.map(col), col("ts"),
       (keys ++ attrNames).map(col), keys ++ attrNames,
@@ -127,16 +108,12 @@ object IncrementalScd2 {
     // per-key version offset: the seed keeps its stored number (it IS the
     // key's max — later versions would have closed it), fresh keys and
     // post-delete keys continue from their stored max
-    val offsets = storedV.map(_
+    val offsets = storedV
       .groupBy("__k").agg(max(col("ver")).as("__maxv"),
-        max(when(col("is_current"), lit(1)).otherwise(lit(0))).as("__has_open")))
-    val shifted = offsets match {
-      case Some(o) => local.join(o, Seq("__k"), "left_outer")
-        .withColumn("__off", coalesce(col("__maxv"), lit(0L)) -
-          coalesce(col("__has_open"), lit(0)).cast("long"))
-      case None => local.withColumn("__off", lit(0L))
-        .withColumn("__has_open", lit(0))
-    }
+        max(when(col("is_current"), lit(1)).otherwise(lit(0))).as("__has_open"))
+    val shifted = local.join(offsets, Seq("__k"), "left_outer")
+      .withColumn("__off", coalesce(col("__maxv"), lit(0L)) -
+        coalesce(col("__has_open"), lit(0)).cast("long"))
     val changed = shifted
       // an untouched-open seed (still current at local ver 1) is already
       // in the store verbatim — everything else is closed-seed or new.
@@ -151,21 +128,11 @@ object IncrementalScd2 {
         lit(batchId).as("bver"), lit("put").as("op_type")): _*)
       // LAZY pin: the merge's own stage write is the one materialization
       .localCheckpoint(false)
-    val metaRow = spark.range(1).select(Seq(lit("m").as("kind"),
-      lit("").as("__k")) ++
-      (keys ++ attrNames).map(n =>
-        lit(null).cast(batch.schema(n).dataType).as(n)) ++ Seq(
-      lit(null).cast("long").as("effective_from"),
-      lit(null).cast("long").as("effective_to"),
-      lit(null).cast("boolean").as("is_current"),
-      lit(-1L).as("ver"), lit(batchId).as("bver"),
-      lit("put").as("op_type")): _*)
-    KeyedStore.merge(changed.unionByName(metaRow), storePath,
-      keys = Seq("kind", "__k", "ver"), seqCols = Seq("bver"),
-      numBuckets = numBuckets, bucketCols = Seq("__k"),
-      note = Some(KeyedStore.Note.encode("bver" -> batchId.toString)))
+    StoreFold.commit(changed, storePath, keys = Seq("kind", "__k", "ver"),
+      numBuckets = numBuckets, note = Seq("bver" -> batchId),
+      seqCols = Seq("bver"), bucketCols = Seq("__k"))
     graft.util.Blocks.freeCheckpoint(changed)
-    live.foreach(graft.util.Blocks.freeCheckpoint)
+    graft.util.Blocks.freeCheckpoint(storedV)
     graft.util.Blocks.freeCheckpoint(batchKeys)
     readHistory(spark, storePath, batch, keys, attrNames)
   }

@@ -62,17 +62,17 @@ object IncrementalSimhash {
     // (1) cross-batch screen — pruned read: only store buckets the
     // batch's (band, bval) probes hash into are opened; rows from an
     // interrupted attempt of THIS batch are excluded (replay safety)
-    val crossDups = KeyedStore.readPruned(spark, storePath, buckets) match {
-      case Some(stored) =>
+    val crossDups = KeyedStore.readPruned(spark, storePath, buckets).map {
+      stored =>
         buckets.join(
             stored.filter(col("batch_id") < batchId)
               .select(col("band"), col("bval"), col("fp").as("__sfp")),
             Seq("band", "bval"))
           .filter(expr(s"bit_count(fp ^ __sfp) <= $maxHam"))
           .select(col("doc_id")).distinct()
-      case None => docs.select(col("doc_id")).limit(0)
     }
-    val survivors = docs.join(crossDups, Seq("doc_id"), "left_anti")
+    val survivors =
+      crossDups.fold(docs)(docs.join(_, Seq("doc_id"), "left_anti"))
 
     // (2) within-batch: banded pairs + components, cluster minimum wins
     val fpS = fps.join(survivors.select(col("doc_id")), Seq("doc_id"),

@@ -57,30 +57,19 @@ object IncrementalTopK {
       k: Int, batchId: Long, numBuckets: Int = 4): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = batch.sparkSession
-    // Rows carry a `kind` key component: "c" = counter, "m" = the per-fold
-    // META row ((n_total, ver) history). The meta row is written on EVERY
-    // fold, even one that evicts all counters or folds an empty batch —
-    // without it, an all-evicted state would silently reset n_total to 0
-    // AND lose the replay high-water mark (a replayed batch would re-fold
-    // and resurrect evicted counts, breaking the exactly-once contract).
-    val live = KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("item"), col("ct"), col("n_total"), col("ver")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, String, Long, Long, Long)]
-          .toDF("kind", "item", "ct", "n_total", "ver")
-      // LAZY pin: the first action over it is the one materialization
-      }.localCheckpoint(false)
-    val cur = live.filter(col("kind") === "c")
-    // (HWM, n_total) ride the manifest note — zero Spark jobs
-    val scalars = KeyedStore.readFoldNote(spark, storePath)
-      .map(d => (d("ver").toLong, d("n").toLong))
-    if (scalars.exists(batchId <= _._1))
-      // replay: current state IS the post-batch state; `live` backs the
+    // Counter rows carry kind "c". The running n_total and the replay
+    // high-water mark ride the manifest note, which every fold commits —
+    // even one that evicts all counters or folds an empty batch — so an
+    // all-evicted state keeps both (a replayed batch cannot re-fold and
+    // resurrect evicted counts, the exactly-once contract).
+    // LAZY pin: the first action over it is the one materialization
+    val cur = counters(spark, storePath).localCheckpoint(false)
+    val note = KeyedStore.readFoldNote(spark, storePath)
+    if (StoreFold.replayed(note, batchId))
+      // replay: current state IS the post-batch state; `cur` backs the
       // returned frame, so its checkpoint must stay pinned on this path
       return summaryOf(cur, k)
-    val nPrev = scalars.map(_._2).getOrElse(0L)
+    val nPrev = note.map(_("n").toLong).getOrElse(0L)
     val bc = batch.select(itemCol.cast("string").as("item"))
       .filter(col("item").isNotNull)
       .groupBy("item").agg(count(lit(1)).as("bct"))
@@ -105,37 +94,27 @@ object IncrementalTopK {
       .select(lit("c").as("kind"), col("item"), lit(0L).as("ct"),
         lit(nTotal).as("n_total"), lit(batchId).as("ver"),
         lit("delete").as("op_type"))
-    val meta = spark.range(1).select(lit("m").as("kind"), lit("").as("item"),
-      lit(0L).as("ct"), lit(nTotal).as("n_total"), lit(batchId).as("ver"),
-      lit("put").as("op_type"))
-    val writes = next.unionByName(dropped).unionByName(meta).localCheckpoint(true)
-    KeyedStore.merge(writes, storePath,
-      keys = Seq("kind", "item"), seqCols = Seq("ver"), numBuckets = numBuckets,
-      note = Some(KeyedStore.Note.encode(
-        "ver" -> batchId.toString, "n" -> nTotal.toString)))
+    val writes = next.unionByName(dropped).localCheckpoint(true)
+    StoreFold.commit(writes, storePath, keys = Seq("kind", "item"),
+      numBuckets = numBuckets, note = Seq("ver" -> batchId, "n" -> nTotal))
     // the returned summary derives from the checkpointed `writes` alone —
     // the working frames are dead here and must not pin blocks for the
     // session/stream lifetime (Dataset.unpersist no-ops on checkpoints)
-    graft.util.Blocks.freeCheckpoint(live)
+    graft.util.Blocks.freeCheckpoint(cur)
     graft.util.Blocks.freeCheckpoint(bc)
     graft.util.Blocks.freeCheckpoint(merged)
-    summaryOf(writes.filter(col("op_type") =!= "delete"), k)
+    summaryOf(KeyedStore.active(writes), k)
   }
 
   /** The current summary at `storePath` without folding anything. */
-  def readSummary(spark: SparkSession, storePath: String, k: Int): DataFrame = {
-    val cur = KeyedStore.read(spark, storePath)
-      .map(_.filter(col("op_type") =!= "delete"))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, String, Long, Long, Long)]
-          .toDF("kind", "item", "ct", "n_total", "ver")
-      }
-    summaryOf(cur.filter(col("kind") === "c"), k)
-  }
+  def readSummary(spark: SparkSession, storePath: String, k: Int): DataFrame =
+    summaryOf(counters(spark, storePath), k)
+
+  private def counters(spark: SparkSession, storePath: String): DataFrame =
+    StoreFold.live(spark, storePath, "item STRING, ct BIGINT, n_total BIGINT",
+      kind = Some("c"))
 
   private def summaryOf(rows: DataFrame, k: Int): DataFrame =
-    rows.filter(col("kind") === "c")
-      .select(col("item"), col("ct"), col("n_total"),
-        expr(s"n_total div ${k + 1}").as("thresh"))
+    rows.select(col("item"), col("ct"), col("n_total"),
+      expr(s"n_total div ${k + 1}").as("thresh"))
 }

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * the wedge legs out of each batch edge's endpoints, and the
   * already-present check on the canonical row — both live in the batch
   * endpoints' buckets. The count store is bucketed by node and read
-  * pruned to the credited nodes + the meta row; the updated full count
+  * pruned to the credited nodes; the updated full count
   * table is returned as a LAZY store read. A fold therefore costs
   * O(batch-endpoint buckets) file reads at ANY graph size, where the
   * previous layout re-scanned the whole edge table per fold.
@@ -35,9 +35,9 @@ import org.apache.spark.sql.functions._
   * Per-fold join cost: the batch joins the pruned adjacency twice (wedge
   * build + closure legs) — O(Σ_e deg(u) + deg(v)) over batch edges,
   * never a recount of the whole graph; the count upsert touches only
-  * credited nodes. Replay safety is the counting contract: a meta row on
-  * the count store records the high-water mark; a replayed fold returns
-  * current counts untouched.
+  * credited nodes. Replay safety is the counting contract: the count
+  * store's manifest note records the high-water mark; a replayed fold
+  * returns current counts untouched.
   *
   * State: the adjacency (2 rows per live edge — the graph itself,
   * irreducible for exact maintenance) + O(nodes) counts. */
@@ -45,24 +45,18 @@ object IncrementalTriangles {
 
   private def edgePath(root: String) = s"$root/edges"
   private def countPath(root: String) = s"$root/counts"
-  /** Meta sentinel node in the count store (kind disambiguates). */
-  private val MetaNode = -1L
-
-  /** Count-store rows pruned to `nodes`' buckets + the meta bucket;
-    * tombstones (zero-count nodes) dropped. */
+  /** Live counts of `nodes` (node, tri_ct — tombstoned zero-count nodes
+    * hidden), read pruned to their buckets. */
   private def prunedCounts(spark: SparkSession, root: String,
-      nodes: DataFrame): Option[DataFrame] = {
-    val probe = nodes.select(col("node"))
-      .unionByName(spark.range(1).select(lit(MetaNode).as("node")))
-    KeyedStore.readPruned(spark, countPath(root), probe)
-      .map(_.filter(col("op_type") =!= "delete")
-        .select(col("kind"), col("node"), col("tri_ct"), col("ver")))
-  }
+      nodes: DataFrame): DataFrame =
+    StoreFold.livePruned(spark, countPath(root), nodes.select(col("node")),
+      "node BIGINT, tri_ct BIGINT")
+      .join(nodes, Seq("node"), "left_semi")
 
-  /** The count store's high-water mark: the manifest note (ZERO Spark
-    * jobs). */
-  private def hwm(spark: SparkSession, root: String): Option[Long] =
-    KeyedStore.readFoldNote(spark, countPath(root)).map(_("ver").toLong)
+  /** True when the count store's high-water mark (the manifest note, ZERO
+    * Spark jobs) already covers `batchId`. */
+  private def replayed(spark: SparkSession, root: String, batchId: Long) =
+    StoreFold.replayed(KeyedStore.readFoldNote(spark, countPath(root)), batchId)
 
   private def canonical(batch: DataFrame): DataFrame = batch.select(
       least(col("a").cast("long"), col("b").cast("long")).as("u"),
@@ -73,19 +67,15 @@ object IncrementalTriangles {
     df.select(col("u"), col("v"))
       .unionByName(df.select(col("v").as("u"), col("u").as("v")))
 
-  /** Upsert the credit/debit rows + meta, then return the LAZY full
-    * count table (the [[IncrementalCc]] idiom — callers that outlive the
-    * store checkpoint at the call site). `changed` rows carry
+  /** Upsert the credit/debit rows, then return the LAZY full count table
+    * (the [[IncrementalCc]] idiom — callers that outlive the store
+    * checkpoint at the call site). `changed` rows carry
     * (kind, node, tri_ct, ver, op_type). */
   private def commitCounts(spark: SparkSession, root: String,
       changed: DataFrame, batchId: Long, numBuckets: Int): DataFrame = {
-    val metaRow = spark.range(1).select(lit("m").as("kind"),
-      lit(MetaNode).as("node"), lit(0L).as("tri_ct"), lit(batchId).as("ver"),
-      lit("put").as("op_type"))
-    KeyedStore.merge(changed.unionByName(metaRow), countPath(root),
-      keys = Seq("kind", "node"), seqCols = Seq("ver"),
-      numBuckets = numBuckets, bucketCols = Seq("node"),
-      note = Some(KeyedStore.Note.encode("ver" -> batchId.toString)))
+    StoreFold.commit(changed, countPath(root), keys = Seq("kind", "node"),
+      numBuckets = numBuckets, note = Seq("ver" -> batchId),
+      bucketCols = Seq("node"))
     readCounts(spark, root)
   }
 
@@ -95,7 +85,7 @@ object IncrementalTriangles {
   def mergeEdges(batch: DataFrame, storeRoot: String, batchId: Long,
       numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
-    if (hwm(spark, storeRoot).exists(batchId <= _))
+    if (replayed(spark, storeRoot, batchId))
       return readCounts(spark, storeRoot) // replay: counts are post-batch
     // LAZY pin: the edge store's bucket-probe collect materializes it
     val canon = canonical(batch).localCheckpoint(false)
@@ -113,7 +103,7 @@ object IncrementalTriangles {
     // the wedge adjacency out of u and v.
     val probe = bothDirs(canon).select(col("u")).distinct()
     val stored = KeyedStore.readPruned(spark, edgePath(storeRoot), probe)
-      .map(_.filter(col("ver") < batchId && col("op_type") =!= "delete")
+      .map(KeyedStore.active(_).filter(col("ver") < batchId)
         // LAZY pin: the credits checkpoint below materializes it, before
         // either store's merge GCs the read generation
         .select(col("u"), col("v")).localCheckpoint(false))
@@ -149,14 +139,9 @@ object IncrementalTriangles {
       .groupBy("node").agg(count(lit(1)).as("credit"))
       .localCheckpoint(true)
     // current counts of ONLY the credited nodes (pruned read)
-    val cur = prunedCounts(spark, storeRoot, credits)
-      .map(_.filter(col("kind") === "v")
-        .join(credits, Seq("node"), "left_semi")
-        .select(col("node"), col("tri_ct")))
-    val changed = (cur match {
-      case Some(c) => credits.join(c, Seq("node"), "left_outer")
-      case None => credits.withColumn("tri_ct", lit(null).cast("long"))
-    }).select(lit("v").as("kind"), col("node"),
+    val changed = credits
+      .join(prunedCounts(spark, storeRoot, credits), Seq("node"), "left_outer")
+      .select(lit("v").as("kind"), col("node"),
         (coalesce(col("tri_ct"), lit(0L)) + col("credit")).as("tri_ct"),
         lit(batchId).as("ver"), lit("put").as("op_type"))
       // LAZY pin over pinned inputs (credits eager, cur's buckets still
@@ -202,14 +187,14 @@ object IncrementalTriangles {
   def deleteEdges(batch: DataFrame, storeRoot: String, batchId: Long,
       numBuckets: Int = 4): DataFrame = {
     val spark = batch.sparkSession
-    if (hwm(spark, storeRoot).exists(batchId <= _))
+    if (replayed(spark, storeRoot, batchId))
       return readCounts(spark, storeRoot)
     // LAZY pin: the edge store's bucket-probe collect materializes it
     val canon = canonical(batch).localCheckpoint(false)
     val probe = bothDirs(canon).select(col("u")).distinct()
     val pre = KeyedStore.readPruned(spark, edgePath(storeRoot), probe)
       .map(_.filter(
-          (col("ver") < batchId && col("op_type") =!= "delete") ||
+          (col("ver") < batchId && KeyedStore.isLive(col("op_type"))) ||
           (col("ver") === batchId && col("op_type") === "delete"))
         // LAZY pin: materialized with `debits`
         .select(col("u"), col("v")).localCheckpoint(false))
@@ -244,14 +229,9 @@ object IncrementalTriangles {
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("debit"))
       .localCheckpoint(true)
-    val cur = prunedCounts(spark, storeRoot, debits)
-      .map(_.filter(col("kind") === "v")
-        .join(debits, Seq("node"), "left_semi")
-        .select(col("node"), col("tri_ct")))
-    val changed = (cur match {
-      case Some(c) => debits.join(c, Seq("node"), "left_outer")
-      case None => debits.withColumn("tri_ct", lit(null).cast("long"))
-    }).select(lit("v").as("kind"), col("node"),
+    val changed = debits
+      .join(prunedCounts(spark, storeRoot, debits), Seq("node"), "left_outer")
+      .select(lit("v").as("kind"), col("node"),
         (coalesce(col("tri_ct"), lit(0L)) - col("debit")).as("tri_ct"),
         lit(batchId).as("ver"),
         when(coalesce(col("tri_ct"), lit(0L)) - col("debit") <= 0,
@@ -276,11 +256,5 @@ object IncrementalTriangles {
     * triangle; zero-count nodes are tombstoned, never listed) — a lazy
     * store read. */
   def readCounts(spark: SparkSession, storeRoot: String): DataFrame =
-    KeyedStore.read(spark, countPath(storeRoot))
-      .map(_.filter(col("kind") === "v" && col("op_type") =!= "delete")
-        .select(col("node"), col("tri_ct")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("node", "tri_ct")
-      }
+    StoreFold.live(spark, countPath(storeRoot), "node BIGINT, tri_ct BIGINT")
 }

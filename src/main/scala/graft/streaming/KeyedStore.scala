@@ -129,8 +129,9 @@ object KeyedStore {
   /** THE definition of a live row: anything but a delete tombstone. A
     * NULL op (a caller that never set it on a put) is live. Every reader
     * and maintenance pass that separates live rows from tombstones —
-    * [[liveView]], [[readActive]], [[compact]]'s tombstone drop,
-    * [[maintain]]'s tombstone count — routes through this one predicate,
+    * [[active]] (behind [[liveView]], [[readActive]], [[compact]]'s
+    * tombstone drop and the folds' [[StoreFold]] reads), [[maintain]]'s
+    * tombstone count — routes through this one predicate,
     * so no two of them can disagree about a row. */
   private[streaming] def isLive(op: Column, deleteOp: String = "delete"): Column =
     op.isNull || op =!= deleteOp
@@ -156,7 +157,7 @@ object KeyedStore {
       throw rebuildError(root, s"holds rows without an '$opCol' column — " +
         "it predates the erasure layout")
     }
-    df.filter(isLive(col(opCol)))
+    active(df, opCol)
   }
 
   /** Generation parsed from a commit file name, or None for non-commit
@@ -313,6 +314,15 @@ object KeyedStore {
       schemaDdl: Option[String]): org.apache.spark.sql.DataFrameReader =
     schemaDdl.fold(reader)(d =>
       reader.schema(org.apache.spark.sql.types.StructType.fromDDL(d)))
+
+  /** Open committed bucket directories `dirs` (names under `root`) with
+    * the store's persisted data schema — every committed-state scan
+    * ([[read]], [[readSnapshot]], [[compact]], [[maintain]]) goes through
+    * here, so none pays a parquet footer-inference job. */
+  private def openCommitted(spark: SparkSession, f: FileSystem, root: Path,
+      dirs: Iterable[String]): DataFrame =
+    withSchema(spark.read, readMeta(f, root).flatMap(_.schemaDdl))
+      .parquet(dirs.map(d => new Path(root, d).toString).toSeq: _*)
 
   /** Parquet reads surface everything nullable; the persisted schema must
     * match that exactly or plans would differ from the inferred-read ones. */
@@ -475,8 +485,8 @@ object KeyedStore {
         throw new IllegalStateException(s"$path: committed state but no bucket count"))
       val sel = probe.select(bucketOf(meta.cols, meta.n, meta.types).as("__b"))
       // DRIVER-LOCAL fast path (round 14): a probe built from driver
-      // rows (Seq.toDF — the collected-keeper and meta probes the
-      // store folds build) optimizes to a LocalRelation whose bucket
+      // rows (Seq.toDF — e.g. the collected-keeper probes the store
+      // folds build) optimizes to a LocalRelation whose bucket
       // hashes ConvertToLocalRelation has ALREADY evaluated — read
       // them directly for ZERO Spark jobs where the general path pays
       // a distinct shuffle. Batch-derived probes keep the cluster
@@ -565,15 +575,12 @@ object KeyedStore {
     readCommitFull(f, root).foreach { case (gen, Manifest(dirs, note)) =>
       if (dirs.nonEmpty) {
         val newGen = gen + 1
-        val df0 = withSchema(spark.read, readMeta(f, root).flatMap(_.schemaDdl))
-          .parquet(
-            dirs.toSeq.sortBy(_._1).map { case (_, d) => new Path(root, d).toString }: _*)
+        val df0 = openCommitted(spark, f, root, dirs.toSeq.sortBy(_._1).map(_._2))
           .withColumn("__b", regexp_extract(input_file_name(),
             """__b=(\d+)__g""", 1).cast("int"))
         // the one liveness predicate: a NULL-op row is live and survives
         // the rewrite (a bare =!= would evaluate NULL and drop it)
-        val df1 = if (dropTombstones && df0.columns.contains(opCol))
-          df0.filter(isLive(col(opCol), deleteOp)) else df0
+        val df1 = if (dropTombstones) active(df0, opCol, deleteOp) else df0
         val df = keepWhere.map(df1.filter).getOrElse(df1)
         val tmpRoot = new Path(path + "__ctmp")
         f.delete(tmpRoot, true) // a crashed previous compact
@@ -625,8 +632,8 @@ object KeyedStore {
     *
     * Post-compact fold wall: dropping tombstones rewrites every bucket at
     * one new generation; the next fold's pruned reads see the same live
-    * rows (winners already resolved, meta rows survive as puts), just
-    * fewer of them — measured in SCALING.md §keyed-store-maintenance. */
+    * rows (winners already resolved, the manifest note carried forward),
+    * just fewer of them — measured in SCALING.md §keyed-store-maintenance. */
   def maintain(spark: SparkSession, path: String,
       maxTombstoneFrac: Double = 0.5, checkEvery: Int = 16,
       opCol: String = "op_type", deleteOp: String = "delete",
@@ -640,8 +647,7 @@ object KeyedStore {
     readCommit(f, root).filter(_._2.nonEmpty).exists { case (gen, dirs) =>
       if (gen % checkEvery != 0) false
       else {
-        val df = spark.read.parquet(
-          dirs.values.map(d => new Path(root, d).toString).toSeq: _*)
+        val df = openCommitted(spark, f, root, dirs.values)
         val fire = df.columns.contains(opCol) && {
           val r = df.agg(count(lit(1)).as("n"),
             count(when(!isLive(col(opCol), deleteOp), 1)).as("d")).head()
@@ -665,17 +671,22 @@ object KeyedStore {
     // a store compacted down to nothing (every bucket tombstone-only,
     // dropTombstones) has a committed-but-empty manifest: no state to read
     readCommit(f, root).filter(_._2.nonEmpty).map { case (_, dirs) =>
-      // the persisted schema (when present) skips the per-read parquet
-      // footer-inference job
-      withSchema(spark.read, readMeta(f, root).flatMap(_.schemaDdl))
-        .parquet(dirs.values.map(d => new Path(root, d).toString).toSeq: _*)
+      openCommitted(spark, f, root, dirs.values)
     }
   }
 
   /** Live state: winning rows that are not tombstones ([[isLive]]). */
   def readActive(spark: SparkSession, path: String,
       opCol: String = "op_type", deleteOp: String = "delete"): Option[DataFrame] =
-    read(spark, path).map(_.filter(isLive(col(opCol), deleteOp)))
+    read(spark, path).map(active(_, opCol, deleteOp))
+
+  /** The live rows of a stored frame ([[isLive]]); a store whose rows
+    * carry no `opCol` column never wrote a tombstone, so all its rows are
+    * live. */
+  private[streaming] def active(df: DataFrame, opCol: String = "op_type",
+      deleteOp: String = "delete"): DataFrame =
+    if (df.columns.contains(opCol)) df.filter(isLive(col(opCol), deleteOp))
+    else df
 
   /** Committed generations still on disk, ascending. With
     * `merge(keepGenerations = k)` the last k stay readable — each retained
@@ -704,9 +715,7 @@ object KeyedStore {
     val root = new Path(path)
     layoutGuard(f, root)
     commitFiles(f, root).find(_._1 == generation).map { case (_, s) =>
-      val dirs = parseManifestCached(f, s).dirs
-      withSchema(spark.read, readMeta(f, root).flatMap(_.schemaDdl))
-        .parquet(dirs.values.map(d => new Path(root, d).toString).toSeq: _*)
+      openCommitted(spark, f, root, parseManifestCached(f, s).dirs.values)
     }
   }
 

@@ -59,6 +59,23 @@ class FoldJobsSpec extends SparkSpec {
     }
   }
 
+  test("maintain's cadence check opens the buckets with the persisted schema (no inference job)") {
+    val s = spark
+    import s.implicits._
+    val store = Files.createTempDirectory("mjobs").toString + "/st"
+    KeyedStore.merge(
+      Seq(("a", 1L, 1L, "put"), ("b", 2L, 1L, "put"), ("c", 3L, 1L, "delete"))
+        .toDF("k", "v", "ver", "op_type"),
+      store, keys = Seq("k"), seqCols = Seq("ver"), numBuckets = 4)
+    val sites = jobSitesDuring {
+      // 1 tombstone in 3 rows: below the 0.5 threshold, so no compaction
+      assert(!KeyedStore.maintain(s, store, checkEvery = 1))
+    }
+    info("job sites: " + sites.mkString(" | "))
+    assert(!sites.exists(_.contains("parquet at KeyedStore.scala")),
+      s"maintain paid a parquet footer-inference job: ${sites.mkString(" | ")}")
+  }
+
   test("first fold into a fresh root pays no HWM read job (IncrementalKmv)") {
     val s = spark
     import s.implicits._

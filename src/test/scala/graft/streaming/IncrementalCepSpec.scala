@@ -34,8 +34,8 @@ class IncrementalCepSpec extends SparkSpec {
     assert(m1.isEmpty)
     assert(m2 == Seq((1L, 10L, 30L)))
     assert(m3 == Seq((1L, 40L, 60L), (2L, 15L, 35L)))
-    // state table: one row per key + the meta row
-    assert(KeyedStore.read(spark, store).get.count() == 3)
+    // state table: one row per key (the HWM rides the manifest note)
+    assert(KeyedStore.read(spark, store).get.count() == 2)
   }
 
   test("foldBatchGroup: the unroll delegation spans folds and replays safely") {
@@ -176,13 +176,13 @@ class IncrementalCepSpec extends SparkSpec {
       (1, 30, 3, "purchase"), (2, 990, 4, "view"), (3, 50, 5, "view"))
     val m1 = got(IncrementalCep.foldBatch(b1, store, vcp, 100, batchId = bid1))
     assert(m1 == Seq((1L, 10L, 30L)))
-    assert(KeyedStore.read(spark, store).get.count() == 4) // 3 keys + meta
+    assert(KeyedStore.read(spark, store).get.count() == 3) // 3 keys
     // watermark 1000: k1 idle (dead), k3 timed out (1000-50 >= 100, dead),
     // k2 alive (1000-990 < 100, kept)
     assert(IncrementalCep.expire(spark, store, watermarkMs = 1000,
       withinMs = 100) == 2)
-    // dead rows are PHYSICALLY gone: meta + k2 only, no tombstones
-    assert(KeyedStore.read(spark, store).get.count() == 2)
+    // dead rows are PHYSICALLY gone: k2 only, no tombstones
+    assert(KeyedStore.read(spark, store).get.count() == 1)
     assert(KeyedStore.readActive(spark, store).get
       .filter(col("kind") === "v").count() == 1)
     // the next fold: k2 completes from its kept partial; k1/k3 re-open
@@ -672,8 +672,8 @@ class IncrementalCepSpec extends SparkSpec {
       expireWatermarkMs = Some(12L)).count()
     IncrementalCep.foldBatch(b2, store, vcp, 100, batchId = 2,
       expireWatermarkMs = Some(995L)).count()
-    // nothing expired yet (default cadence 16 generations) — 4 keys + meta
-    assert(KeyedStore.read(spark, store).get.count() == 5)
+    // nothing expired yet (default cadence 16 generations) — 4 keys
+    assert(KeyedStore.read(spark, store).get.count() == 4)
     // explicit maintain at cadence 1: idle rows 1..3 are 3/4 > 0.5 → fires
     assert(IncrementalCep.maintainExpire(spark, store, watermarkMs = 995L,
       withinMs = 100, checkEvery = 1))
